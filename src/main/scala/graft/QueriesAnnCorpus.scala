@@ -222,8 +222,8 @@ private[graft] trait QueriesAnnCorpus extends QueryHelpers { this: QueryBattery 
    */
   def hashedTfTopK(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    // the library operator owns the featurize-once barrier (local here; a
-    // real cluster passes checkpointDir) and the token-free-doc filter
+    // the library operator owns the featurize-once barrier (local here;
+    // reliable under spark.checkpoint.dir) and the token-free-doc filter
     Similarity.hashedTfTopK(t(dir, "documents"), "doc_id", "text",
       isQuery = col("doc_id") % 97 === 0 && col("doc_id") < 4900,
       dims = 64, k = 5)

@@ -10,6 +10,7 @@ import graft.etl.Stage
 import graft.io.{HdfsUrl, Warehouse, WarehouseTable}
 import graft.ops.{Bpe, Dedup, Joins, Multimodal, Similarity, TextAnalysis, Web}
 import graft.time.Day
+import graft.util.Barrier
 
 /**
  * Dedup + text-curation battery: exact/LSH/SimHash/span dedup,
@@ -1447,9 +1448,8 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
     // decontamination instead of re-deriving it per day (round 20;
     // guide §1.2 — the grams are a pure function of `bench`, so the
     // manifest is unchanged and the batch oracle still pins it)
-    val benchGrams = graft.ops.Decontaminate
-      .benchGramRows(bench, "bench_id", "text", n = 5)
-      .localCheckpoint(eager = true)
+    val benchGrams = Barrier.checkpoint(graft.ops.Decontaminate
+      .benchGramRows(bench, "bench_id", "text", n = 5))
     val (_, _, _, curatedParts, statsParts) =
       days.foldLeft(init) { case ((urls, fps, bands, cur, st), day) =>
         val dc = IncrementalRelease.curateDay(day, bench, urls, fps, bands,

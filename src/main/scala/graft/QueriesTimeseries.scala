@@ -10,6 +10,7 @@ import graft.etl.Stage
 import graft.io.{HdfsUrl, Warehouse, WarehouseTable}
 import graft.ops.{Bpe, Dedup, Joins, Multimodal, Similarity, TextAnalysis, Web}
 import graft.time.Day
+import graft.util.Barrier
 
 /**
  * Intervals, calendar series, layout, RFM/basket, attribution —
@@ -272,10 +273,9 @@ private[graft] trait QueriesTimeseries extends QueryHelpers { this: QueryBattery
    */
   def forecastBacktest(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val daily = events(dir).groupBy(col("event_type"),
+    val daily = Barrier.checkpoint(events(dir).groupBy(col("event_type"),
       expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day_idx"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("cnt")))
     // The cut date rides a broadcast 1-row frame instead of a driver
     // `.head()` scalar — no Action before the final collect, and the
     // whole backtest stays one lazily-planned DAG (VERDICT r15 item 5).
@@ -514,11 +514,10 @@ private[graft] trait QueriesTimeseries extends QueryHelpers { this: QueryBattery
     implicit val s: SparkSession = spark
     // densified frame feeds the mean agg AND the cusum branch: materialize
     // so the gapFill join/window chain runs once, not per consumer
-    val filled = graft.ops.Timeseries.gapFill(nationDaily(dir), Seq("n_name"),
-        "day_idx", Seq("rev_cents"))
-      .select(col("n_name"), col("day_idx"),
-        coalesce(col("rev_cents"), lit(0L)).as("rev"))
-      .localCheckpoint(true)
+    val filled = Barrier.checkpoint(
+      graft.ops.Timeseries.gapFill(nationDaily(dir), Seq("n_name"), "day_idx", Seq("rev_cents"))
+        .select(col("n_name"), col("day_idx"),
+          coalesce(col("rev_cents"), lit(0L)).as("rev")))
     val mean = filled.agg(
       expr("CAST(sum(rev) DIV count(*) AS BIGINT)").as("__mean"))
     graft.ops.Timeseries.cusum(filled.crossJoin(broadcast(mean)),
@@ -680,9 +679,8 @@ private[graft] trait QueriesTimeseries extends QueryHelpers { this: QueryBattery
       .where(col("host").isNotNull)
     // ONE scan: the (host, anchor) counts feed both totals and the argmax
     // (host/anchor-sized, checkpointed for its two consumers)
-    val counts = pairs.groupBy(col("host"), col("anchor"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val counts = Barrier.checkpoint(pairs.groupBy(col("host"), col("anchor"))
+      .agg(count(lit(1)).as("cnt")))
     val totals = counts.groupBy(col("host"))
       .agg(sum(col("cnt")).cast("long").as("n_links"))
     graft.ops.Stats.modeFromCounts(counts, Seq("host"), "anchor")
@@ -821,11 +819,10 @@ private[graft] trait QueriesTimeseries extends QueryHelpers { this: QueryBattery
     // §2.3 "aggregate before you shuffle"). Brands-per-order is bounded
     // (TPC-H ~7 lines/order), so the arrays are constant-sized at any
     // corpus scale. Materialized once for its three consumers.
-    val sets = t(dir, "lineitem")
+    val sets = Barrier.checkpoint(t(dir, "lineitem")
       .join(broadcast(t(dir, "part")), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("brand"))).as("bs"))
-      .localCheckpoint(true)
+      .groupBy(col("ok")).agg(sort_array(collect_set(col("brand"))).as("bs")))
     // pair expansion is now a per-row double explode over the sorted set
     // (codegen Generate nodes, no join): identical (ok, a < b) triples,
     // identical counts

@@ -92,8 +92,6 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
     val retryOptions = RetryOptions.fromConfig(config)
     metricRegistry.resetCounters() // fresh counts per run (reference semantics)
     val job = createJob(config)
-    val metrics = new RunnerMetrics
-    spark.sparkContext.addSparkListener(metrics.listener)
 
     val singleDate = sys.env.get("start").flatMap(Day.parse)
     val shouldRun: DateInterval => Boolean = singleDate match {
@@ -108,6 +106,8 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
       .reverse
 
     logger.info(s"[$jobName] scheduled dates: $dates")
+    val metrics = new RunnerMetrics
+    spark.sparkContext.addSparkListener(metrics.listener)
     try {
       dates.foreach { date =>
         val ctx = new RunnerContext(date, retryOptions, spark, messaging, metrics, spark)
@@ -119,7 +119,12 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
             throw failure
         }
       }
-    } finally messaging.stop()
+    } finally {
+      // one listener per run, removed with it: a long-lived session
+      // driving many runs must not accumulate them
+      spark.sparkContext.removeSparkListener(metrics.listener)
+      messaging.stop()
+    }
   }
 
   def createSession(config: GraftConfig): SparkSession = {

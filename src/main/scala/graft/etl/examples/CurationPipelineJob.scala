@@ -64,7 +64,8 @@ import graft.time.DateInterval
  *     [[TextAnalysis.scrubCardNumbers]] (parity spec) — since the
  *     generic phone pattern would otherwise consume card digits),
  *  6. remove near-duplicates (MinHash LSH -> Jaccard verify -> cluster
- *     representative; pass `checkpointDir` on real clusters),
+ *     representative; the label rounds are [[graft.util.Barrier]]s,
+ *     reliable once the session sets `spark.checkpoint.dir`),
  *  7. with a `benchmark` set supplied, drop documents contaminated
  *     against it ([[graft.ops.Decontaminate.removeContaminated]] — the
  *     pre-ship gate against eval leakage). The benchmark text passes
@@ -119,7 +120,6 @@ class CurationPipelineJob(
     threshold: Double = 0.8,
     idCol: String = "doc_id",
     textCol: String = "text",
-    checkpointDir: Option[String] = None,
     benchmark: Option[DataFrame] = None,
     benchIdCol: String = "bench_id",
     minContaminationHits: Int = 3,
@@ -211,7 +211,7 @@ class CurationPipelineJob(
     }
     deduped <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("near_dedup") { ctx =>
       Dedup.removeNearDuplicates(ctx.value.toDF(), idCol, textCol, threshold,
-        checkpointDir = checkpointDir, scriptAware = scriptAware)
+        scriptAware = scriptAware)
     }
     decontaminated <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("decontaminate") { ctx =>
       benchmark.fold(ctx.value.toDF()) { bench =>

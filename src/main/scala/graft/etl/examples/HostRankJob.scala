@@ -34,8 +34,8 @@ import graft.time.DateInterval
  * Scale: the full-data pass is the day's distinct + anti-join; the rank
  * iterations touch edge-store-sized frames (the deduplicated graph), and
  * the report is a join of two host-sized snapshots — rank history never
- * re-reads crawl data. Pass `checkpointDir` on a real cluster so the
- * rank rounds survive executor loss.
+ * re-reads crawl data. The rank rounds are [[graft.util.Barrier]]s: set
+ * `spark.checkpoint.dir` on a real cluster so they survive executor loss.
  */
 class HostRankJob(
     links: DateInterval => DataFrame,
@@ -47,8 +47,7 @@ class HostRankJob(
     iterations: Int = 5,
     dampingPct: Int = 85,
     k: Int = 20,
-    lookbackDays: Int = 30,
-    checkpointDir: Option[String] = None)
+    lookbackDays: Int = 30)
     extends SparkJob {
 
   override def shouldRunForDate(spark: SparkSession, date: DateInterval): Boolean =
@@ -92,8 +91,7 @@ class HostRankJob(
     _ <- "snapshot_ranks".sink[org.apache.spark.sql.Row] { ctx =>
       val all = edgeStore.loadBetween(ctx.spark,
         graft.time.Day(1970, 1, 1), ctx.date.next).select("src", "dst")
-      val ranked = Graphs.pageRank(all, iterations = iterations,
-        dampingPct = dampingPct, checkpointDir = checkpointDir)
+      val ranked = Graphs.pageRank(all, iterations = iterations, dampingPct = dampingPct)
       ranks.save(ranked, ctx.date, Warehouse.WriteTruncate)
     }
     _ <- "write_report".sink[org.apache.spark.sql.Row] { ctx =>

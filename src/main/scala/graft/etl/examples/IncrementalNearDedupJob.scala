@@ -22,10 +22,9 @@ import graft.time.DateInterval
  *
  * Scale: the store join is an equi-join on high-cardinality `(band, bh)` —
  * one shuffle, broadcast when the day is small; band rows are tiny compared
- * to text; writing the store date-partitioned keeps it append-only. On a
- * real cluster set `checkpointDir` (reliable-FS path) so the within-day
- * cluster iteration survives executor loss ([[Dedup.duplicateClusters]]'s
- * durability note); unset keeps the fast local-checkpoint default.
+ * to text; writing the store date-partitioned keeps it append-only. The
+ * within-day cluster iteration's durability follows the session's
+ * `spark.checkpoint.dir` ([[Dedup.duplicateClusters]]' durability note).
  */
 class IncrementalNearDedupJob(
     source: DateInterval => DataFrame,
@@ -36,7 +35,6 @@ class IncrementalNearDedupJob(
     threshold: Double = 0.8,
     textCol: String = "text",
     idCol: String = "doc_id",
-    checkpointDir: Option[String] = None,
     scriptAware: Boolean = false)
     extends SparkJob {
 
@@ -95,7 +93,7 @@ class IncrementalNearDedupJob(
         // shingle/minhash/verify pipeline — without it each sink recomputes
         persisted(Dedup.removeNearDuplicatesFromBands(kept,
           dayBands.join(hits, Seq(idCol), "left_anti"), idCol, textCol, threshold,
-          checkpointDir = checkpointDir, scriptAware = scriptAware))
+          scriptAware = scriptAware))
       }
       _ <- "append_bands".sink[org.apache.spark.sql.Row] { ctx =>
         val survivors = ctx.value.toDF().select(col(idCol))

@@ -9,6 +9,7 @@ import graft.etl.{SparkJob, Stage}
 import graft.io.{Warehouse, WarehouseTable}
 import graft.ops.{Decontaminate, Dedup, TextAnalysis, Web}
 import graft.time.DateInterval
+import graft.util.Barrier
 
 /**
  * The INCREMENTAL twin of the [[Release]] capstone: days arrive one at a
@@ -102,7 +103,10 @@ object IncrementalRelease {
    * via `seenUrls`/`seenFps`/`seenBands`, within-day via the same
    * keep-smallest-id laws as [[Release.build]]), then the quality gate and
    * decontamination. `docs` needs `doc_id, url, lang, source, text`;
-   * `bench` needs `bench_id, text`.
+   * `bench` needs `bench_id, text`. `benchGrams`, when given, replaces
+   * the bench shingling and must be `Decontaminate.benchGramRows(bench,
+   * "bench_id", "text", n = 5)`: its shape is checked, its gram order is
+   * not.
    *
    * Scale: the day's text is token-counted and shingled ONCE each; the
    * cross-day checks are equi-joins against key-sized stores (anti-join on
@@ -121,15 +125,17 @@ object IncrementalRelease {
       numHashes: Int = 12,
       rowsPerBand: Int = 3,
       minHits: Int = 3,
-      checkpointDir: Option[String] = None,
       verifyNear: Boolean = false,
       benchGrams: Option[DataFrame] = None): DayCuration = {
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-
-    val s0 = mat(docs.select(col("doc_id"), col("url"), col("lang"),
+    // a mis-shaped gram frame would not fail: a non-string `__gram` joins
+    // through an implicit cast and silently matches no document
+    benchGrams.foreach { g =>
+      require(g.columns.contains("bench_id") &&
+        g.schema.find(_.name == "__gram").exists(_.dataType == StringType),
+        "benchGrams must be a Decontaminate.benchGramRows frame " +
+          s"(bench_id, __gram STRING), got ${g.schema.simpleString}")
+    }
+    val s0 = Barrier.checkpoint(docs.select(col("doc_id"), col("url"), col("lang"),
       col("source"), col("text"),
       TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_tokens")))
     // tier-input keys append to the store BEFORE any within-day keep rule:
@@ -140,24 +146,26 @@ object IncrementalRelease {
     val fresh0 = s0.withColumn("__canon", Web.normalizeUrl(col("url")))
       .join(seenUrls.select(col("canon_url").as("__canon")), Seq("__canon"), "left_anti")
       .drop("__canon")
-    val s1 = mat(Web.dedupByUrl(fresh0, "url", "doc_id"))
+    val s1 = Barrier.checkpoint(Web.dedupByUrl(fresh0, "url", "doc_id"))
 
     val fps = s1.select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
     val fresh1 = s1.withColumn("__fp", TextAnalysis.fingerprint(col("text")))
       .join(seenFps.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
       .drop("__fp")
-    val s2 = mat(Dedup.exact(fresh1, "text", "doc_id"))
+    val s2 = Barrier.checkpoint(Dedup.exact(fresh1, "text", "doc_id"))
 
     // band rows of the near tier's INPUT — the day is shingled once; the
     // same frame feeds the cross-day semi-join and the store append
-    val dayBands = mat(Dedup.bandedIds(s2, "doc_id", "text", numHashes, rowsPerBand))
+    val dayBands =
+      Barrier.checkpoint(Dedup.bandedIds(s2, "doc_id", "text", numHashes, rowsPerBand))
     // verified mode: the day's shingles ride the band frame (computed once,
     // reused by the cross-day residual AND the store append), and a
     // cross-day collision drops the doc only when the exact Jaccard — the
     // batch verify's identical predicate — clears the threshold
     val daySh =
       if (!verifyNear) null
-      else mat(s2.select(col("doc_id"), Dedup.wordShingles(col("text")).as("__dsh")))
+      else Barrier.checkpoint(
+        s2.select(col("doc_id"), Dedup.wordShingles(col("text")).as("__dsh")))
     val nearSeen =
       if (!verifyNear)
         dayBands.join(seenBands, Seq("band", "bh"), "left_semi")
@@ -173,20 +181,20 @@ object IncrementalRelease {
     // cross-day survivors — bands are per-doc, so the restriction IS the
     // survivors' bandedIds frame): the day is shingled exactly once
     val freshBands = dayBands.join(nearSeen, Seq("doc_id"), "left_anti")
-    val s3 = mat(Dedup.removeNearDuplicatesFromBands(fresh2, freshBands,
-      "doc_id", "text", threshold, checkpointDir = checkpointDir))
+    val s3 = Barrier.checkpoint(Dedup.removeNearDuplicatesFromBands(fresh2, freshBands,
+      "doc_id", "text", threshold))
 
     val passes = TextAnalysis.qualityFlags(col("text"))
       .collectFirst { case ("passes", c) => c }.get
     // materialized (same reasoning as Release.build): decontaminate reads
     // s4 twice and the stats row a third time — re-running the per-row
     // regex gate 3× per DAY measured slower than the barrier
-    val s4 = mat(s3.filter(passes === 1L))
+    val s4 = Barrier.checkpoint(s3.filter(passes === 1L))
     // the benchmark gram set is day-INDEPENDENT: a caller curating many
     // days against one eval suite precomputes+materializes it once
     // (benchGrams) instead of re-scanning and re-shingling the benchmark
     // per day (round 20; guide §1.2)
-    val s5 = mat(Decontaminate.removeContaminatedOnGrams(
+    val s5 = Barrier.checkpoint(Decontaminate.removeContaminatedOnGrams(
       s4, "doc_id", "text",
       benchGrams.getOrElse(
         Decontaminate.benchGramRows(bench, "bench_id", "text", n = 5)),
@@ -207,7 +215,7 @@ object IncrementalRelease {
       if (!verifyNear) dayBands.select(col("band"), col("bh")).distinct()
       else dayBands.join(daySh, "doc_id")
         .select(col("band"), col("bh"), col("__dsh").as("sh")).distinct()
-    DayCuration(s5, mat(stats), urls, fps, bandRows)
+    DayCuration(s5, Barrier.checkpoint(stats), urls, fps, bandRows)
   }
 
   /**
@@ -221,17 +229,12 @@ object IncrementalRelease {
       stats: DataFrame,
       targetsPpm: Map[String, Int],
       contextLen: Int = 512,
-      shuffleSalt: String = "release",
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
-    checkpointDir.foreach(curated.sparkSession.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      shuffleSalt: String = "release"): (DataFrame, DataFrame) = {
     val base05 = stats.groupBy(col("ord"), col("stage"))
       .agg(sum(col("n")).cast("long").as("n"),
         sum(col("tokens")).cast("long").as("tokens"))
       .select(col("ord"), col("stage"), col("n"), col("tokens"))
-    Release.assemble(curated, base05, targetsPpm, contextLen, shuffleSalt, mat)
+    Release.assemble(curated, base05, targetsPpm, contextLen, shuffleSalt)
   }
 }
 
@@ -262,7 +265,6 @@ class IncrementalReleaseJob(
     numHashes: Int = 12,
     rowsPerBand: Int = 3,
     shuffleSalt: String = "release",
-    checkpointDir: Option[String] = None,
     verifyNear: Boolean = false)
     extends SparkJob {
 
@@ -289,7 +291,7 @@ class IncrementalReleaseJob(
         storedOrEmpty(ctx.spark, fpStore, ctx.date, FpStoreSchema),
         storedOrEmpty(ctx.spark, bandStore, ctx.date,
           if (verifyNear) VerifiedBandStoreSchema else BandStoreSchema),
-        threshold, numHashes, rowsPerBand, minHits, checkpointDir, verifyNear)
+        threshold, numHashes, rowsPerBand, minHits, verifyNear)
     }
     _ <- Stage[DayCuration, DayCuration]("append_stores") { ctx =>
       urlStore.save(ctx.value.urls, ctx.date, Warehouse.WriteTruncate)
@@ -309,7 +311,7 @@ class IncrementalReleaseJob(
         ctx.value.curated.schema).unionByName(ctx.value.curated)
       val allStats = storedOrEmpty(ctx.spark, statsTable, ctx.date,
         ctx.value.stats.schema).unionByName(ctx.value.stats)
-      cut(allCurated, allStats, targetsPpm, contextLen, shuffleSalt, checkpointDir)
+      cut(allCurated, allStats, targetsPpm, contextLen, shuffleSalt)
     }
     _ <- Stage[(DataFrame, DataFrame), (DataFrame, DataFrame)]("write_release") { ctx =>
       release.save(ctx.value._1, ctx.date, Warehouse.WriteTruncate); ctx.value

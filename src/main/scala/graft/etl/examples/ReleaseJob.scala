@@ -9,6 +9,7 @@ import graft.etl.{SparkJob, Stage}
 import graft.io.{Warehouse, WarehouseTable}
 import graft.ops.{Decontaminate, Dedup, TextAnalysis, Web}
 import graft.time.DateInterval
+import graft.util.Barrier
 
 /**
  * The CAPSTONE training-data release: the full corpus-to-export chain a
@@ -50,11 +51,11 @@ import graft.time.DateInterval
  * Scale: every stage is one of the library's pinned plans (keep-first
  * min_by aggs, the bucketed LSH pipeline, per-row gates, the broadcast
  * gram semi-join, one pack window per source). Each stage frame
- * materializes ONCE (localCheckpoint, or reliable checkpoint under
- * `checkpointDir`) because two consumers read it — the next stage and its
- * manifest aggregate; the manifest itself is stage-count-sized rows built
- * from 1-row aggregates and a 7-row lag window (bounded by the stage
- * count, never by data).
+ * materializes ONCE (a [[graft.util.Barrier]]: local, or reliable under
+ * `spark.checkpoint.dir`) because two consumers read it — the next stage
+ * and its manifest aggregate; the manifest itself is stage-count-sized
+ * rows built from 1-row aggregates and a 7-row lag window (bounded by
+ * the stage count, never by data).
  */
 object Release {
   /** One fixed reject reason per chain stage — the manifest's audit
@@ -78,20 +79,13 @@ object Release {
       contextLen: Int = 512,
       threshold: Double = 0.8,
       minHits: Int = 3,
-      shuffleSalt: String = "release",
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-
-    val s0 = mat(docs.select(col("doc_id"), col("url"), col("lang"),
+      shuffleSalt: String = "release"): (DataFrame, DataFrame) = {
+    val s0 = Barrier.checkpoint(docs.select(col("doc_id"), col("url"), col("lang"),
       col("source"), col("text"),
       TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_tokens")))
-    val s1 = mat(Web.dedupByUrl(s0, "url", "doc_id"))
-    val s2 = mat(Dedup.exact(s1, "text", "doc_id"))
-    val s3 = mat(Dedup.removeNearDuplicates(s2, "doc_id", "text", threshold,
-      checkpointDir = checkpointDir))
+    val s1 = Barrier.checkpoint(Web.dedupByUrl(s0, "url", "doc_id"))
+    val s2 = Barrier.checkpoint(Dedup.exact(s1, "text", "doc_id"))
+    val s3 = Barrier.checkpoint(Dedup.removeNearDuplicates(s2, "doc_id", "text", threshold))
     val passes = TextAnalysis.qualityFlags(col("text"))
       .collectFirst { case ("passes", c) => c }.get
     // materialized: the gate's regex battery is per-row expensive and s4
@@ -99,8 +93,8 @@ object Release {
     // and the anti-join back — plus the stage-4 stats row); round 19
     // measured the lazy form re-running the gate 3× per build and LOSING
     // 0.5-1 s despite the saved barrier
-    val s4 = mat(s3.filter(passes === 1L))
-    val s5 = mat(Decontaminate.removeContaminated(
+    val s4 = Barrier.checkpoint(s3.filter(passes === 1L))
+    val s5 = Barrier.checkpoint(Decontaminate.removeContaminated(
       s4, "doc_id", "text", bench, "bench_id", "text", n = 5, minHits = minHits))
     val base05 = Seq(
       (0L, "raw", s0), (1L, "url_dedup", s1), (2L, "exact_dedup", s2),
@@ -108,7 +102,7 @@ object Release {
       (5L, "decontaminate", s5))
       .map { case (ord, name, df) => stageStat(ord, name, df) }
       .reduce(_ unionByName _)
-    assemble(s5, base05, targetsPpm, contextLen, shuffleSalt, mat)
+    assemble(s5, base05, targetsPpm, contextLen, shuffleSalt)
   }
 
   /** One `(ord, stage, n, tokens)` stats row for a stage frame — the unit
@@ -134,18 +128,18 @@ object Release {
       base05: DataFrame,
       targetsPpm: Map[String, Int],
       contextLen: Int,
-      shuffleSalt: String,
-      mat: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val s6 = mat(TextAnalysis.targetMixSample(s5, "lang", "doc_id", targetsPpm))
+      shuffleSalt: String): (DataFrame, DataFrame) = {
+    val s6 = Barrier.checkpoint(
+      TextAnalysis.targetMixSample(s5, "lang", "doc_id", targetsPpm))
     val packed = TextAnalysis.packSequences(
       s6.select(col("doc_id"), col("source"), col("n_tokens")),
       "source", "doc_id", "n_tokens", contextLen)
-    val chunks = mat(packed.groupBy(col("source"), col("chunk_id"))
+    val chunks = Barrier.checkpoint(packed.groupBy(col("source"), col("chunk_id"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("n_tokens")).cast("long").as("n_tokens"))
       .withColumn("chunk_key",
         concat(col("source"), lit(":"), col("chunk_id"))))
-    val shuffled = mat(
+    val shuffled = Barrier.checkpoint(
       TextAnalysis.deterministicShuffle(chunks, "chunk_key", shuffleSalt))
 
     val noChk = lit(null).cast("long").as("checksum")
@@ -155,7 +149,7 @@ object Release {
     // AQE stage each; round 19 measured the lazy form costing +2 s on
     // the protocol bench despite the saved job — the barrier here buys
     // plan deduplication, not data reuse)
-    val base = mat(base05.unionByName(stageStat(6L, "target_mix", s6)))
+    val base = Barrier.checkpoint(base05.unionByName(stageStat(6L, "target_mix", s6)))
     val kept = base.select(col("ord"), col("stage"), lit("kept").as("detail"),
       col("n"), col("tokens"), noChk)
     // the lag window is global over the STAGE-COUNT-sized frame (7 rows by
@@ -216,8 +210,7 @@ class ReleaseJob(
     contextLen: Int = 512,
     threshold: Double = 0.8,
     minHits: Int = 3,
-    shuffleSalt: String = "release",
-    checkpointDir: Option[String] = None)
+    shuffleSalt: String = "release")
     extends SparkJob {
 
   override def shouldRunForDate(spark: SparkSession, date: DateInterval): Boolean =
@@ -231,7 +224,7 @@ class ReleaseJob(
     built <- Stage[org.apache.spark.sql.Dataset[Row], (DataFrame, DataFrame)](
       "release_chain") { ctx =>
       Release.build(ctx.value.toDF(), benchmark(ctx.spark), targetsPpm,
-        contextLen, threshold, minHits, shuffleSalt, checkpointDir)
+        contextLen, threshold, minHits, shuffleSalt)
     }
     withExport <- Stage[(DataFrame, DataFrame), (DataFrame, DataFrame)](
       "write_release") { ctx =>

@@ -4,7 +4,10 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import graft.util.Barrier
 
 /**
  * Byte-pair-encoding tokenizer TRAINING on the corpus — the step beyond
@@ -139,45 +142,41 @@ object Bpe {
    * that actually escapes merge-round serialization is [[learnCollected]].
    *
    * Checkpointing as in [[Dedup.duplicateClusters]]: each round's vocab is
-   * NOT recomputable from source once lineage is truncated, and with
-   * `checkpointDir` unset the checkpoints are LOCAL (executor block
-   * storage) — fastest, fine on `local[*]`, but on a large cluster losing
-   * one executor mid-training kills the job. Set `checkpointDir` to a
-   * reliable filesystem path for long merge runs on real clusters; rounds
-   * then pay one distributed write each (of the VOCABULARY, not the
-   * corpus) but survive executor loss. Each round checkpoints into a
-   * fresh subdirectory of `checkpointDir` and the previous round's is
-   * deleted as soon as the next materializes, so a run leaves nothing
-   * behind; the session's prior checkpoint location (if any) is restored
-   * on exit, so callers that checkpoint elsewhere (e.g.
-   * [[Dedup.duplicateClusters]] with its own dir) are not clobbered.
+   * NOT recomputable from source once lineage is truncated, so every
+   * round ends at a [[graft.util.Barrier]] — LOCAL by default (fastest,
+   * fine on `local[*]`, but losing one executor mid-training kills the
+   * job), RELIABLE when the session sets `spark.checkpoint.dir` (one
+   * distributed write per round, of the VOCABULARY, not the corpus, that
+   * survives executor loss). In reliable mode each round's checkpoint
+   * files are deleted as soon as the next round materializes, so a run
+   * leaves nothing behind under the checkpoint dir.
    */
   def learn(
       df: DataFrame,
       textCol: String,
       numMerges: Int,
       minCount: Long = 2L,
-      checkpointDir: Option[String] = None,
       maxPerRound: Int = 16): Seq[Merge] = {
     require(numMerges > 0, "numMerges must be positive")
     require(minCount >= 1, "minCount must be at least 1")
     require(maxPerRound >= 1, "maxPerRound must be at least 1")
     val sc = df.sparkSession.sparkContext
-    val priorCheckpointDir = sc.getCheckpointDir
     var roundCheckpoint = Option.empty[Path]
     def deleteRoundCheckpoint(): Unit = {
       roundCheckpoint.foreach(p => p.getFileSystem(sc.hadoopConfiguration).delete(p, true))
       roundCheckpoint = None
     }
-    def materialize(d: DataFrame): DataFrame = checkpointDir match {
-      case Some(base) =>
-        sc.setCheckpointDir(base) // fresh UUID subdirectory per round
-        val out = d.checkpoint(eager = true)
-        val justWritten = sc.getCheckpointDir.map(new Path(_))
-        deleteRoundCheckpoint() // previous round no longer reachable
-        roundCheckpoint = justWritten
-        out
-      case None => d.localCheckpoint(eager = true)
+    def materialize(d: DataFrame): DataFrame = {
+      val out = Barrier.checkpoint(d)
+      // a reliable checkpoint's files: the checkpointed RDD behind the
+      // returned frame's leaf (a local checkpoint has none)
+      val justWritten = out.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.getCheckpointFile.map(new Path(_))
+        case _             => None
+      }
+      deleteRoundCheckpoint() // previous round no longer reachable
+      roundCheckpoint = justWritten
+      out
     }
     try {
       var words = materialize(df
@@ -214,13 +213,7 @@ object Bpe {
         }
       }
       learned.result()
-    } finally {
-      deleteRoundCheckpoint()
-      // Best-effort restore: Spark only exposes setCheckpointDir (which
-      // nests a fresh UUID dir), so the restored location is a child of
-      // the caller's previous one — still inside their configured tree.
-      if (checkpointDir.isDefined) priorCheckpointDir.foreach(sc.setCheckpointDir)
-    }
+    } finally deleteRoundCheckpoint()
   }
 
   /**

@@ -429,21 +429,20 @@ object Dedup {
    * appearing in any pair; singletons are their own cluster by omission.
    *
    * Durability: each round truncates lineage with a checkpoint, so the
-   * iteration is NOT recomputable from source. With `checkpointDir` unset
-   * the checkpoints are LOCAL (executor block storage): fastest, fine on
-   * `local[*]` or short jobs, but on a large cluster losing ONE executor
-   * mid-iteration kills the job — there is no lineage left to recompute
-   * the lost blocks. Set `checkpointDir` to a reliable filesystem path
-   * (HDFS/object store) for long multi-round runs on real clusters; rounds
-   * then pay one distributed write each but survive executor loss.
+   * iteration is NOT recomputable from source. The rounds follow
+   * [[graft.util.Barrier]]: LOCAL (executor block storage) by default —
+   * fastest, fine on `local[*]` or short jobs, but on a large cluster
+   * losing ONE executor mid-iteration kills the job, with no lineage left
+   * to recompute the lost blocks. With `spark.checkpoint.dir` set to a
+   * reliable filesystem path (HDFS/object store) rounds pay one
+   * distributed write each but survive executor loss.
    */
   def duplicateClusters(
       pairs: DataFrame,
-      maxIterations: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame =
+      maxIterations: Int = 10): DataFrame =
     // the dedup-facing face of the shared fixpoint-components primitive
     // (min-label propagation + pointer jumping, Graphs.connectedComponents)
-    Graphs.connectedComponents(pairs, "id_a", "id_b", maxIterations, checkpointDir)
+    Graphs.connectedComponents(pairs, "id_a", "id_b", maxIterations)
       .select(col("id"), col("component").as("cluster_id"))
 
   /**
@@ -548,10 +547,8 @@ object Dedup {
    * Scale: the clustering is the LSH near-dup pipeline (bucketed
    * equi-joins, O(log d) label rounds); the split itself is per-row math
    * on the cluster label — one broadcast-or-shuffle equi-join over the
-   * (small) clustered subset beyond the pipeline's own cost. On a real
-   * cluster pass `checkpointDir` (reliable-FS path) so the label iteration
-   * survives executor loss — see [[duplicateClusters]]'s durability note;
-   * unset keeps the fast local-checkpoint default for short/local runs.
+   * (small) clustered subset beyond the pipeline's own cost. The label
+   * iteration's durability is [[duplicateClusters]]'.
    */
   def leakageSafeSplit(
       df: DataFrame,
@@ -561,11 +558,10 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 12,
       rowsPerBand: Int = 3,
-      checkpointDir: Option[String] = None,
       scriptAware: Boolean = false): DataFrame = {
     val pairs = nearDuplicatePairs(df, idCol, textCol, threshold, numHashes, rowsPerBand,
       scriptAware = scriptAware)
-    val clusters = duplicateClusters(pairs, checkpointDir = checkpointDir)
+    val clusters = duplicateClusters(pairs)
       .withColumnRenamed("id", idCol)
     df.join(clusters, Seq(idCol), "left")
       .withColumn("group_id", coalesce(col("cluster_id"), col(idCol)))
@@ -582,7 +578,7 @@ object Dedup {
    *
    * Scale: the LSH pipeline plus ONE per-cluster min_by agg over the
    * (small) clustered subset and one anti equi-join back — no window, no
-   * per-cluster sort. `checkpointDir` as in [[leakageSafeSplit]].
+   * per-cluster sort.
    */
   def removeNearDuplicatesKeepBest(
       df: DataFrame,
@@ -592,11 +588,10 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 12,
       rowsPerBand: Int = 3,
-      checkpointDir: Option[String] = None,
       scriptAware: Boolean = false): DataFrame = {
     val pairs = nearDuplicatePairs(df, idCol, textCol, threshold, numHashes, rowsPerBand,
       scriptAware = scriptAware)
-    val clusters = duplicateClusters(pairs, checkpointDir = checkpointDir)
+    val clusters = duplicateClusters(pairs)
     val scored = clusters.join(
       df.select(col(idCol).as("id"), col(scoreCol).as("__s")), Seq("id"))
     val keepers = scored.groupBy(col("cluster_id"))
@@ -612,8 +607,7 @@ object Dedup {
 
   /**
    * One-call near-dup removal: keep, per duplicate cluster, the smallest id.
-   * Returns the deduplicated DataFrame. `checkpointDir` as in
-   * [[leakageSafeSplit]]: set it to a reliable-FS path on real clusters.
+   * Returns the deduplicated DataFrame.
    */
   def removeNearDuplicates(
       df: DataFrame,
@@ -622,11 +616,10 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 12,
       rowsPerBand: Int = 3,
-      checkpointDir: Option[String] = None,
       scriptAware: Boolean = false): DataFrame = {
     val pairs = nearDuplicatePairs(df, idCol, textCol, threshold, numHashes, rowsPerBand,
       scriptAware = scriptAware)
-    val losers = duplicateClusters(pairs, checkpointDir = checkpointDir)
+    val losers = duplicateClusters(pairs)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
@@ -648,11 +641,10 @@ object Dedup {
       threshold: Double = 0.8,
       maxBucket: Int = 1000,
       saltHotBuckets: Boolean = false,
-      checkpointDir: Option[String] = None,
       scriptAware: Boolean = false): DataFrame = {
     val candidates = lshCandidatePairsFromBands(bands, idCol, maxBucket, saltHotBuckets)
     val pairs = verifyCandidates(candidates, df, idCol, textCol, threshold, scriptAware)
-    val losers = duplicateClusters(pairs, checkpointDir = checkpointDir)
+    val losers = duplicateClusters(pairs)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Corpus and ingest drift monitoring — the health checks a continuously
  * refreshed training-data lake runs between snapshots: "did the token
@@ -204,9 +206,8 @@ object Drift {
     // materialized once: BOTH consumers (the MAD percentile pass and the
     // final profile aggregation) read it, and its lineage is the full
     // median computation joined back over the data
-    val dev = vals.join(med, groupCol)
-      .withColumn("__dev", abs(col(valueCol) - col("median")))
-      .localCheckpoint(true)
+    val dev = Barrier.checkpoint(vals.join(med, groupCol)
+      .withColumn("__dev", abs(col(valueCol) - col("median"))))
     val mad = Sketches.exactPercentiles(
       dev.select(col(groupCol), col("__dev")), groupCol, "__dev", Seq(50))
       .select(col(groupCol), col("__dev").as("mad"))

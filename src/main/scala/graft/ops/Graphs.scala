@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Link-graph operators for web-corpus curation. Crawl pipelines rank hosts
  * by link centrality (the Common-Crawl host-graph recipe) and use the rank
@@ -45,9 +47,10 @@ object Graphs {
    * extraction pipeline); each round is one `src` equi-join plus one
    * `dst` aggregation — two bounded shuffles over edge-sized data, with
    * rank/degree frames only node-sized (hosts, not pages). Each round's
-   * result is materialized (localCheckpoint, or reliable checkpoint under
-   * `checkpointDir`) so lineage stays flat and an executor loss on a real
-   * cluster never replays the whole iteration chain.
+   * result is materialized behind a [[graft.util.Barrier]] (reliable
+   * when the session sets `spark.checkpoint.dir`) so lineage stays flat
+   * and an executor loss on a real cluster never replays the whole
+   * iteration chain.
    *
    * Input: any DataFrame with `srcCol`/`dstCol` node columns (self-loops
    * and duplicate edges are dropped; null endpoints are dropped).
@@ -59,20 +62,14 @@ object Graphs {
       dstCol: String = "dst",
       iterations: Int = 5,
       dampingPct: Int = 85,
-      scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100, s"dampingPct must be in [0,100], got $dampingPct")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-
-    val e = materialize(
+    val e = Barrier.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .distinct())
-    val nodes = materialize(
+    val nodes = Barrier.checkpoint(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     // driver-side count of the node frame: one value off a host-sized table
     // (the same bounded-collect class as Bpe's vocab guard)
@@ -80,7 +77,7 @@ object Graphs {
     require(n > 0, "pageRank needs at least one edge")
     val base = scale / n
     val teleport = (100L - dampingPct) * base / 100L
-    val outDeg = materialize(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
+    val outDeg = Barrier.checkpoint(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
 
     var ranks = nodes.withColumn("rank", lit(base))
     for (_ <- 1 to iterations) {
@@ -88,7 +85,7 @@ object Graphs {
         .select(col("id").as("src"), expr("rank DIV deg").as("share"))
       val contrib = e.join(shares, "src")
         .groupBy(col("dst").as("id")).agg(sum(col("share")).as("inbound"))
-      ranks = materialize(nodes.join(contrib, Seq("id"), "left").select(
+      ranks = Barrier.checkpoint(nodes.join(contrib, Seq("id"), "left").select(
         col("id"),
         (lit(teleport) + expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100")).as("rank")))
     }
@@ -126,19 +123,13 @@ object Graphs {
       srcCol: String = "src",
       dstCol: String = "dst",
       iterations: Int = 5,
-      scale: Long = 1000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-
-    val e = materialize(
+    val e = Barrier.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .distinct())
-    val nodes = materialize(
+    val nodes = Barrier.checkpoint(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
 
     // normalize a (id, v) frame so its max value is exactly `scale`.
@@ -160,7 +151,7 @@ object Graphs {
     // dead weight inside the iteration — they re-attach once at the end.
     // Scores start at `scale` for every edge source (the all-ones init
     // restricted to rows the first join would keep anyway).
-    var hubs = materialize(e.select(col("src").as("id")).distinct()
+    var hubs = Barrier.checkpoint(e.select(col("src").as("id")).distinct()
       .withColumn("v", lit(scale)))
     var auths: DataFrame = null
     // materialize the RAW sums (the join-bearing half) and leave the
@@ -169,11 +160,11 @@ object Graphs {
     // consumers (the next join, the final union) replay only the cheap
     // broadcast-rescale, never the edge join
     for (_ <- 1 to iterations) {
-      val authRaw = materialize(
+      val authRaw = Barrier.checkpoint(
         e.join(hubs.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(sum(col("v")).as("v")))
       auths = normalized(authRaw)
-      val hubRaw = materialize(
+      val hubRaw = Barrier.checkpoint(
         e.join(auths.withColumnRenamed("id", "dst"), "dst")
           .groupBy(col("src").as("id")).agg(sum(col("v")).as("v")))
       hubs = normalized(hubRaw)
@@ -206,30 +197,24 @@ object Graphs {
    * Scale: per round, one edge-sized equi-join (neighbour label lookup),
    * one map-side-combined (node, label) count, one node-keyed argmax via
    * `min(struct(-cnt, label))` — no windows, no all-pairs; per-round
-   * materialization keeps lineage flat (reliable `checkpointDir` on real
-   * clusters). Output: `(id, community)`.
+   * materialization keeps lineage flat (a [[graft.util.Barrier]],
+   * reliable on real clusters). Output: `(id, community)`.
    */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      iterations: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 4): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-
     val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val bidir = materialize(fwd.union(fwd.select(col("v"), col("u"))).distinct())
-    var labels = materialize(
+    val bidir = Barrier.checkpoint(fwd.union(fwd.select(col("v"), col("u"))).distinct())
+    var labels = Barrier.checkpoint(
       bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
     for (_ <- 1 to iterations) {
       val counts = bidir.join(labels.withColumnRenamed("id", "v"), "v")
         .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      labels = materialize(counts
+      labels = Barrier.checkpoint(counts
         .groupBy(col("u").as("id"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("__m"))
         .select(col("id"), col("__m.l").as("lbl")))
@@ -254,8 +239,8 @@ object Graphs {
    * label values are always node ids, monotonically non-increasing, so
    * the join is total). Compression makes convergence O(log diameter)
    * rounds, not O(diameter) — the difference between 6 rounds and 600 on
-   * a chain-shaped crawl frontier. Each round materializes
-   * (localCheckpoint, or reliable checkpoint under `checkpointDir`) and
+   * a chain-shaped crawl frontier. Each round materializes (a
+   * [[graft.util.Barrier]], reliable under `spark.checkpoint.dir`) and
    * a driver-side changed-count probe ends the loop at the true
    * fixpoint; `maxIterations` is a defensive bound only.
    *
@@ -269,18 +254,13 @@ object Graphs {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIterations: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIterations: Int = 50): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
 
     val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val bidir = materialize(fwd.union(fwd.select(col("v"), col("u"))).distinct())
-    var labels = materialize(
+    val bidir = Barrier.checkpoint(fwd.union(fwd.select(col("v"), col("u"))).distinct())
+    var labels = Barrier.checkpoint(
       bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
     var changed = 1L
     var it = 0
@@ -316,7 +296,7 @@ object Graphs {
       val jumped = stepped
         .join(stepped.select(col("id").as("lbl"), col("lbl").as("__ll")), Seq("lbl"), "left")
         .select(col("id"), coalesce(col("__ll"), col("lbl")).as("lbl"), col("__old"))
-      val next = materialize(jumped)
+      val next = Barrier.checkpoint(jumped)
       // limit(1): the probe needs existence, not the change count — and it
       // reads the JUST-materialized frame (lbl vs the carried __old), so
       // the whole round costs exactly one join-bearing job plus this
@@ -357,16 +337,11 @@ object Graphs {
   def triangleCounts(
       edges: DataFrame,
       srcCol: String = "src",
-      dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      dstCol: String = "dst"): DataFrame = {
     // undirected distinct edge set as canonical (lo, hi) pairs; materialized
     // because deg + orientation both read it (same once-built-edges rule as
     // pageRank/hits — without the barrier each consumer re-runs the dedup)
-    val und = materialize(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
       .distinct())
@@ -374,7 +349,7 @@ object Graphs {
       .groupBy("id").agg(count(lit(1)).as("degree"))
     // orient by (degree, id): out-degree bounded by O(sqrt(m)); materialized
     // because the wedge join reads it twice and the closing join a third time
-    val oriented = materialize(und
+    val oriented = Barrier.checkpoint(und
       .join(deg.select(col("id").as("lo"), col("degree").as("dlo")), Seq("lo"))
       .join(deg.select(col("id").as("hi"), col("degree").as("dhi")), Seq("hi"))
       .select(
@@ -430,27 +405,22 @@ object Graphs {
       k: Int,
       srcCol: String = "src",
       dstCol: String = "dst",
-      rounds: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    val und = materialize(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
       .distinct())
     def degrees(e: DataFrame): DataFrame =
       e.select(col("lo").as("id")).union(e.select(col("hi").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
-    var alive = materialize(degrees(und).where(col("degree") >= k).select("id"))
+    var alive = Barrier.checkpoint(degrees(und).where(col("degree") >= k).select("id"))
     for (_ <- 2 to rounds) {
       val sub = und
         .join(alive.withColumnRenamed("id", "lo"), Seq("lo"), "left_semi")
         .join(alive.withColumnRenamed("id", "hi"), Seq("hi"), "left_semi")
-      alive = materialize(degrees(sub).where(col("degree") >= k).select("id"))
+      alive = Barrier.checkpoint(degrees(sub).where(col("degree") >= k).select("id"))
     }
     val finalSub = und
       .join(alive.withColumnRenamed("id", "lo"), Seq("lo"), "left_semi")
@@ -481,24 +451,19 @@ object Graphs {
       sources: Seq[String],
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxDepth: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDepth: Int = 4): DataFrame = {
     require(sources.nonEmpty, "need at least one source node")
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Barrier.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .distinct())
-    var dist = materialize(sources.distinct.toDF("id").withColumn("dist", lit(0L)))
+    var dist = Barrier.checkpoint(sources.distinct.toDF("id").withColumn("dist", lit(0L)))
     for (_ <- 1 to maxDepth) {
       val step = e.join(dist.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-      dist = materialize(dist.union(step).groupBy("id").agg(min(col("dist")).as("dist")))
+      dist = Barrier.checkpoint(dist.union(step).groupBy("id").agg(min(col("dist")).as("dist")))
     }
     dist
   }
@@ -565,11 +530,10 @@ object Graphs {
       dstCol: String = "dst",
       maxCenterDegree: Int = 1000): DataFrame = {
     require(maxCenterDegree >= 2, s"maxCenterDegree must be >= 2, got $maxCenterDegree")
-    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct()
-      .localCheckpoint(eager = true)
+      .distinct())
     val adj = und.select(col("lo").as("ctr"), col("hi").as("nbr"))
       .union(und.select(col("hi").as("ctr"), col("lo").as("nbr")))
     val deg = adj.groupBy(col("ctr").as("id")).agg(count(lit(1)).as("degree"))

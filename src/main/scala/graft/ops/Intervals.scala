@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Interval / sweep-line analytics: "how many sessions were live at once",
  * "peak concurrent crawls", capacity planning over validity windows
@@ -22,9 +24,9 @@ object Intervals {
    * Exact global running total of `valueCol` in the total order given by
    * `order` (pass a unique tiebreaker): each row gets `totalCol` = sum of
    * `valueCol` over all rows at-or-before it. Range-repartition by the
-   * order, eagerly localCheckpoint (frozen partition boundaries for every
-   * derived branch), per-partition prefix sums, per-partition totals
-   * broadcast back as offsets.
+   * order, an eager [[graft.util.Barrier]] (frozen partition boundaries
+   * for every derived branch), per-partition prefix sums, per-partition
+   * totals broadcast back as offsets.
    */
   def withRunningTotal(
       df: DataFrame,
@@ -32,9 +34,8 @@ object Intervals {
       valueCol: String,
       order: Column*): DataFrame = {
     require(order.nonEmpty, "withRunningTotal needs at least one order column")
-    val ranged = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Barrier.checkpoint(df.repartitionByRange(order: _*)
+      .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy(col("__pid"))
       .agg(sum(col(valueCol)).as("__n"))
       .withColumn("__offset",
@@ -67,9 +68,8 @@ object Intervals {
       valueCol: String,
       order: Column*): DataFrame = {
     require(order.nonEmpty, "withRunningMaxBefore needs at least one order column")
-    val ranged = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Barrier.checkpoint(df.repartitionByRange(order: _*)
+      .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy(col("__pid"))
       .agg(max(col(valueCol)).as("__m"))
       .withColumn("__offset",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Similarity search over embedding columns (`array<float>`):
  *
@@ -144,11 +146,9 @@ object Similarity {
    * The featurized frame is materialized behind an explicit barrier —
    * without one, CollapseProject inlines the featurizer expression past
    * the non-equi join and the corpus re-featurizes once PER QUERY row
-   * (measured 52x at sf0.1). With `checkpointDir` unset the barrier is a
-   * LOCAL checkpoint (executor block manager): fine single-node, but on a
-   * real cluster an executor loss kills the lineage mid-query. Set
-   * `checkpointDir` to a reliable-FS path (HDFS/S3) for fault-tolerant
-   * runs — same knob and semantics as [[Dedup.duplicateClusters]].
+   * (measured 52x at sf0.1). The barrier is lazy and follows
+   * [[graft.util.Barrier]]: local by default, reliable when the session
+   * sets `spark.checkpoint.dir`.
    */
   def hashedTfTopK(
       corpus: DataFrame,
@@ -157,7 +157,6 @@ object Similarity {
       isQuery: Column,
       dims: Int = 64,
       k: Int = 10,
-      checkpointDir: Option[String] = None,
       scriptAware: Boolean = false): DataFrame = {
     val toks =
       if (scriptAware) TextAnalysis.scriptTokens(col(textCol))
@@ -166,12 +165,7 @@ object Similarity {
       .filter(size(toks) > 0)
       .select(col(idCol), isQuery.as("__is_query"),
         TextAnalysis.hashedTfVector(col(textCol), dims, scriptAware).as("__vec"))
-    val vectors = checkpointDir match {
-      case Some(dir) =>
-        featurized.sparkSession.sparkContext.setCheckpointDir(dir)
-        featurized.checkpoint(eager = false)
-      case None => featurized.localCheckpoint(eager = false)
-    }
+    val vectors = Barrier.checkpoint(featurized, eager = false)
     bruteForceTopK(
       vectors.filter(col("__is_query")).drop("__is_query"),
       vectors.drop("__is_query"), idCol, "__vec", k)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Mergeable distinct-count sketches (Apache DataSketches HLL, via Spark's
  * built-in `hll_sketch_agg` family): pre-aggregate each day/partition into a
@@ -490,8 +492,7 @@ object Sketches {
       groupCols: Seq[String],
       order: Seq[Column],
       cums: Seq[(String, String)],
-      totals: Seq[(String, String)] = Nil,
-      checkpointDir: Option[String] = None): DataFrame = {
+      totals: Seq[(String, String)] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
     import org.apache.spark.sql.{Encoders, Row}
@@ -510,14 +511,6 @@ object Sketches {
         "values, and array/map/binary/struct slots compare by reference")
     }
     val gCols = groupCols.map(col)
-    // reliable-checkpoint escape hatch (round 20, mirroring Graphs /
-    // ReleaseJob): localCheckpoint stores blocks on executors with no
-    // lineage fallback, so a 1000-executor run that must survive executor
-    // loss passes `checkpointDir` and pays the HDFS write instead
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
-    def mat(d: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) d.checkpoint(eager = true)
-      else d.localCheckpoint(eager = true)
     // materialize the input BEFORE the range exchange (round 19): the
     // RangePartitioner's bounds sampling executes the child plan once and
     // the exchange executes it AGAIN — for every caller here the child is
@@ -525,11 +518,11 @@ object Sketches {
     // the collapsed frame first makes the sample and the exchange two cheap
     // scans of stored blocks. Both frames stay pinned for the call's
     // lifetime (a doubled footprint of the collapsed rows — accepted and
-    // consistent with the repo's mat() pattern; Dataset.unpersist does not
-    // reach checkpoint blocks, and the input copy is what a recompute-free
-    // bounds sample reads).
-    val input = mat(df)
-    val ranged = mat(input.repartitionByRange((gCols ++ order): _*)
+    // consistent with the repo's barrier pattern; Dataset.unpersist does
+    // not reach checkpoint blocks, and the input copy is what a
+    // recompute-free bounds sample reads).
+    val input = Barrier.checkpoint(df)
+    val ranged = Barrier.checkpoint(input.repartitionByRange((gCols ++ order): _*)
       .sortWithinPartitions((gCols ++ order): _*)
       .withColumn("__pid", spark_partition_id()))
     val srcs = (cums.map(_._1) ++ totals.map(_._1)).distinct
@@ -567,12 +560,15 @@ object Sketches {
       cums.map { case (_, n) => StructField(s"__loc_$n", d380, nullable = false) })
     val nSrc = srcIdx.length
     val nKey = gIdx.length
-    // boxed-value equality with the former Scala `==` semantics: primitive
-    // comparison for same-typed floats (NaN != NaN, -0.0 == 0.0), value
-    // equality everywhere else (UTF8String/Decimal equals are value-based)
+    // boxed-value equality with Spark's float normalization — NaN == NaN
+    // and -0.0 == 0.0, as the collapse groupBy, the range sort and the
+    // offsets join all group them — and value equality everywhere else
+    // (UTF8String/Decimal equals are value-based)
     def sameKeyVal(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Double, y: java.lang.Double) => x.doubleValue == y.doubleValue
-      case (x: java.lang.Float, y: java.lang.Float)   => x.floatValue == y.floatValue
+      case (x: java.lang.Double, y: java.lang.Double) =>
+        x.doubleValue == y.doubleValue || (x.isNaN && y.isNaN)
+      case (x: java.lang.Float, y: java.lang.Float) =>
+        x.floatValue == y.floatValue || (x.isNaN && y.isNaN)
       case _ => java.util.Objects.equals(a, b)
     }
     val withLocal = org.apache.spark.sql.GraftExpressionBridge

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Exact-integer statistical fits over grouped data — trend detection for
  * monitoring ("is daily volume drifting?"), feature screening ("does
@@ -1499,10 +1501,9 @@ object Stats {
     // materialized once: THREE consumers (the m agg, the cutoff agg and
     // the final sheet) read the ranked frame, whose lineage is the whole
     // range-partition rank scaffold
-    val ranked = TextAnalysis.withGroupRank(
+    val ranked = Barrier.checkpoint(TextAnalysis.withGroupRank(
       df.where(col(pPpmCol).isNotNull), "rank", groupCols,
-      col(pPpmCol), col(idCol))
-      .localCheckpoint(true)
+      col(pPpmCol), col(idCol)))
     val m = ranked.groupBy(g: _*).agg(max(col("rank")).as("n_tests"))
     val flagged = ranked.join(m, groupCols)
       .withColumn("__cand",

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Text-analysis primitives for LLM training-data pipelines, built entirely
  * from codegen'd Catalyst functions (no UDFs): tokenization, token counting,
@@ -1740,7 +1742,7 @@ object TextAnalysis {
    * stays at the partition count through every step, and only
    * partition-count rows ever meet a single-partition window.
    *
-   * The ranged data is MATERIALIZED (eager `localCheckpoint`) before the
+   * The ranged data is MATERIALIZED (an eager `Barrier`) before the
    * offset branch and the main branch both derive from it — the standard
    * two-pass prefix-sum structure. Without it the two branches each embed
    * their own range exchange, and although AQE stage reuse normally
@@ -1757,21 +1759,15 @@ object TextAnalysis {
       tokensCol: String,
       idCol: String,
       budgetTokens: Long,
-      numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      numPartitions: Int = 0): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.broadcast
     require(budgetTokens >= 0, "budgetTokens must be non-negative")
-    // reliable-checkpoint escape hatch (round 20) — see rangedCumSums
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
-    val ranged0 =
+    val ranged = Barrier.checkpoint(
       (if (numPartitions > 0)
         df.repartitionByRange(numPartitions, col(scoreCol).desc, col(idCol))
       else df.repartitionByRange(col(scoreCol).desc, col(idCol)))
-        .withColumn("__pid", spark_partition_id())
-    val ranged =
-      if (checkpointDir.isDefined) ranged0.checkpoint(eager = true)
-      else ranged0.localCheckpoint(true)
+        .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy(col("__pid"))
       .agg(sum(col(tokensCol)).cast("long").as("__part_tokens"))
       .withColumn("__offset",
@@ -1801,7 +1797,7 @@ object TextAnalysis {
    * match `groupCol` cast to string.
    *
    * Scale: the same no-one-reducer recipe as [[selectTokenBudget]] — one
-   * range exchange on `(group, score DESC, id)` (eagerly localCheckpointed
+   * range exchange on `(group, score DESC, id)` (behind an eager barrier,
    * so both branches share frozen boundaries), per-(group, partition)
    * token sums whose running offsets are windows over partition-count
    * rows, then per-(group, partition) cumulative windows. A group hotter
@@ -1817,22 +1813,16 @@ object TextAnalysis {
       tokensCol: String,
       idCol: String,
       budgets: Map[String, Long],
-      numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      numPartitions: Int = 0): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.broadcast
     require(budgets.nonEmpty, "budgets must name at least one group")
     require(budgets.values.forall(_ >= 0), "budgets must be non-negative")
-    // reliable-checkpoint escape hatch (round 20) — see rangedCumSums
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
     val keys = Seq(col(groupCol), col(scoreCol).desc, col(idCol))
-    val ranged0 =
+    val ranged = Barrier.checkpoint(
       (if (numPartitions > 0) df.repartitionByRange(numPartitions, keys: _*)
       else df.repartitionByRange(keys: _*))
-        .withColumn("__pid", spark_partition_id())
-    val ranged =
-      if (checkpointDir.isDefined) ranged0.checkpoint(eager = true)
-      else ranged0.localCheckpoint(true)
+        .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy(col(groupCol), col("__pid"))
       .agg(sum(col(tokensCol)).cast("long").as("__part_tokens"))
       .withColumn("__offset",
@@ -1868,23 +1858,13 @@ object TextAnalysis {
   def withGlobalRank(
       df: org.apache.spark.sql.DataFrame,
       rankCol: String,
-      order: Column*): org.apache.spark.sql.DataFrame =
-    withGlobalRankIn(df, rankCol, None, order: _*)
-
-  /** [[withGlobalRank]] with the reliable-checkpoint escape hatch
-    * (round 20) — `checkpointDir` reaches the scaffold's two
-    * materializations; the default stays `localCheckpoint`. */
-  def withGlobalRankIn(
-      df: org.apache.spark.sql.DataFrame,
-      rankCol: String,
-      checkpointDir: Option[String],
       order: Column*): org.apache.spark.sql.DataFrame = {
     require(order.nonEmpty, "withGlobalRank needs at least one order column")
     // rank = running count of 1s in order: the rangedCumSums scan recipe
     // (round 16) — one range exchange + a per-partition linear scan, no
     // second full-frame exchange to re-create the shard clustering
     Sketches.rangedCumSums(df.withColumn("__rank_one", lit(1L)), Seq.empty,
-      order, cums = Seq("__rank_one" -> rankCol), checkpointDir = checkpointDir)
+      order, cums = Seq("__rank_one" -> rankCol))
       .drop("__rank_one")
   }
 
@@ -1901,22 +1881,12 @@ object TextAnalysis {
       df: org.apache.spark.sql.DataFrame,
       rankCol: String,
       groupCols: Seq[String],
-      order: Column*): org.apache.spark.sql.DataFrame =
-    withGroupRankIn(df, rankCol, groupCols, None, order: _*)
-
-  /** [[withGroupRank]] with the reliable-checkpoint escape hatch
-    * (round 20) — see [[withGlobalRankIn]]. */
-  def withGroupRankIn(
-      df: org.apache.spark.sql.DataFrame,
-      rankCol: String,
-      groupCols: Seq[String],
-      checkpointDir: Option[String],
       order: Column*): org.apache.spark.sql.DataFrame = {
     require(groupCols.nonEmpty, "withGroupRank needs group columns (see withGlobalRank)")
     require(order.nonEmpty, "withGroupRank needs at least one order column")
     // same scan recipe as withGlobalRank, keyed (group, order...)
     Sketches.rangedCumSums(df.withColumn("__rank_one", lit(1L)), groupCols,
-      order, cums = Seq("__rank_one" -> rankCol), checkpointDir = checkpointDir)
+      order, cums = Seq("__rank_one" -> rankCol))
       .drop("__rank_one")
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barrier
+
 /**
  * Calendar-keyed series operators: densification, smoothing and lagged
  * cross-correlation over per-key daily metrics — the reporting layer on
@@ -196,14 +198,13 @@ object Timeseries {
     // materialize the pair frame once: three consumers (count, the
     // recipe's offsets, the rank pass) would otherwise re-run the
     // self-join each — the withGroupRank checkpoint discipline
-    val slopes = pts
+    val slopes = Barrier.checkpoint(pts
       .join(pts.select(col(keyCol), col("__d").as("__d2"),
         col("__v").as("__v2")), Seq(keyCol))
       .where(col("__d2") > col("__d"))
       .withColumn("slope_micro",
         expr("CAST(CAST(__v2 - __v AS DECIMAL(38,0)) * 1000000 " +
-          "DIV (__d2 - __d) AS BIGINT)"))
-      .localCheckpoint(true)
+          "DIV (__d2 - __d) AS BIGINT)")))
     val medians = Sketches.exactPercentiles(slopes, keyCol, "slope_micro",
       percentiles = Seq(50))
     slopes.groupBy(col(keyCol)).agg(count(lit(1)).as("n_pairs"))
@@ -448,11 +449,10 @@ object Timeseries {
     val d38 = "DECIMAL(38,0)"
     // phase/key-sized and consumed twice (totals + join back): materialize
     // so the raw scan + agg run once, not per consumer
-    val phased = df
+    val phased = Barrier.checkpoint(df
       .groupBy((keyCols.map(col) :+ pmod(col(dayCol), lit(period.toLong)).as("phase")): _*)
       .agg(count(lit(1)).cast(d38).as("__np"),
-        sum(col(valueCol)).cast(d38).as("__sp"))
-      .localCheckpoint(true)
+        sum(col(valueCol)).cast(d38).as("__sp")))
     val totals = phased.groupBy(keyCols.map(col): _*)
       .agg(sum(col("__np")).as("__nt"), sum(col("__sp")).as("__st"))
     phased.join(totals, keyCols)

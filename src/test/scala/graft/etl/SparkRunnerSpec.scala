@@ -49,6 +49,15 @@ class SparkRunnerSpec extends SparkJobSuiteBase {
     messaging.topics should contain("metrics")
   }
 
+  test("runWith leaves the listener bus as it found it") {
+    val sc = spark.sparkContext
+    val before = org.apache.spark.SparkTestAccess.listenerCount(sc)
+    val r = runner(new CountingJob(), Schedule(Day(2026, 8, 12)), new InMemoryMessagingSystem)
+    r.go()
+    r.go()
+    org.apache.spark.SparkTestAccess.listenerCount(sc) shouldBe before
+  }
+
   test("retries a flaky stage and publishes a Retrying event") {
     val job = new CountingJob(failFirstN = 1)
     val messaging = new InMemoryMessagingSystem

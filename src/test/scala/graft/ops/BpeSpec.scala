@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkTestAccess.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 import graft.testkit.SparkTestBase
@@ -154,24 +155,25 @@ class BpeSpec extends SparkTestBase {
 
   test("learn with a reliable checkpointDir produces identical merges") {
     val dir = java.nio.file.Files.createTempDirectory("bpe-ckpt").toString
-    Bpe.learn(corpus.toDF("text"), "text", numMerges = 4, checkpointDir = Some(dir))
-      .map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 4)
+    withCheckpointDir(dir) {
+      Bpe.learn(corpus.toDF("text"), "text", numMerges = 4)
+    }.map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 4)
   }
 
-  test("reliable-checkpoint rounds are cleaned up and the prior dir restored") {
-    import scala.jdk.CollectionConverters._
-    val prior = java.nio.file.Files.createTempDirectory("bpe-prior").toString
-    spark.sparkContext.setCheckpointDir(prior)
-    val resolvedPrior = spark.sparkContext.getCheckpointDir.get
+  test("reliable-checkpoint rounds are cleaned up and the checkpoint dir left unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("bpe-ckpt2")
-    Bpe.learn(corpus.toDF("text"), "text", numMerges = 6,
-      checkpointDir = Some(dir.toString), maxPerRound = 2)
-      .map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 6)
-    // every per-round checkpoint subdirectory was deleted on completion
-    java.nio.file.Files.list(dir).iterator().asScala.toSeq shouldBe empty
-    // and the session checkpoints under the caller's prior location again
-    spark.sparkContext.getCheckpointDir.get should include(
-      new java.net.URI(resolvedPrior).getPath)
+    withCheckpointDir(dir.toString) {
+      val set = spark.sparkContext.getCheckpointDir
+      Bpe.learn(corpus.toDF("text"), "text", numMerges = 6, maxPerRound = 2)
+        .map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 6)
+      // the session checkpoints where it did before the call ...
+      spark.sparkContext.getCheckpointDir shouldBe set
+    }
+    // ... and every per-round checkpoint was deleted on completion: no
+    // file is left anywhere under the dir
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+    walk(dir.toFile) shouldBe empty
   }
 
   test("learn stops early when no pair clears minCount") {

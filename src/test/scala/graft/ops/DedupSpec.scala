@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkTestAccess.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 import graft.testkit.SparkTestBase
@@ -179,26 +180,33 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("checkpointDir reaches the cluster iteration from the one-call APIs") {
-    // same answers as the localCheckpoint default, and the reliable
-    // checkpoint files actually land under the given dir — proof the knob
-    // threads through removeNearDuplicates/leakageSafeSplit to
-    // duplicateClusters (real clusters need it to survive executor loss)
+    // with the session's checkpoint dir set, the one-call APIs give the
+    // local default's answers, the reliable checkpoint files actually land
+    // under the dir (real clusters need them to survive executor loss),
+    // and the calls leave the session's dir as they found it
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    def kept() = Dedup.removeNearDuplicates(docs, "id", "text", threshold = 0.8)
+      .select("id").as[Long].collect().sorted
+    def groups() = Dedup.leakageSafeSplit(docs, "id", "text",
+      Seq("train" -> 80, "valid" -> 10, "test" -> 10))
+      .select("id", "group_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     try {
-      Dedup.removeNearDuplicates(docs, "id", "text", threshold = 0.8,
-        checkpointDir = Some(dir.getAbsolutePath))
-        .select("id").as[Long].collect().sorted shouldBe Array(1L, 4L)
-      def checkpointFiles = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-        walk(dir)
+      val (localKept, localGroups) = (kept(), groups())
+      localKept shouldBe Array(1L, 4L)
+      withCheckpointDir(dir.getAbsolutePath) {
+        val set = spark.sparkContext.getCheckpointDir
+        kept() shouldBe localKept
+        def checkpointFiles = {
+          def walk(f: java.io.File): Seq[java.io.File] =
+            if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+          walk(dir)
+        }
+        checkpointFiles should not be empty
+        val split = groups()
+        split shouldBe localGroups
+        split(5L) shouldBe split(1L)
+        spark.sparkContext.getCheckpointDir shouldBe set
       }
-      checkpointFiles should not be empty
-      val split = Dedup.leakageSafeSplit(docs, "id", "text",
-        Seq("train" -> 80, "valid" -> 10, "test" -> 10),
-        checkpointDir = Some(dir.getAbsolutePath))
-        .select("id", "group_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      split(5L) shouldBe split(1L)
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm)
