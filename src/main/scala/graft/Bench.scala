@@ -89,7 +89,15 @@ object Bench {
     // (<300 char) summary; the full per-query map goes to stderr and to
     // bench_full.json for humans.
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    // a query name is data, not JSON: a quote or backslash in it must not
+    // break the record it sits in
+    def str(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val qs = results.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
     // maxByOption: with every query failed (all -1 sentinels) maxBy would
@@ -105,7 +113,7 @@ object Bench {
     // can instead grep these ~60-char lines — each parses on its own.
     // The stdout summary stays the LAST stdout line, byte-compatible.
     results.foreach { case (name, v) =>
-      System.err.println(s"""{"metric":"query","name":"$name","sec":${fmt(v)}}""")
+      System.err.println(s"""{"metric":"query","name":${str(name)},"sec":${fmt(v)}}""")
     }
     val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"queries":$qs,"sf":"$sfDir"}"""
     System.err.println(fullLine)
@@ -113,7 +121,7 @@ object Bench {
       val p = java.nio.file.Paths.get("bench_full.json")
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] could not write bench_full.json: ${e.getMessage}") }
-    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"n":${results.size},"failed":$failed,"max_query":"${maxQ._1}","max_sec":${fmt(maxQ._2)},"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"n":${results.size},"failed":$failed,"max_query":${str(maxQ._1)},"max_sec":${fmt(maxQ._2)},"sf":"$sfDir"}"""
     println(summary)
     spark.stop()
   }

@@ -67,15 +67,27 @@ object Profile {
     // the FINAL adaptive plan of the timed noop write (isFinalPlan=true,
     // with ReusedExchange / AQEShuffleRead nodes) — explain() on the
     // DataFrame only ever shows the initial plan, so runtime exchange/stage
-    // reuse is invisible without this
+    // reuse is invisible without this. Only the outer noop SAVE is
+    // recorded: the eager barriers a query runs while it is built are
+    // executions of their own and must not stand in for it.
     @volatile var finalPlan: String = null
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        finalPlan = qe.executedPlan.toString
+        if (qe.logical.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand])
+          finalPlan = qe.executedPlan.toString
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
+    // QueryExecutionListener callbacks are async: wait for the last save's
+    // plan, then clear it so the next capture cannot read a stale one
+    def takeSavePlan(): Option[String] = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (finalPlan == null && System.nanoTime() < deadline) Thread.sleep(50)
+      val plan = Option(finalPlan)
+      finalPlan = null
+      plan
+    }
 
     val byName = Queries.all.map { case (n, f, _) => n -> f }.toMap
     Files.createDirectories(Paths.get(plansDir))
@@ -87,6 +99,7 @@ object Profile {
         df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       // warm-up (codegen + FS caches), then timed pass with job breakdown
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      takeSavePlan() // the warm-up save's plan: drained, never recorded
       jobLines.clear(); jobStart.clear()
       taskNanos.set(0L); taskCount.set(0L); stageCount.set(0L); record = true
       spark.sparkContext.setJobDescription(name)
@@ -99,12 +112,8 @@ object Profile {
         f"${stageCount.get()} stages, " +
         f"${taskNanos.get() / 1e9}%.3f task-s over ${taskCount.get()} tasks)")
       jobLines.toArray(Array.empty[String]).sorted.foreach(println)
-      // QueryExecutionListener callbacks are async; give the bus a moment
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (finalPlan == null && System.nanoTime() < deadline) Thread.sleep(50)
-      if (finalPlan != null) {
-        Files.writeString(Paths.get(s"$plansDir/${name}_${tag}_final.txt"), finalPlan)
-        finalPlan = null
+      takeSavePlan().foreach { plan =>
+        Files.writeString(Paths.get(s"$plansDir/${name}_${tag}_final.txt"), plan)
       }
     }
     spark.stop()

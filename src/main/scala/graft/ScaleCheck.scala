@@ -41,7 +41,7 @@ object ScaleCheck {
     "basket_lift", "time_weighted_load", "damerau_pairs", "rrf_fusion",
     "attribution_linear", "blocklist", "spearman", "fleiss", "vocab_growth",
     "ks_drift", "mw_drift", "weighted_pctl", "entity_resolution", "gram_matrix",
-    "connected_components", "audience_overlap",
+    "connected_components", "connected_components_loop", "audience_overlap",
     "pr_curve", "cuped_adjust", "gini_concentration", "theil_sen",
     "holt_forecast", "kaplan_meier", "mann_kendall", "changepoint",
     "mantel_haenszel", "zipf_slope", "negative_samples",
@@ -527,10 +527,19 @@ object ScaleCheck {
     time("kcore") {
       ops.Graphs.kCore(bigLinks, k = 4)
     }
-    // fixpoint components with pointer jumping: node count scales with
-    // factor; rounds stay O(log diameter), each round edge-sized joins
+    // components of the same graph on both paths: as called (the driver
+    // union-find while the edge frame fits Graphs.DriverMaxEdgeRows), and
+    // with broadcasts off, which keeps it on the fixpoint loop — pointer
+    // jumping, rounds O(log diameter), each round edge-sized joins
     time("connected_components") {
       ops.Graphs.connectedComponents(bigLinks)
+    }
+    time("connected_components_loop") {
+      val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // the path is chosen, and the loop run, inside the call
+      try ops.Graphs.connectedComponents(bigLinks)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
     time("bfs_reach") {
       ops.Graphs.bfsDistances(bigLinks, Seq("h13"), maxDepth = 4)

@@ -75,7 +75,9 @@ object IncrementalRelease {
 
   /** One day's curation output: the stage-5 survivors (with `n_tokens`),
     * the day's additive `(ord, stage, n, tokens)` stats rows for ords
-    * 0–5, and the key rows to append to the three dedup stores. */
+    * 0–5 (a driver-built local relation of the numbers each stage's
+    * barrier observed), and the key rows to append to the three dedup
+    * stores. */
   final case class DayCuration(
       curated: DataFrame,
       stats: DataFrame,
@@ -113,7 +115,8 @@ object IncrementalRelease {
    * canonical URL and fingerprint, semi-join on `(band, bh)`) — one
    * shuffle each, broadcast when the day is small, bloom-prefilterable
    * like [[IncrementalDedupJob]] when the store outgrows the day. Stage
-   * frames materialize once (two consumers: next tier + the stats row).
+   * frames materialize once, and each barrier's job also observes the
+   * stage's stats row ([[Release.observedStage]]) — no aggregate job.
    */
   def curateDay(
       docs: DataFrame,
@@ -135,7 +138,7 @@ object IncrementalRelease {
         "benchGrams must be a Decontaminate.benchGramRows frame " +
           s"(bench_id, __gram STRING), got ${g.schema.simpleString}")
     }
-    val s0 = Barrier.checkpoint(docs.select(col("doc_id"), col("url"), col("lang"),
+    val (s0, r0) = Release.observedStage(docs.select(col("doc_id"), col("url"), col("lang"),
       col("source"), col("text"),
       TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_tokens")))
     // tier-input keys append to the store BEFORE any within-day keep rule:
@@ -146,13 +149,13 @@ object IncrementalRelease {
     val fresh0 = s0.withColumn("__canon", Web.normalizeUrl(col("url")))
       .join(seenUrls.select(col("canon_url").as("__canon")), Seq("__canon"), "left_anti")
       .drop("__canon")
-    val s1 = Barrier.checkpoint(Web.dedupByUrl(fresh0, "url", "doc_id"))
+    val (s1, r1) = Release.observedStage(Web.dedupByUrl(fresh0, "url", "doc_id"))
 
     val fps = s1.select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
     val fresh1 = s1.withColumn("__fp", TextAnalysis.fingerprint(col("text")))
       .join(seenFps.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
       .drop("__fp")
-    val s2 = Barrier.checkpoint(Dedup.exact(fresh1, "text", "doc_id"))
+    val (s2, r2) = Release.observedStage(Dedup.exact(fresh1, "text", "doc_id"))
 
     // band rows of the near tier's INPUT — the day is shingled once; the
     // same frame feeds the cross-day semi-join and the store append
@@ -181,46 +184,37 @@ object IncrementalRelease {
     // cross-day survivors — bands are per-doc, so the restriction IS the
     // survivors' bandedIds frame): the day is shingled exactly once
     val freshBands = dayBands.join(nearSeen, Seq("doc_id"), "left_anti")
-    val s3 = Barrier.checkpoint(Dedup.removeNearDuplicatesFromBands(fresh2, freshBands,
+    val (s3, r3) = Release.observedStage(Dedup.removeNearDuplicatesFromBands(fresh2, freshBands,
       "doc_id", "text", threshold))
 
     val passes = TextAnalysis.qualityFlags(col("text"))
       .collectFirst { case ("passes", c) => c }.get
     // materialized (same reasoning as Release.build): decontaminate reads
-    // s4 twice and the stats row a third time — re-running the per-row
-    // regex gate 3× per DAY measured slower than the barrier
-    val s4 = Barrier.checkpoint(s3.filter(passes === 1L))
+    // s4 twice — re-running the per-row regex gate per read measured
+    // slower than the barrier
+    val (s4, r4) = Release.observedStage(s3.filter(passes === 1L))
     // the benchmark gram set is day-INDEPENDENT: a caller curating many
     // days against one eval suite precomputes+materializes it once
     // (benchGrams) instead of re-scanning and re-shingling the benchmark
     // per day (round 20; guide §1.2)
-    val s5 = Barrier.checkpoint(Decontaminate.removeContaminatedOnGrams(
+    val (s5, r5) = Release.observedStage(Decontaminate.removeContaminatedOnGrams(
       s4, "doc_id", "text",
       benchGrams.getOrElse(
         Decontaminate.benchGramRows(bench, "bench_id", "text", n = 5)),
       n = 5, minHits = minHits, broadcastBench = true))
 
-    // materialized: the day's six 1-row aggregates collapse to six ROWS
-    // here — left lazy, every downstream consumer of the cut's manifest
-    // (kept + rejected branches) re-inlines the whole aggregate-union
-    // subtree per day (round 19 measured the lazy form costing +3 s on
-    // release_manifest_incr: 18 duplicated single-partition aggregate
-    // stages in the final job — the barrier buys plan deduplication)
-    val stats = Seq(
-      (0L, "raw", s0), (1L, "url_dedup", s1), (2L, "exact_dedup", s2),
-      (3L, "near_dedup", s3), (4L, "quality_gate", s4), (5L, "decontaminate", s5))
-      .map { case (ord, name, df) => Release.stageStat(ord, name, df) }
-      .reduce(_ unionByName _)
     val bandRows =
       if (!verifyNear) dayBands.select(col("band"), col("bh")).distinct()
       else dayBands.join(daySh, "doc_id")
         .select(col("band"), col("bh"), col("__dsh").as("sh")).distinct()
-    DayCuration(s5, Barrier.checkpoint(stats), urls, fps, bandRows)
+    DayCuration(s5, Release.stageStats(docs.sparkSession, Seq(r0, r1, r2, r3, r4, r5)),
+      urls, fps, bandRows)
   }
 
   /**
    * Cut the release from the accumulated curated pool + per-day stats:
-   * sums the additive ord 0–5 rows and hands off to [[Release.assemble]]
+   * sums the additive ord 0–5 rows (one stage-count-sized aggregate,
+   * collected once by [[Release.assemble]]) and hands off to it
    * — the manifest is produced by the batch build's own code path, so the
    * two can only differ if the curated pool differs.
    */

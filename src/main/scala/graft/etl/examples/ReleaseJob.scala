@@ -1,8 +1,10 @@
 package graft.etl.examples
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft._
 import graft.etl.{SparkJob, Stage}
@@ -52,10 +54,12 @@ import graft.util.Barrier
  * min_by aggs, the bucketed LSH pipeline, per-row gates, the broadcast
  * gram semi-join, one pack window per source). Each stage frame
  * materializes ONCE (a [[graft.util.Barrier]]: local, or reliable under
- * `spark.checkpoint.dir`) because two consumers read it — the next stage
- * and its manifest aggregate; the manifest itself is stage-count-sized
- * rows built from 1-row aggregates and a 7-row lag window (bounded by
- * the stage count, never by data).
+ * `spark.checkpoint.dir`) and that barrier's job also OBSERVES the
+ * stage's manifest numbers ([[graft.util.Barrier.checkpointObserved]]:
+ * row count, token total, per-group mix counts, the shuffle checksum).
+ * The manifest is then built on the driver from those stage-count-sized
+ * numbers as a local relation — no aggregate job, union or window of its
+ * own.
  */
 object Release {
   /** One fixed reject reason per chain stage — the manifest's audit
@@ -80,45 +84,60 @@ object Release {
       threshold: Double = 0.8,
       minHits: Int = 3,
       shuffleSalt: String = "release"): (DataFrame, DataFrame) = {
-    val s0 = Barrier.checkpoint(docs.select(col("doc_id"), col("url"), col("lang"),
+    val (s0, r0) = observedStage(docs.select(col("doc_id"), col("url"), col("lang"),
       col("source"), col("text"),
       TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_tokens")))
-    val s1 = Barrier.checkpoint(Web.dedupByUrl(s0, "url", "doc_id"))
-    val s2 = Barrier.checkpoint(Dedup.exact(s1, "text", "doc_id"))
-    val s3 = Barrier.checkpoint(Dedup.removeNearDuplicates(s2, "doc_id", "text", threshold))
+    val (s1, r1) = observedStage(Web.dedupByUrl(s0, "url", "doc_id"))
+    val (s2, r2) = observedStage(Dedup.exact(s1, "text", "doc_id"))
+    val (s3, r3) = observedStage(Dedup.removeNearDuplicates(s2, "doc_id", "text", threshold))
     val passes = TextAnalysis.qualityFlags(col("text"))
       .collectFirst { case ("passes", c) => c }.get
-    // materialized: the gate's regex battery is per-row expensive and s4
-    // has THREE consumers (decontaminate reads it twice — the gram probe
-    // and the anti-join back — plus the stage-4 stats row); round 19
-    // measured the lazy form re-running the gate 3× per build and LOSING
-    // 0.5-1 s despite the saved barrier
-    val s4 = Barrier.checkpoint(s3.filter(passes === 1L))
-    val s5 = Barrier.checkpoint(Decontaminate.removeContaminated(
+    // materialized: the gate's regex battery is per-row expensive and
+    // decontaminate reads s4 twice (the gram probe and the anti-join back);
+    // round 19 measured the lazy form re-running the gate per read and
+    // LOSING 0.5-1 s despite the saved barrier
+    val (s4, r4) = observedStage(s3.filter(passes === 1L))
+    val (s5, r5) = observedStage(Decontaminate.removeContaminated(
       s4, "doc_id", "text", bench, "bench_id", "text", n = 5, minHits = minHits))
-    val base05 = Seq(
-      (0L, "raw", s0), (1L, "url_dedup", s1), (2L, "exact_dedup", s2),
-      (3L, "near_dedup", s3), (4L, "quality_gate", s4),
-      (5L, "decontaminate", s5))
-      .map { case (ord, name, df) => stageStat(ord, name, df) }
-      .reduce(_ unionByName _)
-    assemble(s5, base05, targetsPpm, contextLen, shuffleSalt)
+    assemble(s5, stageStats(docs.sparkSession, Seq(r0, r1, r2, r3, r4, r5)),
+      targetsPpm, contextLen, shuffleSalt)
   }
 
-  /** One `(ord, stage, n, tokens)` stats row for a stage frame — the unit
-    * the manifest's kept/rejected rows are built from. The incremental
-    * twin persists these per day and SUMS them at cut time (counts and
-    * token totals are additive across a day split), which is why the row
-    * shape is public to the package. */
-  private[examples] def stageStat(ord: Long, name: String, df: DataFrame): DataFrame =
-    df.agg(count(lit(1)).cast("long").as("n"),
-      coalesce(sum(col("n_tokens")), lit(0L)).cast("long").as("tokens"))
-      .select(lit(ord).as("ord"), lit(name).as("stage"), col("n"), col("tokens"))
+  /** Chain stage names by `ord`: `raw`, then the stages with a reject
+    * reason. */
+  private val StageNames: Seq[String] = "raw" +: RejectReasons.map(_._1)
+
+  /** The `(ord, stage, n, tokens)` stats rows the manifest's kept/rejected
+    * rows are built from. The incremental twin persists these per day and
+    * SUMS them at cut time (counts and token totals are additive across a
+    * day split), which is why the row shape is public to the package. */
+  private[examples] val StageStatSchema: StructType = StructType(Seq(
+    StructField("ord", LongType, nullable = false),
+    StructField("stage", StringType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("tokens", LongType, nullable = false)))
+
+  /** A stage frame's `(n, tokens)`: row count and token total. */
+  private val StageMetrics: Seq[Column] = Seq(count(lit(1)).cast("long"),
+    coalesce(sum(col("n_tokens")), lit(0L)).cast("long"))
+
+  /** Materializes a stage frame (it has `n_tokens`) and observes its
+    * `(n, tokens)` on the same job. */
+  private[examples] def observedStage(df: DataFrame): (DataFrame, Row) =
+    Barrier.checkpointObserved(df, StageMetrics: _*)
+
+  /** The observed `(n, tokens)` of stages 0, 1, … as a driver-built
+    * [[StageStatSchema]] frame. */
+  private[examples] def stageStats(spark: SparkSession, observed: Seq[Row]): DataFrame =
+    spark.createDataFrame(observed.zipWithIndex.map { case (r, ord) =>
+      Row(ord.toLong, StageNames(ord), r.getLong(0), r.getLong(1))
+    }.asJava, StageStatSchema)
 
   /**
    * The release CUT — stages 6–9 (target mix, pack, shuffle) plus manifest
    * assembly — over a curated stage-5-shaped frame and the dedup/gate
-   * stats rows (ords 0–5). Shared verbatim by [[build]] and
+   * stats rows (ords 0–5, `(ord, stage, n, tokens)`, collected here once:
+   * they are stage-count-sized). Shared verbatim by [[build]] and
    * [[IncrementalRelease.cut]] so the one-shot and incremental manifests
    * are produced by the SAME code path and can only differ if their
    * inputs do (the batch≡incremental law IncrementalReleaseJobSpec pins).
@@ -129,67 +148,59 @@ object Release {
       targetsPpm: Map[String, Int],
       contextLen: Int,
       shuffleSalt: String): (DataFrame, DataFrame) = {
-    val s6 = Barrier.checkpoint(
-      TextAnalysis.targetMixSample(s5, "lang", "doc_id", targetsPpm))
+    // the mix keeps only target langs: one (n, tokens) pair per target
+    // observes every mix_share row
+    val langs = targetsPpm.keys.toSeq.sorted
+    val shareMetrics = langs.flatMap { g =>
+      val in = col("lang") === g
+      Seq(count(when(in, lit(1))).cast("long"), sum(when(in, col("n_tokens"))).cast("long"))
+    }
+    val (s6, r6) = Barrier.checkpointObserved(
+      TextAnalysis.targetMixSample(s5, "lang", "doc_id", targetsPpm),
+      StageMetrics ++ shareMetrics: _*)
     val packed = TextAnalysis.packSequences(
       s6.select(col("doc_id"), col("source"), col("n_tokens")),
       "source", "doc_id", "n_tokens", contextLen)
-    val chunks = Barrier.checkpoint(packed.groupBy(col("source"), col("chunk_id"))
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("n_tokens"))
-      .withColumn("chunk_key",
-        concat(col("source"), lit(":"), col("chunk_id"))))
-    val shuffled = Barrier.checkpoint(
-      TextAnalysis.deterministicShuffle(chunks, "chunk_key", shuffleSalt))
-
-    val noChk = lit(null).cast("long").as("checksum")
-    // materialized: the kept AND rejected branches both read the 7-row
-    // stage-stats frame — without the barrier each branch DUPLICATES the
-    // whole aggregate-union subtree (2×7 single-partition exchanges, an
-    // AQE stage each; round 19 measured the lazy form costing +2 s on
-    // the protocol bench despite the saved job — the barrier here buys
-    // plan deduplication, not data reuse)
-    val base = Barrier.checkpoint(base05.unionByName(stageStat(6L, "target_mix", s6)))
-    val kept = base.select(col("ord"), col("stage"), lit("kept").as("detail"),
-      col("n"), col("tokens"), noChk)
-    // the lag window is global over the STAGE-COUNT-sized frame (7 rows by
-    // construction) — bounded control flow, not a data-sized one-reducer sort
-    val wOrd = Window.orderBy(col("ord"))
-    val reason = RejectReasons.foldLeft(lit(null).cast("string")) {
-      case (alt, (stage, r)) => when(col("stage") === stage, lit(r)).otherwise(alt)
-    }
-    val rejected = base
-      .withColumn("__pn", lag(col("n"), 1).over(wOrd))
-      .withColumn("__pt", lag(col("tokens"), 1).over(wOrd))
-      .where(col("ord") >= 1)
-      .select(col("ord"), col("stage"),
-        concat(lit("rejected:"), reason).as("detail"),
-        (col("__pn") - col("n")).as("n"),
-        (col("__pt") - col("tokens")).as("tokens"), noChk)
-    val shares = s6.groupBy(col("lang"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("n_tokens")).cast("long").as("tokens"))
-      .select(lit(7L).as("ord"), lit("mix_share").as("stage"),
-        col("lang").as("detail"), col("n"), col("tokens"), noChk)
-    val packRow = chunks
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("n_tokens")).cast("long").as("tokens"))
-      .select(lit(8L).as("ord"), lit("pack").as("stage"),
-        lit("kept").as("detail"), col("n"), col("tokens"), noChk)
+    val (chunks, pack) = Barrier.checkpointObserved(
+      packed.groupBy(col("source"), col("chunk_id"))
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(col("n_tokens")).cast("long").as("n_tokens"))
+        .withColumn("chunk_key", concat(col("source"), lit(":"), col("chunk_id"))),
+      count(lit(1)).cast("long"), sum(col("n_tokens")).cast("long"))
     // order-sensitive checksum: Σ rank·bucket16 accumulates in DECIMAL(38,0)
     // (a 100 TB export's rank·bucket terms overflow a LONG sum), reduced
     // mod 2^31−1 — a pure integer function of the permutation
-    val shuffleRow = shuffled
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("n_tokens")).cast("long").as("tokens"),
-        (sum(col("shuffle_rank").cast("decimal(38,0)") *
-          TextAnalysis.hashBucket(col("chunk_key"), "graft")) % 2147483647L)
-          .cast("long").as("checksum"))
-      .select(lit(9L).as("ord"), lit("shuffle").as("stage"),
-        lit("kept").as("detail"), col("n"), col("tokens"), col("checksum"))
-    val manifest = Seq(kept, rejected, shares, packRow, shuffleRow)
-      .reduce(_ unionByName _)
-    (shuffled, manifest)
+    val (shuffled, shuffle) = Barrier.checkpointObserved(
+      TextAnalysis.deterministicShuffle(chunks, "chunk_key", shuffleSalt),
+      count(lit(1)).cast("long"), sum(col("n_tokens")).cast("long"),
+      (sum(col("shuffle_rank").cast("decimal(38,0)") *
+        TextAnalysis.hashBucket(col("chunk_key"), "graft")) % 2147483647L).cast("long"))
+
+    // the 7 stage rows (ords 0–6) in `ord` order: each stage's rejected
+    // row is its predecessor's kept count minus its own
+    val baseCols = base05.select(col("ord"), col("stage"), col("n"), col("tokens"))
+    val base = (baseCols.collect().toSeq :+ Row(6L, "target_mix", r6.get(0), r6.get(1)))
+      .sortBy(_.getLong(0))
+    val reasons = RejectReasons.toMap
+    val kept = base.map(r => Row(r.get(0), r.get(1), "kept", r.get(2), r.get(3), null))
+    val rejected = base.sliding(2).map { case Seq(prev, r) =>
+      Row(r.get(0), r.get(1), "rejected:" + reasons(r.getString(1)),
+        prev.getLong(2) - r.getLong(2), prev.getLong(3) - r.getLong(3), null)
+    }
+    val shares = langs.zipWithIndex.collect {
+      case (g, i) if r6.getLong(2 + 2 * i) > 0 =>
+        Row(7L, "mix_share", g, r6.get(2 + 2 * i), r6.get(3 + 2 * i), null)
+    }
+    val rows = kept ++ rejected ++ shares ++ Seq(
+      Row(8L, "pack", "kept", pack.get(0), pack.get(1), null),
+      Row(9L, "shuffle", "kept", shuffle.get(0), shuffle.get(1), shuffle.get(2)))
+    // nullability as a union of the per-stage rows would declare it: ord
+    // and stage as the stats rows carry them, every value column nullable
+    val schema = StructType(Seq(
+      baseCols.schema("ord"), baseCols.schema("stage"),
+      StructField("detail", StringType), StructField("n", LongType),
+      StructField("tokens", LongType), StructField("checksum", LongType)))
+    (shuffled, s5.sparkSession.createDataFrame(rows.asJava, schema))
   }
 }
 

@@ -1,5 +1,8 @@
 package graft.ops
 
+import org.apache.spark.SparkTestAccess
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.testkit.SparkTestBase
@@ -253,48 +256,146 @@ class GraphsSpec extends SparkTestBase {
     a.nonEmpty shouldBe true
   }
 
-  test("connectedComponents labels every node with its component's min id") {
-    // two components {1,2,3,4} (star + tail) and {10,11}, direction ignored
-    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (11L, 10L)).toDF("src", "dst")
-    Graphs.connectedComponents(edges).as[(Long, Long)].collect().toMap shouldBe
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
+  /** Runs `body` with broadcasts off — which keeps every graph on
+    * connectedComponents' distributed loop — and restores the session's
+    * threshold afterwards, since all specs share one session. */
+  private def onLoop[T](body: => T): T =
+    SparkTestAccess.withSqlConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  // Each connectedComponents law runs twice: as written (these graphs are
+  // small, so the driver union-find answers) and on the distributed loop.
+  private val componentLaws: Seq[(String, () => Unit)] = Seq(
+    "connectedComponents labels every node with its component's min id" -> { () =>
+      // two components {1,2,3,4} (star + tail) and {10,11}, direction ignored
+      val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (11L, 10L)).toDF("src", "dst")
+      Graphs.connectedComponents(edges).as[(Long, Long)].collect().toMap shouldBe
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
+    },
+    "connectedComponents converges on a long chain (pointer jumping)" -> { () =>
+      // a 200-node chain has diameter 199; the compress step must close it
+      // in far fewer rounds than maxIterations allows
+      val chain = (0L until 199L).map(i => (i, i + 1)).toDF("src", "dst")
+      val labels = Graphs.connectedComponents(chain, maxIterations = 12)
+        .as[(Long, Long)].collect()
+      labels.length shouldBe 200
+      labels.map(_._2).toSet shouldBe Set(0L)
+    },
+    "connectedComponents drops self-loops/nulls and ignores duplicate edges" -> { () =>
+      val edges = Seq(
+        (Some(1L), Some(1L)),   // self-loop: contributes nothing
+        (Some(1L), Some(2L)), (Some(1L), Some(2L)), // duplicate
+        (None, Some(9L)), (Some(8L), None)          // null endpoints
+      ).toDF("src", "dst")
+      Graphs.connectedComponents(edges).as[(Long, Long)].collect().toMap shouldBe
+        Map(1L -> 1L, 2L -> 1L)
+    },
+    "connectedComponents is a pure function of the graph, not its partitioning" -> { () =>
+      val rnd = new scala.util.Random(17)
+      val edges = (1 to 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      def run(parts: Int) =
+        Graphs.connectedComponents(edges.toDF("src", "dst").repartition(parts))
+          .collect().map(_.toSeq).toSet
+      run(1) shouldBe run(13)
+    },
+    "connectedComponents clusters dedup pairs into families" -> { () =>
+      // the intended composition: pair-generator output -> families
+      val pairs = Seq((100L, 200L), (200L, 300L), (500L, 600L)).toDF("id_a", "id_b")
+      val fams = Graphs.connectedComponents(pairs, "id_a", "id_b")
+        .groupBy($"component").count().as[(Long, Long)].collect().toMap
+      fams shouldBe Map(100L -> 3L, 500L -> 2L)
+    })
+
+  componentLaws.foreach { case (name, law) =>
+    test(name)(law())
+    test(s"$name [distributed loop]")(onLoop(law()))
   }
 
-  test("connectedComponents converges on a long chain (pointer jumping)") {
-    // a 200-node chain has diameter 199; the compress step must close it
-    // in far fewer rounds than maxIterations allows
-    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = Graphs.connectedComponents(chain, maxIterations = 12)
-      .as[(Long, Long)].collect()
-    labels.length shouldBe 200
-    labels.map(_._2).toSet shouldBe Set(0L)
+  /** Both connectedComponents paths over one edge frame: equal rows and an
+    * equal schema, nullability included. */
+  private def bothPathsAgree(edges: DataFrame): Set[Seq[Any]] = {
+    val local = Graphs.connectedComponents(edges)
+    val loop = onLoop(Graphs.connectedComponents(edges))
+    isLocal(local) shouldBe true
+    isLocal(loop) shouldBe false
+    local.schema shouldBe loop.schema
+    val rows = local.collect().map(_.toSeq).toSet
+    rows shouldBe loop.collect().map(_.toSeq).toSet
+    rows
   }
 
-  test("connectedComponents drops self-loops/nulls and ignores duplicate edges") {
-    val edges = Seq(
-      (Some(1L), Some(1L)),   // self-loop: contributes nothing
-      (Some(1L), Some(2L)), (Some(1L), Some(2L)), // duplicate
-      (None, Some(9L)), (Some(8L), None)          // null endpoints
-    ).toDF("src", "dst")
-    Graphs.connectedComponents(edges).as[(Long, Long)].collect().toMap shouldBe
-      Map(1L -> 1L, 2L -> 1L)
+  /** Random edges over `pool`, with ~10% null endpoints, self-loops and
+    * duplicate edges. */
+  private def randomEdges[T](rnd: scala.util.Random, pool: IndexedSeq[T], n: Int) =
+    (1 to n).flatMap { _ =>
+      def node = if (rnd.nextInt(10) == 0) None else Some(pool(rnd.nextInt(pool.length)))
+      val e = (node, node)
+      if (rnd.nextInt(8) == 0) Seq(e, e) else Seq(e)
+    } :+ ((Some(pool(0)), Some(pool(0))))
+
+  test("connectedComponents: driver union-find equals the distributed loop on Long ids") {
+    for (seed <- 1 to 4) withClue(s"seed $seed: ") {
+      val rnd = new scala.util.Random(seed)
+      val pool = (0 until 40).map(_ => rnd.nextInt(1000).toLong - 500L)
+      bothPathsAgree(randomEdges(rnd, pool, 35).toDF("src", "dst"))
+    }
+    val chain = bothPathsAgree((0L until 199L).map(i => (i + 1, i)).toDF("src", "dst"))
+    chain.size shouldBe 200
+    chain.map(_(1)) shouldBe Set(0L)
   }
 
-  test("connectedComponents is a pure function of the graph, not its partitioning") {
-    val rnd = new scala.util.Random(17)
-    val edges = (1 to 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-    def run(parts: Int) =
-      Graphs.connectedComponents(edges.toDF("src", "dst").repartition(parts))
-        .collect().map(_.toSeq).toSet
-    run(1) shouldBe run(13)
+  test("connectedComponents: both paths order String ids as UTF-8 bytes") {
+    // U+FB01 (UTF-8 EF AC 81) sorts BEFORE U+1F600 (F0 9F 98 80) as bytes,
+    // but AFTER it as UTF-16 code units (FB01 > D83D) — Scala's String order
+    val (ligature, emoji) = ("\uFB01", new String(Character.toChars(0x1F600)))
+    ligature.compareTo(emoji) should be > 0
+    bothPathsAgree(Seq((emoji, ligature)).toDF("src", "dst")) shouldBe
+      Set(Seq(emoji, ligature), Seq(ligature, ligature))
+    val pool = IndexedSeq("a", "Z", "é", "e\u0301", "ü", "日本", ligature, emoji,
+      new String(Character.toChars(0x1D518)), "\uFFFD", "zz", "")
+    for (seed <- 1 to 4) withClue(s"seed $seed: ") {
+      bothPathsAgree(randomEdges(new scala.util.Random(seed), pool, 10).toDF("src", "dst"))
+    }
   }
 
-  test("connectedComponents clusters dedup pairs into families") {
-    // the intended composition: pair-generator output -> families
-    val pairs = Seq((100L, 200L), (200L, 300L), (500L, 600L)).toDF("id_a", "id_b")
-    val fams = Graphs.connectedComponents(pairs, "id_a", "id_b")
-      .groupBy($"component").count().as[(Long, Long)].collect().toMap
-    fams shouldBe Map(100L -> 3L, 500L -> 2L)
+  test("connectedComponents: a 10-edge graph costs at most 3 jobs on the driver path") {
+    val edges = (0L until 10L).map(i => (i % 4, i + 10)).toDF("src", "dst")
+    val (rows, jobs) = SparkTestAccess.countingJobs(spark.sparkContext) {
+      Graphs.connectedComponents(edges).collect()
+    }
+    rows.length shouldBe 14
+    jobs should be <= 3
+  }
+
+  test("connectedComponents: an edge frame over DriverMaxEdgeRows stays on the loop") {
+    // (i % 64, 64 + i): 64 stars whose leaves never repeat, so each edge
+    // adds two distinct directed rows
+    def stars(undirected: Long) =
+      spark.range(undirected).select((col("id") % 64).as("src"), (col("id") + 64).as("dst"))
+    val atLimit = Graphs.connectedComponents(stars(Graphs.DriverMaxEdgeRows / 2))
+    isLocal(atLimit) shouldBe true
+    val over = Graphs.connectedComponents(stars(Graphs.DriverMaxEdgeRows / 2 + 1))
+    isLocal(over) shouldBe false
+    over.where(col("component") =!= col("id") % 64 &&
+      col("component") =!= col("id")).count() shouldBe 0L
+    over.count() shouldBe Graphs.DriverMaxEdgeRows / 2 + 1 + 64
+  }
+
+  test("connectedComponents: string ids over DriverMaxIdBytes stay on the loop") {
+    // 4 edges, 8 directed rows: 16 endpoints of an eighth of the budget
+    // each — a handful of rows carrying twice the id bytes the driver
+    // may hold
+    val big = (Graphs.DriverMaxIdBytes / 8).toInt
+    def id(c: Char) = c.toString * big
+    val edges = Seq(('a', 'b'), ('b', 'c'), ('d', 'e'), ('e', 'f'))
+      .map { case (u, v) => (id(u), id(v)) }.toDF("src", "dst")
+    val out = Graphs.connectedComponents(edges)
+    isLocal(out) shouldBe false
+    out.select(substring(col("id"), 1, 1), substring(col("component"), 1, 1))
+      .as[(String, String)].collect().toMap shouldBe
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d", "e" -> "d", "f" -> "d")
   }
 
   test("linkPrediction: hand-computed cn/jaccard/pa on the diamond graph") {

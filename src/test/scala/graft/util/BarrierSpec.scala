@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SparkTestAccess.withCheckpointDir
+import org.apache.spark.SparkTestAccess.{countingJobs, withCheckpointDir}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
 
 import graft.testkit.SparkTestBase
 
@@ -35,6 +36,42 @@ class BarrierSpec extends SparkTestBase {
       spark.sparkContext.getCheckpointDir shouldBe set
     }
     spark.sparkContext.getCheckpointDir shouldBe None
+  }
+
+  /** A frame whose rows are computed by a shuffle, so a recomputation
+    * would show up in the observed metrics. */
+  private def grouped(n: Int): DataFrame =
+    spark.range(n).groupBy((col("id") % 7).as("k")).agg(sum(col("id")).as("s"))
+
+  private val metrics = Seq(count(lit(1)).as("n"), sum(col("s")).as("total"),
+    max(col("k")).as("n"))
+
+  test("checkpointObserved answers the frame's aggregates from the barrier's own job") {
+    for (rows <- Seq(500, 0)) withClue(s"$rows rows: ") {
+      val df = grouped(rows)
+      val expected = df.agg(metrics.head, metrics.tail: _*).head()
+      val (plainJobs, observedJobs) = (
+        countingJobs(spark.sparkContext)(Barrier.checkpoint(df))._2,
+        countingJobs(spark.sparkContext)(Barrier.checkpointObserved(df, metrics: _*)))
+      val ((out, observed), jobs) = observedJobs
+      observed shouldBe expected
+      jobs shouldBe plainJobs
+      checkpointedRdd(out).isCheckpointed shouldBe true
+      out.collect().toSet shouldBe df.collect().toSet
+    }
+    Barrier.checkpointObserved(grouped(0), count(lit(1)), sum(col("s")))._2 shouldBe
+      Row(0L, null)
+  }
+
+  test("checkpointObserved counts every row once under a reliable checkpoint") {
+    val dir = Files.createTempDirectory("graft-barrier-observed")
+    val df = grouped(500)
+    val expected = df.agg(metrics.head, metrics.tail: _*).head()
+    withCheckpointDir(dir.toString) {
+      val (out, observed) = Barrier.checkpointObserved(df, metrics: _*)
+      checkpointedRdd(out).getCheckpointFile shouldBe defined
+      observed shouldBe expected
+    }
   }
 
   // The local-vs-reliable decision lives in Barrier alone: library code

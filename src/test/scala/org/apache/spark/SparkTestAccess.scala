@@ -1,8 +1,13 @@
 package org.apache.spark
 
-/** Test access to the two session-global facts the specs pin that Spark
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Test access to the session-global facts the specs pin that Spark
   * keeps package-private: the checkpoint directory's setter (the public
-  * `setCheckpointDir` cannot restore "unset") and the listener bus. */
+  * `setCheckpointDir` cannot restore "unset"), whether a SQL conf is set,
+  * and the listener bus. */
 object SparkTestAccess {
 
   /** Runs `body` with the active context's checkpoint dir set to `dir` —
@@ -17,6 +22,34 @@ object SparkTestAccess {
     finally sc.checkpointDir = prior
   }
 
+  /** Runs `body` with the SQL conf `key` set to `value` and restores the
+    * prior state — set to its old value, or unset — afterwards, since all
+    * specs share one session. */
+  def withSqlConf[T](spark: sql.SparkSession, key: String, value: String)(body: => T): T = {
+    val conf = spark.asInstanceOf[sql.classic.SparkSession].sessionState.conf
+    val prior = if (conf.contains(key)) Some(conf.getConfString(key)) else None
+    conf.setConfString(key, value)
+    try body
+    finally prior.fold(conf.unsetConf(key))(conf.setConfString(key, _))
+  }
+
   /** Listeners currently registered on the context's bus. */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+
+  /** `body`'s result and the number of Spark jobs it submitted. The bus is
+    * drained before and after, so no earlier job is counted and no job of
+    * `body` is missed. */
+  def countingJobs[T](sc: SparkContext)(body: => T): (T, Int) = {
+    sc.listenerBus.waitUntilEmpty()
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
