@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every SparkEntry query against
  * `SPARK_GRAFT_SF_DIR` and prints one JSON line of per-query seconds.
@@ -11,20 +9,19 @@ import org.apache.spark.sql.SparkSession
  * row-group metadata and would under-measure wide projections.
  */
 object Bench {
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped, so data (a query name, an oracle's SQL) cannot
+    * break the record it sits in. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create()
     // Optional comma-separated query-name filter for local iteration
     // (`SPARK_GRAFT_ONLY=typicality_bigram sbt "runMain graft.Bench"`).
     // The driver never sets it, so protocol runs always time the full
@@ -89,15 +86,7 @@ object Bench {
     // (<300 char) summary; the full per-query map goes to stderr and to
     // bench_full.json for humans.
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // a query name is data, not JSON: a quote or backslash in it must not
-    // break the record it sits in
-    def str(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => jsonString(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
     // maxByOption: with every query failed (all -1 sentinels) maxBy would
@@ -113,7 +102,7 @@ object Bench {
     // can instead grep these ~60-char lines — each parses on its own.
     // The stdout summary stays the LAST stdout line, byte-compatible.
     results.foreach { case (name, v) =>
-      System.err.println(s"""{"metric":"query","name":${str(name)},"sec":${fmt(v)}}""")
+      System.err.println(s"""{"metric":"query","name":${jsonString(name)},"sec":${fmt(v)}}""")
     }
     val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"queries":$qs,"sf":"$sfDir"}"""
     System.err.println(fullLine)
@@ -121,7 +110,7 @@ object Bench {
       val p = java.nio.file.Paths.get("bench_full.json")
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] could not write bench_full.json: ${e.getMessage}") }
-    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"n":${results.size},"failed":$failed,"max_query":${str(maxQ._1)},"max_sec":${fmt(maxQ._2)},"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"n":${results.size},"failed":$failed,"max_query":${jsonString(maxQ._1)},"max_sec":${fmt(maxQ._2)},"sf":"$sfDir"}"""
     println(summary)
     spark.stop()
   }

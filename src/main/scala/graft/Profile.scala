@@ -4,18 +4,49 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins._
 
 /**
- * Dev-only measurement harness (guide §1: measure first): runs named battery
- * queries with the Bench session config, prints a per-JOB wall breakdown
- * (job id, seconds, description) for the timed pass, and dumps
- * `explain("formatted")` to `<plansDir>/<name>_<tag>.txt`.
+ * Dev-only measurement and plan-audit harness: runs named battery queries
+ * in Bench's session ([[LocalSession]]), prints a per-JOB wall breakdown
+ * (job id, seconds, description) for the timed pass, dumps
+ * `explain("formatted")` to `<plansDir>/<name>_<tag>.txt` and the timed
+ * pass's final adaptive plan to `<plansDir>/<name>_<tag>_final.txt`, and
+ * prints that final plan's shape: join strategies, hash/range/single
+ * exchanges, reused exchanges, codegen spans and pushed filters.
  *
  * Usage: runMain graft.Profile <sfDir> <tag> <name>[,<name>...] [<plansDir>]
  * Never invoked by the driver; the bench contract lives in [[Bench]].
  */
-object Profile {
+object Profile extends AdaptiveSparkPlanHelper {
+
+  /** Shape counters of an executed plan, looking through adaptive query
+    * stages and subqueries: a reused exchange counts once, as reused. */
+  def shape(plan: SparkPlan): (Seq[(String, Int)], Seq[String]) = {
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    def n(is: SparkPlan => Boolean): Int = nodes.count(is)
+    def exchanges(is: Partitioning => Boolean): Int =
+      n { case e: ShuffleExchangeLike => is(e.outputPartitioning); case _ => false }
+    val counts = Seq(
+      "bhj" -> n(_.isInstanceOf[BroadcastHashJoinExec]),
+      "smj" -> n(_.isInstanceOf[SortMergeJoinExec]),
+      "shj" -> n(_.isInstanceOf[ShuffledHashJoinExec]),
+      "bnlj" -> n(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "cartesian" -> n(_.isInstanceOf[CartesianProductExec]),
+      "exchange" -> exchanges(_.isInstanceOf[HashPartitioning]),
+      "rangeExchange" -> exchanges(_.isInstanceOf[RangePartitioning]),
+      "singleExchange" -> exchanges(_ == SinglePartition),
+      "reused" -> n(_.isInstanceOf[ReusedExchangeExec]),
+      "codegenSpans" -> n(_.isInstanceOf[WholeStageCodegenExec]))
+    val pushed = nodes.collect { case s: FileSourceScanExec => s.metadata.get("PushedFilters") }
+      .flatten.filterNot(_ == "[]").distinct
+    (counts, pushed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val tag = args(1)
@@ -23,18 +54,7 @@ object Profile {
     // round-scoped evidence dir as an argument (round 19 hardcoded "plans/r19"
     // and would have silently overwritten the previous round's dumps)
     val plansDir = if (args.length > 3) args(3) else "plans/r20"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create()
 
     val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -70,18 +90,18 @@ object Profile {
     // reuse is invisible without this. Only the outer noop SAVE is
     // recorded: the eager barriers a query runs while it is built are
     // executions of their own and must not stand in for it.
-    @volatile var finalPlan: String = null
+    @volatile var finalPlan: SparkPlan = null
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         if (qe.logical.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand])
-          finalPlan = qe.executedPlan.toString
+          finalPlan = qe.executedPlan
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
     // QueryExecutionListener callbacks are async: wait for the last save's
     // plan, then clear it so the next capture cannot read a stale one
-    def takeSavePlan(): Option[String] = {
+    def takeSavePlan(): Option[SparkPlan] = {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (finalPlan == null && System.nanoTime() < deadline) Thread.sleep(50)
       val plan = Option(finalPlan)
@@ -89,10 +109,9 @@ object Profile {
       plan
     }
 
-    val byName = Queries.all.map { case (n, f, _) => n -> f }.toMap
     Files.createDirectories(Paths.get(plansDir))
     names.foreach { name =>
-      val fn = byName.getOrElse(name, sys.error(s"unknown query: $name"))
+      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
       // plan dump
       val df = fn(spark, sfDir)
       Files.writeString(Paths.get(s"$plansDir/${name}_$tag.txt"),
@@ -113,7 +132,10 @@ object Profile {
         f"${taskNanos.get() / 1e9}%.3f task-s over ${taskCount.get()} tasks)")
       jobLines.toArray(Array.empty[String]).sorted.foreach(println)
       takeSavePlan().foreach { plan =>
-        Files.writeString(Paths.get(s"$plansDir/${name}_${tag}_final.txt"), plan)
+        Files.writeString(Paths.get(s"$plansDir/${name}_${tag}_final.txt"), plan.toString)
+        val (counts, pushed) = shape(plan)
+        println(s"[plan] $name: " + counts.map { case (k, v) => s"$k=$v" }.mkString(" "))
+        pushed.foreach(p => println(s"    PushedFilters: $p"))
       }
     }
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.etl
 
-import org.apache.spark.SparkConf
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.{SparkConf, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import scala.concurrent.duration._
@@ -107,8 +107,7 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
 
     logger.info(s"[$jobName] scheduled dates: $dates")
     val metrics = new RunnerMetrics
-    spark.sparkContext.addSparkListener(metrics.listener)
-    try {
+    try metrics.counting(spark.sparkContext) {
       dates.foreach { date =>
         val ctx = new RunnerContext(date, retryOptions, spark, messaging, metrics, spark)
         messaging.publishProcessStarting(ctx)
@@ -119,12 +118,7 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
             throw failure
         }
       }
-    } finally {
-      // one listener per run, removed with it: a long-lived session
-      // driving many runs must not accumulate them
-      spark.sparkContext.removeSparkListener(metrics.listener)
-      messaging.stop()
-    }
+    } finally messaging.stop()
   }
 
   def createSession(config: GraftConfig): SparkSession = {
@@ -195,6 +189,9 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
  * (reference core SparkRunner.scala:163-217).
  */
 class RunnerMetrics extends Serializable {
+  private val runIdProperty = "graft.runner.runId"
+  private val runId = java.util.UUID.randomUUID().toString
+  private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   private val bytesRead = new java.util.concurrent.atomic.AtomicLong
   private val recordsRead = new java.util.concurrent.atomic.AtomicLong
   private val recordsWritten = new java.util.concurrent.atomic.AtomicLong
@@ -206,12 +203,33 @@ class RunnerMetrics extends Serializable {
     "spark_records_read" -> recordsRead.get.toDouble,
     "spark_records_written" -> recordsWritten.get.toDouble)
 
-  val listener: SparkListener = new SparkListener {
-    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-      bytesRead.addAndGet(taskEnd.taskMetrics.inputMetrics.bytesRead)
-      recordsRead.addAndGet(taskEnd.taskMetrics.inputMetrics.recordsRead)
-      recordsWritten.addAndGet(taskEnd.taskMetrics.outputMetrics.recordsWritten)
-      ()
+  /** Runs `body` counting the tasks of the jobs it submits, and only those:
+    * they carry this run's id as a local property (which follows this
+    * thread and the threads Spark starts for it), so concurrent runs on one
+    * session count only their own tasks. The listener is removed afterwards,
+    * so a long-lived session driving many runs does not accumulate them. */
+  def counting[T](sc: SparkContext)(body: => T): T = {
+    val outerRun = sc.getLocalProperty(runIdProperty)
+    sc.setLocalProperty(runIdProperty, runId)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty(runIdProperty, outerRun)
     }
+  }
+
+  private val listener: SparkListener = new SparkListener {
+    override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+      if (jobStart.properties.getProperty(runIdProperty) == runId)
+        jobStart.stageIds.foreach(stages.add)
+
+    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
+      if (stages.contains(taskEnd.stageId)) {
+        bytesRead.addAndGet(taskEnd.taskMetrics.inputMetrics.bytesRead)
+        recordsRead.addAndGet(taskEnd.taskMetrics.inputMetrics.recordsRead)
+        recordsWritten.addAndGet(taskEnd.taskMetrics.outputMetrics.recordsWritten)
+        ()
+      }
   }
 }

@@ -473,8 +473,8 @@ object Dedup {
    * rows through one doc-keyed shuffle, where the explode form ships
    * `w x spans` rows into a distinct plus an anti join. That sweep, plus
    * carrying the token count from the pre-explode array instead of a
-   * count() window, measured 42 s -> 17 s on the all-duplicate 20x
-   * ScaleCheck corpus. Everything is
+   * count() window, measured 42 s -> 17 s on a 20x amplified corpus of
+   * exact duplicates. Everything is
    * md5/substring arithmetic, so a SQL oracle replays it bit-for-bit.
    */
   def removeDuplicateSpans(

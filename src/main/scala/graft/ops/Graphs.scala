@@ -291,8 +291,9 @@ object Graphs {
       return localComponents(bidir)
     // The round 16–20 measurements quoted below predate the driver path:
     // they timed the loop on graphs (battery host graph, sf1 CC
-    // consumers) of which the small ones no longer reach it.
-    // ScaleCheck's `connected_components_loop` times the loop alone.
+    // consumers) of which the small ones no longer reach it. No benchmark
+    // or battery query times the loop today (ROADMAP item 6); GraphsSpec
+    // checks it by forcing it with broadcasts off.
     var labels = Barrier.checkpoint(
       bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
     var changed = 1L

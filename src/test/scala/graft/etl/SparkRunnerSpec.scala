@@ -1,5 +1,8 @@
 package graft.etl
 
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
+
+import org.apache.spark.SparkTestAccess
 import org.apache.spark.sql.SparkSession
 
 import graft._
@@ -56,6 +59,48 @@ class SparkRunnerSpec extends SparkJobSuiteBase {
     r.go()
     r.go()
     org.apache.spark.SparkTestAccess.listenerCount(sc) shouldBe before
+  }
+
+  test("concurrent runWith calls on one session publish only their own reads") {
+    val sizes = Seq(300L, 1700L)
+    val paths = sizes.map { n =>
+      val path = s"${tmpDir("runner_read")}/t"
+      spark.range(n).write.parquet(path)
+      path
+    }
+    // one stage: read the file (between `gate` waits, so concurrent reads
+    // overlap), then drain the bus so the stage's MetricsEvent sees every
+    // task that ended before it returns
+    def recordsRead(path: String, gate: Option[CyclicBarrier]): Double = {
+      val messaging = new InMemoryMessagingSystem
+      val r = new SparkRunner[SparkJob] {
+        override def jobName = "read_job"
+        override def schedule: Schedule = Schedule(Day(2026, 8, 12))
+        override protected def createMessaging(config: GraftConfig) = messaging
+        override def configFile: Option[String] = None
+        override def createJob(config: GraftConfig): SparkJob = new SparkJob {
+          override def shouldRunForDate(spark: SparkSession, date: DateInterval) = true
+          override def stages: Stage[SparkSession, _] = Stage[SparkSession, Unit]("read") { c =>
+            gate.foreach(_.await(60, TimeUnit.SECONDS))
+            c.spark.read.parquet(path).write.format("noop").mode("overwrite").save()
+            gate.foreach(_.await(60, TimeUnit.SECONDS))
+            SparkTestAccess.drain(c.spark.sparkContext)
+          }
+        }
+      }
+      r.runWith(spark, GraftConfig("retry.max" -> "1", "retry.delay" -> "0ms"))
+      val metrics = messaging.events.filter(_._1 == "metrics").map(_._2)
+      metrics should have size 1
+      "\"spark_records_read\":([0-9.E]+)".r.findFirstMatchIn(metrics.head).get.group(1).toDouble
+    }
+    val solo = paths.map(recordsRead(_, None))
+    solo shouldBe sizes.map(_.toDouble)
+    val gate = new CyclicBarrier(2)
+    val results = scala.collection.concurrent.TrieMap.empty[String, Double]
+    val threads = paths.map(p => new Thread(() => { results.put(p, recordsRead(p, Some(gate))); () }))
+    threads.foreach(_.start())
+    threads.foreach(_.join(120000))
+    paths.map(results.get) shouldBe solo.map(Some(_))
   }
 
   test("retries a flaky stage and publishes a Retrying event") {

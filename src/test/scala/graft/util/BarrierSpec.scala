@@ -1,8 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.SparkTestAccess.{countingJobs, withCheckpointDir}
 import org.apache.spark.rdd.RDD
@@ -10,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.testkit.SourceScan.{codeLines, sourceRoot}
 import graft.testkit.SparkTestBase
 
 class BarrierSpec extends SparkTestBase {
@@ -76,35 +75,14 @@ class BarrierSpec extends SparkTestBase {
 
   // The local-vs-reliable decision lives in Barrier alone: library code
   // neither sets the session's checkpoint dir nor calls Spark's
-  // checkpoints directly. ScaleCheck's amplification checkpoints are
-  // timing scaffolding of a dev harness, not barriers.
-  private val sourceRoot = Paths.get("src", "main", "scala")
-  private val allowedCheckpointCallers = Set(
-    sourceRoot.resolve("graft/util/Barrier.scala"),
-    sourceRoot.resolve("graft/ScaleCheck.scala"))
-
-  /** `(file:line, code)` for every non-comment source line matching `pattern`. */
-  private def codeLines(pattern: scala.util.matching.Regex): Seq[(String, String)] = {
-    Files.isDirectory(sourceRoot) shouldBe true
-    val files = Files.walk(sourceRoot).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    files.sorted.flatMap { f: Path =>
-      Files.readAllLines(f).asScala.toSeq.zipWithIndex.collect {
-        case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/") &&
-            pattern.findFirstIn(line.split("//", 2)(0)).isDefined =>
-          (s"$f:${i + 1}", line.trim)
-      }
-    }
-  }
-
+  // checkpoints directly.
   test("no library code sets the session checkpoint dir") {
     codeLines("""setCheckpointDir""".r) shouldBe empty
   }
 
   test("every checkpoint in library code goes through Barrier") {
+    val barrier = sourceRoot.resolve("graft/util/Barrier.scala").toString + ":"
     codeLines("""localCheckpoint\(|(?<!Barrier)\.checkpoint\(""".r)
-      .filterNot { case (at, _) =>
-        allowedCheckpointCallers.exists(a => at.startsWith(a.toString + ":"))
-      } shouldBe empty
+      .filterNot(_._1.startsWith(barrier)) shouldBe empty
   }
 }

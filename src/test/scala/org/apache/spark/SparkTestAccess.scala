@@ -36,6 +36,9 @@ object SparkTestAccess {
   /** Listeners currently registered on the context's bus. */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
 
+  /** Blocks until every event posted so far reached every listener. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** `body`'s result and the number of Spark jobs it submitted. The bus is
     * drained before and after, so no earlier job is counted and no job of
     * `body` is missed. */

@@ -1,9 +1,13 @@
 #!/usr/bin/env bash
-# Plain-java runner for graft mains (Bench/ScaleCheck/Verify) — measurement
+# Plain-java runner for graft's local mains (graft.Bench, graft.Verify,
+# graft.Profile) over the classes `sbt compile` left in target/. Measurement
 # runs must NOT go through sbt: zinc rewriting class files can crash a live
 # JVM mid-run, and the sbt process itself contaminates timings (PLANS.md
-# protocol note). Usage: tools/run_main.sh graft.Bench [args...]
-# Env: SPARK_DRIVER_MEM (default 16g), plus whatever the main reads.
+# protocol note).
+# Usage: tools/run_main.sh <main> [args...]
+#   e.g. SPARK_GRAFT_SF_DIR=<sf dir> tools/run_main.sh graft.Bench
+# Env: SPARK_DRIVER_MEM (heap, default 16g), SPARK_GRAFT_CPUS (local[n],
+# default the machine's core count), plus whatever the main reads.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
