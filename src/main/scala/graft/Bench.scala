@@ -19,27 +19,32 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** The battery query names in the comma-separated `csv`, in order, trimmed,
+    * empty entries dropped; `Left` lists the unknown ones, sorted. */
+  def queryNames(csv: String): Either[Seq[String], Seq[String]] = {
+    val names = csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(Queries.all.map(_._1).toSet).distinct.sorted
+    Either.cond(unknown.isEmpty, names, unknown)
+  }
+
+  /** [[queryNames]] for a local main: a typo'd list must not masquerade as
+    * a short run, so unknown names are listed and exit 2 before any query. */
+  def queryNamesOrExit(main: String, csv: String): Seq[String] =
+    queryNames(csv) match {
+      case Right(names) => names
+      case Left(unknown) =>
+        System.err.println(s"[$main] names match no query: ${unknown.mkString(", ")}")
+        sys.exit(2)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession.create()
     // Optional comma-separated query-name filter for local iteration
     // (`SPARK_GRAFT_ONLY=typicality_bigram sbt "runMain graft.Bench"`).
     // The driver never sets it, so protocol runs always time the full
-    // battery.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd filter must not masquerade as a fast run: unknown names are
-    // fatal (exit 2 before any timing), and filtered output is marked.
-    only.foreach { names =>
-      val known = Queries.all.map(_._1).toSet
-      val unknown = (names -- known).toSeq.sorted
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] SPARK_GRAFT_ONLY names match no query: ${unknown.mkString(", ")}")
-        spark.stop()
-        sys.exit(2)
-      }
-    }
+    // battery; filtered output is marked.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(queryNamesOrExit("bench", _).toSet)
+    val spark = LocalSession.create()
     val battery = only match {
       case Some(names) => Queries.all.filter { case (n, _, _) => names(n) }
       case None        => Queries.all

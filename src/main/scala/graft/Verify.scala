@@ -7,8 +7,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — a fast local loop for
     // iterating on one query (the driver always calls with 2 args = all)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only = args.lift(2).map(Bench.queryNamesOrExit("verify", _).toSet)
     val spark = LocalSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1,14 +1,13 @@
 package graft.etl
 
-import org.apache.spark.{SparkConf, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
 import graft.config.GraftConfig
-import graft.monitoring.{Counter, Gauge, MessagingSystem, MetricRegistry}
+import graft.monitoring.{Counter, Gauge, JobMetrics, MessagingSystem, MetricRegistry}
 import graft.time.{DateInterval, Day}
 import graft.util.Logging
 
@@ -41,7 +40,8 @@ object RetryOptions {
  *     [[Stage.Context]]: every stage publishes starting/complete/failed
  *     events and is retried up to `retry.max` times with `retry.delay`
  *     between attempts,
- *  4. collect read metrics via a `SparkListener` and publish them per stage.
+ *  4. measure each stage attempt's own Spark jobs with [[JobMetrics]] and
+ *     publish a successful attempt's numbers in its stage's `MetricsEvent`.
  */
 abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
   def jobName: String
@@ -75,7 +75,7 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
   // ---- custom metrics (reference core SparkRunner.scala:165-205) ---------
   // Jobs declare counters/gauges as fields of their runner and bump them in
   // stage code; every stage's MetricsEvent carries the registry snapshot next
-  // to the SparkListener read/write numbers. Counters reset per run.
+  // to the JobMetrics numbers. Counters reset per run.
   private val metricRegistry = new MetricRegistry
 
   /** Register (or re-use) a counter; reset before each job run. */
@@ -106,17 +106,14 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
       .reverse
 
     logger.info(s"[$jobName] scheduled dates: $dates")
-    val metrics = new RunnerMetrics
-    try metrics.counting(spark.sparkContext) {
-      dates.foreach { date =>
-        val ctx = new RunnerContext(date, retryOptions, spark, messaging, metrics, spark)
-        messaging.publishProcessStarting(ctx)
-        job.stages.run(ctx) match {
-          case Success(_) => messaging.publishProcessComplete(ctx)
-          case Failure(failure) =>
-            messaging.publishProcessFailed(ctx, failure)
-            throw failure
-        }
+    try dates.foreach { date =>
+      val ctx = new RunnerContext(date, retryOptions, spark, messaging, spark)
+      messaging.publishProcessStarting(ctx)
+      job.stages.run(ctx) match {
+        case Success(_) => messaging.publishProcessComplete(ctx)
+        case Failure(failure) =>
+          messaging.publishProcessFailed(ctx, failure)
+          throw failure
       }
     } finally messaging.stop()
   }
@@ -136,7 +133,6 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
       retryOptions: RetryOptions,
       spark: SparkSession,
       messaging: MessagingSystem,
-      metrics: RunnerMetrics,
       value: I,
       // identity rides through withValue: a fresh UUID per stage transition
       // would orphan every post-first StageEvent from its process lifecycle
@@ -148,7 +144,7 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
     val jobId: String = jobName
 
     override def withValue[U](value: U): Stage.Context[U] =
-      new RunnerContext(eventDate, retryOptions, spark, messaging, metrics, value,
+      new RunnerContext(eventDate, retryOptions, spark, messaging, value,
         processId, startTime)
 
     override def run[O](stage: Stage[I, O], result: => O): Stage.Result[O] = {
@@ -156,13 +152,13 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
       def attempt(callCount: Int): Stage.Result[O] = {
         val stageId = s"$jobName/$eventDate/$processId/${stage.name}"
         logger.info(s"[$stageId] running try #$callCount")
-        metrics.reset()
         messaging.publishStageStarting(this, stage.name)
-        Try(result) match {
+        val (outcome, metrics) = JobMetrics.measure(spark.sparkContext)(Try(result))
+        outcome match {
           case success @ Success(_) =>
             messaging.publishStageComplete(this, stage.name)
             messaging.publishMetrics(this, stage.name,
-              metrics.snapshot ++ metricRegistry.snapshot)
+              metrics.asMetrics ++ metricRegistry.snapshot)
             success
           case failed @ Failure(failure) if callCount >= retryOptions.max =>
             logger.error(s"[$stageId] giving up after ${retryOptions.max} attempt(s)", failure)
@@ -183,53 +179,3 @@ abstract class SparkRunner[Job <: SparkJob] extends Logging with ScheduleDsl {
   }
 }
 
-/**
- * Lightweight per-stage counters fed by Spark's task-end events — the
- * public-knowledge stand-in for the reference's Prometheus collectors
- * (reference core SparkRunner.scala:163-217).
- */
-class RunnerMetrics extends Serializable {
-  private val runIdProperty = "graft.runner.runId"
-  private val runId = java.util.UUID.randomUUID().toString
-  private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private val bytesRead = new java.util.concurrent.atomic.AtomicLong
-  private val recordsRead = new java.util.concurrent.atomic.AtomicLong
-  private val recordsWritten = new java.util.concurrent.atomic.AtomicLong
-
-  def reset(): Unit = { bytesRead.set(0); recordsRead.set(0); recordsWritten.set(0) }
-
-  def snapshot: Map[String, Double] = Map(
-    "spark_bytes_read" -> bytesRead.get.toDouble,
-    "spark_records_read" -> recordsRead.get.toDouble,
-    "spark_records_written" -> recordsWritten.get.toDouble)
-
-  /** Runs `body` counting the tasks of the jobs it submits, and only those:
-    * they carry this run's id as a local property (which follows this
-    * thread and the threads Spark starts for it), so concurrent runs on one
-    * session count only their own tasks. The listener is removed afterwards,
-    * so a long-lived session driving many runs does not accumulate them. */
-  def counting[T](sc: SparkContext)(body: => T): T = {
-    val outerRun = sc.getLocalProperty(runIdProperty)
-    sc.setLocalProperty(runIdProperty, runId)
-    sc.addSparkListener(listener)
-    try body
-    finally {
-      sc.removeSparkListener(listener)
-      sc.setLocalProperty(runIdProperty, outerRun)
-    }
-  }
-
-  private val listener: SparkListener = new SparkListener {
-    override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-      if (jobStart.properties.getProperty(runIdProperty) == runId)
-        jobStart.stageIds.foreach(stages.add)
-
-    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
-      if (stages.contains(taskEnd.stageId)) {
-        bytesRead.addAndGet(taskEnd.taskMetrics.inputMetrics.bytesRead)
-        recordsRead.addAndGet(taskEnd.taskMetrics.inputMetrics.recordsRead)
-        recordsWritten.addAndGet(taskEnd.taskMetrics.outputMetrics.recordsWritten)
-        ()
-      }
-  }
-}

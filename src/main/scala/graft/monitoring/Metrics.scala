@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
  * flat `Map[String, Double]` snapshot into every stage's [[MetricsEvent]].
  *
  * Driver-side by design: per-record executor-side counting belongs in Spark
- * accumulators / task metrics (which `RunnerMetrics` already publishes);
+ * accumulators / task metrics (which [[JobMetrics]] already publishes);
  * this registry is for job-level business counters ("partitions compacted",
  * "rows quarantined") that ride the same monitoring channel.
  */

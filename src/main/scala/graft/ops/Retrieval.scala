@@ -141,19 +141,6 @@ object Retrieval {
   }
 
   /**
-   * Inverted index: `(term, df, postings)` per corpus term — `df` the
-   * EXACT document frequency, `postings` the `maxPostings` SMALLEST doc
-   * ids containing the term, ascending. The posting cap rides the same
-   * bounded `collect_bottom_k` aggregate as every top-k here (map-side
-   * k-capped partials — a hot stopword's postings never materialize
-   * beyond `maxPostings` per partition, so the term row stays bounded
-   * however large the corpus; `df` is a plain count and stays exact).
-   * Smallest-ids is a deterministic, partitioning-independent cap rule —
-   * re-building the index on a reshuffled corpus yields byte-identical
-   * rows. One distinct + one term-keyed aggregation; the lookup side of
-   * [[bm25TopK]] when the corpus is indexed once and queried often.
-   */
-  /**
    * Percolation — reverse search: match every document against a
    * REGISTERED set of keyword queries (topic routing, corpus alerting,
    * "tell me when crawl batches mention X"). A document matches a query
@@ -216,6 +203,19 @@ object Retrieval {
       .select(col("doc_id"), col("query_id"), col("n_matched"), col("n_terms"))
   }
 
+  /**
+   * Inverted index: `(term, df, postings)` per corpus term — `df` the
+   * EXACT document frequency, `postings` the `maxPostings` SMALLEST doc
+   * ids containing the term, ascending. The posting cap rides the same
+   * bounded `collect_bottom_k` aggregate as every top-k here (map-side
+   * k-capped partials — a hot stopword's postings never materialize
+   * beyond `maxPostings` per partition, so the term row stays bounded
+   * however large the corpus; `df` is a plain count and stays exact).
+   * Smallest-ids is a deterministic, partitioning-independent cap rule —
+   * re-building the index on a reshuffled corpus yields byte-identical
+   * rows. One distinct + one term-keyed aggregation; the lookup side of
+   * [[bm25TopK]] when the corpus is indexed once and queried often.
+   */
   def invertedIndex(
       docs: DataFrame,
       idCol: String,

@@ -1,13 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /**
  * Bridge between graft's custom Catalyst expressions and the public Column
  * API. Spark 4 moved Column construction behind `private[sql]`
  * (`classic.ExpressionUtils`), so extension libraries provide this shim in
  * the `org.apache.spark.sql` package — the standard pattern for libraries
- * that ship native expressions.
+ * that ship native expressions. It also reaches the two listener-bus
+ * internals [[graft.monitoring.JobMetrics]] needs.
  */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -50,4 +55,12 @@ object GraftExpressionBridge {
       Nil, false, None)(session, Some(childStats), None)
     classic.Dataset.ofRows(session, plan)
   }
+
+  /** Posts `event` on the context's listener bus: each listener receives
+    * it after every event posted before it. */
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
+
+  /** The query execution an execution-end event reports, when it succeeded. */
+  def succeeded(end: SparkListenerSQLExecutionEnd): Option[QueryExecution] =
+    Option(end.qe).filter(_ => end.executionFailure.isEmpty)
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.testkit.SourceScan.{codeLines, sourceRoot}
 import graft.testkit.SparkTestBase
 
-/** The local mains' shared pieces: one session definition, and the plan
-  * shape counters `Profile` prints. */
+/** The local mains' shared pieces: one session definition, one query-name
+  * check, one metrics listener, and the plan shape counters `Profile`
+  * prints. */
 class HarnessSpec extends SparkTestBase {
 
   test("src/main builds a SparkSession only in LocalSession and SparkRunner.createSession") {
@@ -18,6 +19,21 @@ class HarnessSpec extends SparkTestBase {
         sourceRoot.resolve("graft/etl/SparkRunner.scala").toString)
       sites.last._2 should include("SparkSession.builder.config(sparkConf)")
     }
+  }
+
+  test("src/main registers listeners only in the JobMetrics collector") {
+    val sites = codeLines("""addSparkListener|removeSparkListener|listenerManager\s*\.\s*register""".r)
+    withClue(sites.mkString("\n")) {
+      sites.map(_._1.takeWhile(_ != ':')).distinct shouldBe Seq(
+        sourceRoot.resolve("graft/monitoring/JobMetrics.scala").toString)
+    }
+  }
+
+  test("query-name lists: unknown names are rejected and listed, spaces trimmed, empty entries dropped") {
+    Bench.queryNames(" q6_revenue, ,host_components,") shouldBe
+      Right(Seq("q6_revenue", "host_components"))
+    Bench.queryNames("zz_typo,q6_revenue, aa_typo ,zz_typo") shouldBe Left(Seq("aa_typo", "zz_typo"))
+    Bench.queryNames("") shouldBe Right(Nil)
   }
 
   test("Profile.shape counts the final adaptive plan once, through its query stages") {

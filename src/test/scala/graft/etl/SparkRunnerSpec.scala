@@ -2,7 +2,8 @@ package graft.etl
 
 import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
-import org.apache.spark.SparkTestAccess
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.SparkSession
 
 import graft._
@@ -61,46 +62,99 @@ class SparkRunnerSpec extends SparkJobSuiteBase {
     org.apache.spark.SparkTestAccess.listenerCount(sc) shouldBe before
   }
 
+  /** A runner over one date whose job runs `pipeline`. */
+  private def pipelineRunner(messaging: MessagingSystem, pipeline: Stage[SparkSession, _]) =
+    new SparkRunner[SparkJob] {
+      override def jobName = "read_job"
+      override def schedule: Schedule = Schedule(Day(2026, 8, 12))
+      override protected def createMessaging(config: GraftConfig) = messaging
+      override def configFile: Option[String] = None
+      override def createJob(config: GraftConfig): SparkJob = new SparkJob {
+        override def shouldRunForDate(spark: SparkSession, date: DateInterval) = true
+        override def stages: Stage[SparkSession, _] = pipeline
+      }
+    }
+
+  /** A parquet table of `rows` rows. */
+  private def parquetTable(rows: Long): String = {
+    val path = s"${tmpDir("runner_read")}/t"
+    spark.range(rows).write.parquet(path)
+    path
+  }
+
+  private def readAll(c: Stage.Context[_], path: String): Unit =
+    c.spark.read.parquet(path).write.format("noop").mode("overwrite").save()
+
+  private def field(json: String, name: String): String =
+    s""""$name":"([^"]+)"""".r.findFirstMatchIn(json).get.group(1)
+
+  /** `(stage, spark_records_read)` of every MetricsEvent, in publication order. */
+  private def recordsRead(messaging: InMemoryMessagingSystem): Seq[(String, Double)] =
+    messaging.events.collect { case ("metrics", m) =>
+      field(m, "stage") -> "\"spark_records_read\":([0-9.E]+)".r.findFirstMatchIn(m).get.group(1).toDouble
+    }
+
   test("concurrent runWith calls on one session publish only their own reads") {
     val sizes = Seq(300L, 1700L)
-    val paths = sizes.map { n =>
-      val path = s"${tmpDir("runner_read")}/t"
-      spark.range(n).write.parquet(path)
-      path
-    }
-    // one stage: read the file (between `gate` waits, so concurrent reads
-    // overlap), then drain the bus so the stage's MetricsEvent sees every
-    // task that ended before it returns
-    def recordsRead(path: String, gate: Option[CyclicBarrier]): Double = {
+    val paths = sizes.map(parquetTable)
+    // one stage: read the file between `gate` waits, so concurrent reads overlap
+    def readRun(path: String, gate: Option[CyclicBarrier]): Double = {
       val messaging = new InMemoryMessagingSystem
-      val r = new SparkRunner[SparkJob] {
-        override def jobName = "read_job"
-        override def schedule: Schedule = Schedule(Day(2026, 8, 12))
-        override protected def createMessaging(config: GraftConfig) = messaging
-        override def configFile: Option[String] = None
-        override def createJob(config: GraftConfig): SparkJob = new SparkJob {
-          override def shouldRunForDate(spark: SparkSession, date: DateInterval) = true
-          override def stages: Stage[SparkSession, _] = Stage[SparkSession, Unit]("read") { c =>
-            gate.foreach(_.await(60, TimeUnit.SECONDS))
-            c.spark.read.parquet(path).write.format("noop").mode("overwrite").save()
-            gate.foreach(_.await(60, TimeUnit.SECONDS))
-            SparkTestAccess.drain(c.spark.sparkContext)
-          }
-        }
-      }
-      r.runWith(spark, GraftConfig("retry.max" -> "1", "retry.delay" -> "0ms"))
-      val metrics = messaging.events.filter(_._1 == "metrics").map(_._2)
+      pipelineRunner(messaging, Stage[SparkSession, Unit]("read") { c =>
+        gate.foreach(_.await(60, TimeUnit.SECONDS))
+        readAll(c, path)
+        gate.foreach(_.await(60, TimeUnit.SECONDS))
+        ()
+      }).runWith(spark, GraftConfig("retry.max" -> "1", "retry.delay" -> "0ms"))
+      val metrics = recordsRead(messaging)
       metrics should have size 1
-      "\"spark_records_read\":([0-9.E]+)".r.findFirstMatchIn(metrics.head).get.group(1).toDouble
+      metrics.head._2
     }
-    val solo = paths.map(recordsRead(_, None))
+    val solo = paths.map(readRun(_, None))
     solo shouldBe sizes.map(_.toDouble)
     val gate = new CyclicBarrier(2)
     val results = scala.collection.concurrent.TrieMap.empty[String, Double]
-    val threads = paths.map(p => new Thread(() => { results.put(p, recordsRead(p, Some(gate))); () }))
+    val threads = paths.map(p => new Thread(() => { results.put(p, readRun(p, Some(gate))); () }))
     threads.foreach(_.start())
     threads.foreach(_.join(120000))
     paths.map(results.get) shouldBe solo.map(Some(_))
+  }
+
+  test("each stage publishes its own reads when the listener bus delivers them late") {
+    val path = parquetTable(300)
+    val messaging = new InMemoryMessagingSystem
+    val pipeline = for {
+      _ <- Stage[SparkSession, Unit]("a")(readAll(_, path))
+      _ <- Stage[Unit, Unit]("b") { c => c.spark.sparkContext.parallelize(1 to 50, 4).count(); () }
+    } yield ()
+    withSlowTaskEnds(40.millis) {
+      pipelineRunner(messaging, pipeline)
+        .runWith(spark, GraftConfig("retry.max" -> "1", "retry.delay" -> "0ms"))
+    }
+    recordsRead(messaging) shouldBe Seq("a" -> 300.0, "b" -> 0.0)
+    val lifecycle = messaging.events.collect {
+      case ("stages", m) => field(m, "stage") -> field(m, "state")
+      case ("metrics", m) => field(m, "stage") -> "Metrics"
+    }
+    lifecycle shouldBe Seq("a" -> "Processing", "a" -> "Complete", "a" -> "Metrics",
+      "b" -> "Processing", "b" -> "Complete", "b" -> "Metrics")
+  }
+
+  test("a stage that reads and then fails publishes only its successful attempt's reads") {
+    // the attempts read tables of different sizes, so a count that mixes
+    // them shows
+    val paths = Seq(parquetTable(100), parquetTable(300))
+    val messaging = new InMemoryMessagingSystem
+    var attempts = 0
+    withSlowTaskEnds(40.millis) {
+      pipelineRunner(messaging, Stage[SparkSession, Unit]("flaky_read") { c =>
+        attempts += 1
+        readAll(c, paths(attempts - 1))
+        if (attempts == 1) sys.error("failed after reading")
+      }).runWith(spark, GraftConfig("retry.max" -> "2", "retry.delay" -> "0ms"))
+    }
+    attempts shouldBe 2
+    recordsRead(messaging) shouldBe Seq("flaky_read" -> 300.0)
   }
 
   test("retries a flaky stage and publishes a Retrying event") {

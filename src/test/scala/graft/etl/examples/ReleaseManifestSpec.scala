@@ -1,11 +1,11 @@
 package graft.etl.examples
 
-import org.apache.spark.SparkTestAccess
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.monitoring.JobMetrics
 import graft.ops.{Decontaminate, Dedup, TextAnalysis, Web}
 import graft.testkit.SparkTestBase
 import graft.util.Barrier
@@ -220,17 +220,17 @@ class ReleaseManifestSpec extends SparkTestBase {
   // lazy-aggregate manifest ran 68 and 21. A change that puts aggregate
   // jobs back on the release path fails here.
   test("Release.build runs at most 32 jobs") {
-    val (_, jobs) = SparkTestAccess.countingJobs(spark.sparkContext) {
+    val (_, m) = JobMetrics.measure(spark.sparkContext) {
       Release.build(corpus(withNearDup = true), bench, targets)._2.collect()
     }
-    jobs should be <= 32
+    m.jobs.size should be <= 32
   }
 
   test("IncrementalRelease.cut runs at most 15 jobs") {
     val day = curateFirstDay(corpus(withNearDup = true))
-    val (_, jobs) = SparkTestAccess.countingJobs(spark.sparkContext) {
+    val (_, m) = JobMetrics.measure(spark.sparkContext) {
       IncrementalRelease.cut(day.curated, day.stats, targets)._2.collect()
     }
-    jobs should be <= 15
+    m.jobs.size should be <= 15
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
+import graft.monitoring.JobMetrics
 import graft.testkit.SparkTestBase
 
 class GraphsSpec extends SparkTestBase {
@@ -362,11 +363,11 @@ class GraphsSpec extends SparkTestBase {
 
   test("connectedComponents: a 10-edge graph costs at most 3 jobs on the driver path") {
     val edges = (0L until 10L).map(i => (i % 4, i + 10)).toDF("src", "dst")
-    val (rows, jobs) = SparkTestAccess.countingJobs(spark.sparkContext) {
+    val (rows, m) = JobMetrics.measure(spark.sparkContext) {
       Graphs.connectedComponents(edges).collect()
     }
     rows.length shouldBe 14
-    jobs should be <= 3
+    m.jobs.size should be <= 3
   }
 
   test("connectedComponents: an edge frame over DriverMaxEdgeRows stays on the loop") {

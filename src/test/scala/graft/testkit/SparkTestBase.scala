@@ -1,9 +1,11 @@
 package graft.testkit
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import scala.concurrent.duration.FiniteDuration
 import scala.util.Try
 
 import graft.etl.{SparkJob, Stage}
@@ -33,6 +35,19 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with a listener on the bus's shared queue that sleeps
+    * `perTaskEnd` on every task end, so the listeners after it (a
+    * [[graft.monitoring.JobMetrics]] collector among them) receive the
+    * body's events late, after the actions that caused them returned. */
+  def withSlowTaskEnds[T](perTaskEnd: FiniteDuration)(body: => T): T = {
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(perTaskEnd.toMillis)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try body
+    finally spark.sparkContext.removeSparkListener(slow)
+  }
 }
 
 /**

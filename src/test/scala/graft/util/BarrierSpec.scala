@@ -2,12 +2,13 @@ package graft.util
 
 import java.nio.file.Files
 
-import org.apache.spark.SparkTestAccess.{countingJobs, withCheckpointDir}
+import org.apache.spark.SparkTestAccess.withCheckpointDir
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.monitoring.JobMetrics
 import graft.testkit.SourceScan.{codeLines, sourceRoot}
 import graft.testkit.SparkTestBase
 
@@ -49,12 +50,11 @@ class BarrierSpec extends SparkTestBase {
     for (rows <- Seq(500, 0)) withClue(s"$rows rows: ") {
       val df = grouped(rows)
       val expected = df.agg(metrics.head, metrics.tail: _*).head()
-      val (plainJobs, observedJobs) = (
-        countingJobs(spark.sparkContext)(Barrier.checkpoint(df))._2,
-        countingJobs(spark.sparkContext)(Barrier.checkpointObserved(df, metrics: _*)))
-      val ((out, observed), jobs) = observedJobs
+      val plainJobs = JobMetrics.measure(spark.sparkContext)(Barrier.checkpoint(df))._2.jobs.size
+      val ((out, observed), m) =
+        JobMetrics.measure(spark.sparkContext)(Barrier.checkpointObserved(df, metrics: _*))
       observed shouldBe expected
-      jobs shouldBe plainJobs
+      m.jobs.size shouldBe plainJobs
       checkpointedRdd(out).isCheckpointed shouldBe true
       out.collect().toSet shouldBe df.collect().toSet
     }

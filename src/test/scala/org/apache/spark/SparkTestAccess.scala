@@ -1,9 +1,5 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Test access to the session-global facts the specs pin that Spark
   * keeps package-private: the checkpoint directory's setter (the public
   * `setCheckpointDir` cannot restore "unset"), whether a SQL conf is set,
@@ -35,24 +31,4 @@ object SparkTestAccess {
 
   /** Listeners currently registered on the context's bus. */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
-
-  /** Blocks until every event posted so far reached every listener. */
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  /** `body`'s result and the number of Spark jobs it submitted. The bus is
-    * drained before and after, so no earlier job is counted and no job of
-    * `body` is missed. */
-  def countingJobs[T](sc: SparkContext)(body: => T): (T, Int) = {
-    sc.listenerBus.waitUntilEmpty()
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.listenerBus.waitUntilEmpty()
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 }
