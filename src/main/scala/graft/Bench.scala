@@ -101,16 +101,15 @@ object Bench {
     // filtered:true marks partial (SPARK_GRAFT_ONLY) runs so a filtered
     // bench_full.json can never be mistaken for a full-battery protocol run
     val filteredMark = if (only.isDefined) "\"filtered\":true," else ""
-    // Per-query timings additionally go out as SHORT one-line JSON records
-    // (round 20, additive): the single >2000-char map line below is chopped
-    // by any bounded log tail, so a consumer that wants per-query numbers
-    // can instead grep these ~60-char lines — each parses on its own.
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"queries":$qs,"sf":"$sfDir"}"""
+    System.err.println(fullLine)
+    // Per-query timings also go out as SHORT one-line JSON records, AFTER
+    // the >2000-char map line: a bounded log tail chops that line, so the
+    // tail ends in these ~60-char records, each of which parses on its own.
     // The stdout summary stays the LAST stdout line, byte-compatible.
     results.foreach { case (name, v) =>
       System.err.println(s"""{"metric":"query","name":${jsonString(name)},"sec":${fmt(v)}}""")
     }
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$filteredMark"queries":$qs,"sf":"$sfDir"}"""
-    System.err.println(fullLine)
     try {
       val p = java.nio.file.Paths.get("bench_full.json")
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))

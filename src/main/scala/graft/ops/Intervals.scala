@@ -11,11 +11,11 @@ import graft.util.Barrier
  * "peak concurrent crawls", capacity planning over validity windows
  * ([[Snapshots.scd2FromChangeLog]] output is exactly an interval table).
  *
- * The primitive is an EXACT GLOBAL running sum with no one-reducer window
- * — the same range-repartition + per-partition-offset recipe as the
- * global-order operators (`TextAnalysis.withGlobalRank`): Spark's
+ * The primitive is an EXACT GLOBAL running sum with no one-reducer window:
+ * [[Sketches.rangedCumSums]]' sharded scan (range shards, one linear scan
+ * per shard, broadcast per-shard offsets). Spark's
  * `sum(...).over(Window.orderBy(...))` with no partition key collapses
- * the corpus onto one reducer; here only the partition-count offset frame
+ * the corpus onto one reducer; here only the shard-count offset frame
  * ever meets a single-partition window.
  */
 object Intervals {
@@ -23,10 +23,10 @@ object Intervals {
   /**
    * Exact global running total of `valueCol` in the total order given by
    * `order` (pass a unique tiebreaker): each row gets `totalCol` = sum of
-   * `valueCol` over all rows at-or-before it. Range-repartition by the
-   * order, an eager [[graft.util.Barrier]] (frozen partition boundaries
-   * for every derived branch), per-partition prefix sums, per-partition
-   * totals broadcast back as offsets.
+   * `valueCol` over all rows at-or-before it, a null value counting as 0
+   * (so the totals do not depend on the partitioning). This is
+   * [[Sketches.rangedCumSums]] with no group columns: `totalCol` is LONG
+   * for an integral `valueCol` and DECIMAL(38,0) for a DECIMAL one.
    */
   def withRunningTotal(
       df: DataFrame,
@@ -34,21 +34,7 @@ object Intervals {
       valueCol: String,
       order: Column*): DataFrame = {
     require(order.nonEmpty, "withRunningTotal needs at least one order column")
-    val ranged = Barrier.checkpoint(df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id()))
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col(valueCol)).as("__n"))
-      .withColumn("__offset",
-        coalesce(sum(col("__n")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    ranged.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(totalCol,
-        (col("__offset") + sum(col(valueCol)).over(
-          Window.partitionBy(col("__pid")).orderBy(order: _*)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))).cast("long"))
-      .drop("__pid", "__offset")
+    Sketches.rangedCumSums(df, Nil, order, cums = Seq(valueCol -> totalCol))
   }
 
   /**
@@ -56,11 +42,12 @@ object Intervals {
    * order given by `order`: each row gets `maxCol` = max of `valueCol`
    * over all rows STRICTLY before it (null for the first row) — the
    * "best seen so far" primitive under skyline/frontier queries
-   * ([[Stats.paretoFront2D]]) and record-tracking analytics, built on the
-   * same range-repartition + per-partition-offset recipe as
-   * [[withRunningTotal]] (max is associative, so per-partition maxima
-   * compose exactly; only the partition-count offset frame ever meets a
-   * single-partition window).
+   * ([[Stats.paretoFront2D]]) and record-tracking analytics: an eager
+   * range-partitioned [[graft.util.Barrier]], per-partition maxima as
+   * offsets, and a per-partition window (max is associative, so
+   * per-partition maxima compose exactly; only the partition-count offset
+   * frame ever meets a single-partition window). It keeps its own recipe
+   * because [[Sketches.rangedCumSums]]' scan only sums.
    */
   def withRunningMaxBefore(
       df: DataFrame,
@@ -104,12 +91,21 @@ object Intervals {
       startCol: String,
       endCol: String,
       idCol: String): DataFrame = {
+    withRunningTotal(boundaries(intervals, startCol, endCol, idCol), "active", "delta",
+      col("ts"), col("delta"), col("id"))
+  }
+
+  /** One `(ts, delta, id)` row per interval boundary: +1 at the start, -1 at the end. */
+  private def boundaries(
+      intervals: DataFrame,
+      startCol: String,
+      endCol: String,
+      idCol: String): DataFrame = {
     val opens = intervals.select(col(startCol).as("ts"), lit(1L).as("delta"),
       col(idCol).as("id"))
     val closes = intervals.select(col(endCol).as("ts"), lit(-1L).as("delta"),
       col(idCol).as("id"))
-    withRunningTotal(opens.unionByName(closes), "active", "delta",
-      col("ts"), col("delta"), col("id"))
+    opens.unionByName(closes)
   }
 
   /**
@@ -149,12 +145,8 @@ object Intervals {
     // frame. Both are running sums (active = Σdelta, rank = Σ1), so one
     // sharded scan emits both, bit-identically (same order, same inclusive
     // law; the oracle replays the fused form digit-for-digit).
-    val opens = intervals.select(col(startCol).as("ts"), lit(1L).as("delta"),
-      col(idCol).as("id"))
-    val closes = intervals.select(col(endCol).as("ts"), lit(-1L).as("delta"),
-      col(idCol).as("id"))
     val ranked = Sketches.rangedCumSums(
-      opens.unionByName(closes).withColumn("__one", lit(1L)),
+      boundaries(intervals, startCol, endCol, idCol).withColumn("__one", lit(1L)),
       Seq.empty, Seq(col("ts"), col("delta"), col("id")),
       cums = Seq("delta" -> "active", "__one" -> "__rank"))
       .drop("__one")

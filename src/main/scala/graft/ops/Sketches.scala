@@ -477,11 +477,13 @@ object Sketches {
    *
    * `order` must be unique within each group (collapse to per-(group,
    * value) rows first, as every caller here does) so the running sums
-   * are a pure function of the data, not the shard layout. Sum columns
-   * must be DECIMAL or integral; DECIMAL sources come back DECIMAL(38,0)
-   * (the scan accumulates in BigDecimal — exact, no overflow), integral
-   * sources come back LONG (so callers must pre-cast to DECIMAL(38,0)
-   * themselves when a long running sum could overflow, as all do).
+   * are a pure function of the data, not the shard layout. A null value
+   * adds 0 to the running sums. Sum columns must be DECIMAL or integral
+   * (checked: the scan would truncate a DOUBLE to its integer part);
+   * DECIMAL sources come back DECIMAL(38,0) (the scan accumulates in
+   * BigDecimal — exact, no overflow), integral sources come back LONG
+   * (so callers must pre-cast to DECIMAL(38,0) themselves when a long
+   * running sum could overflow, as all do).
    * Group columns must be scalar (no ARRAY/MAP/BINARY/STRUCT): the scan
    * detects group changes by value equality on the raw row slots, and
    * array/binary slots compare by REFERENCE there — the accumulator
@@ -495,7 +497,6 @@ object Sketches {
       totals: Seq[(String, String)] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
-    import org.apache.spark.sql.{Encoders, Row}
     require(order.nonEmpty, "rangedCumSums needs order columns")
     require(cums.nonEmpty, "rangedCumSums needs at least one running-sum column")
     groupCols.foreach { g =>
@@ -509,6 +510,18 @@ object Sketches {
       }, s"rangedCumSums group column '$g' has non-scalar type ${dt.sql}: " +
         "the per-partition scan's group-change check compares raw row " +
         "values, and array/map/binary/struct slots compare by reference")
+    }
+    val srcs = (cums.map(_._1) ++ totals.map(_._1)).distinct
+    srcs.foreach { s =>
+      val dt = df.schema(s).dataType
+      require(dt match {
+        case _: DecimalType | org.apache.spark.sql.types.ByteType |
+             org.apache.spark.sql.types.ShortType |
+             org.apache.spark.sql.types.IntegerType |
+             org.apache.spark.sql.types.LongType => true
+        case _ => false
+      }, s"rangedCumSums sum column '$s' has type ${dt.sql}: the scan adds " +
+        "exact integers, so sum columns must be integral or DECIMAL")
     }
     val gCols = groupCols.map(col)
     // materialize the input BEFORE the range exchange (round 19): the
@@ -525,7 +538,6 @@ object Sketches {
     val ranged = Barrier.checkpoint(input.repartitionByRange((gCols ++ order): _*)
       .sortWithinPartitions((gCols ++ order): _*)
       .withColumn("__pid", spark_partition_id()))
-    val srcs = (cums.map(_._1) ++ totals.map(_._1)).distinct
     val partials = ranged.groupBy((gCols :+ col("__pid")): _*)
       .agg(sum(col(srcs.head)).as(s"__p_${srcs.head}"),
         srcs.tail.map(s => sum(col(s)).as(s"__p_$s")): _*)

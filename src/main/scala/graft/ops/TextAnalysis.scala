@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.Barrier
-
 /**
  * Text-analysis primitives for LLM training-data pipelines, built entirely
  * from codegen'd Catalyst functions (no UDFs): tokenization, token counting,
@@ -1731,58 +1729,26 @@ object TextAnalysis {
    * typicality first, then cut). The kept set is the maximal prefix of
    * the `(score DESC, id ASC)` total order, so the result is a pure
    * function of the data — partitioning-independent and
-   * oracle-replayable as one SQL cumulative sum.
+   * oracle-replayable as one SQL cumulative sum. A null token count
+   * counts as 0 (the document is kept while the budget holds), and
+   * `cum_tokens` is LONG for integral token counts.
    *
    * Scale: a naive `sum().over(Window.orderBy(...))` global cumulative
-   * sum collapses the corpus onto ONE reducer. Here the cut is exact
-   * without that: range-repartition by the order key (each partition
-   * holds a contiguous score range), ONE tiny per-partition token-sum agg
-   * whose running offsets are a window over partition-count rows, then a
-   * per-partition cumulative sum windowed by partition id — parallelism
-   * stays at the partition count through every step, and only
-   * partition-count rows ever meet a single-partition window.
-   *
-   * The ranged data is MATERIALIZED (an eager `Barrier`) before the
-   * offset branch and the main branch both derive from it — the standard
-   * two-pass prefix-sum structure. Without it the two branches each embed
-   * their own range exchange, and although AQE stage reuse normally
-   * executes it once, `RangePartitioner` seeds its boundary sample from
-   * the RDD id: with exchange reuse disabled (or the subtrees ceasing to
-   * canonicalize equal) the branches could draw DIFFERENT boundaries and
-   * silently disagree on `__pid` near partition edges. One extra
-   * write+read of the ranged rows buys partition assignments that are
-   * physically frozen, whatever the optimizer does.
+   * sum collapses the corpus onto ONE reducer. Here `cum_tokens` is
+   * [[Sketches.rangedCumSums]]' sharded scan over the order (range
+   * shards, one linear scan per shard, broadcast per-shard offsets), and
+   * the cut is one filter on it.
    */
   def selectTokenBudget(
       df: org.apache.spark.sql.DataFrame,
       scoreCol: String,
       tokensCol: String,
       idCol: String,
-      budgetTokens: Long,
-      numPartitions: Int = 0): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.broadcast
+      budgetTokens: Long): org.apache.spark.sql.DataFrame = {
     require(budgetTokens >= 0, "budgetTokens must be non-negative")
-    val ranged = Barrier.checkpoint(
-      (if (numPartitions > 0)
-        df.repartitionByRange(numPartitions, col(scoreCol).desc, col(idCol))
-      else df.repartitionByRange(col(scoreCol).desc, col(idCol)))
-        .withColumn("__pid", spark_partition_id()))
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col(tokensCol)).cast("long").as("__part_tokens"))
-      .withColumn("__offset",
-        coalesce(sum(col("__part_tokens")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    val wCum = Window.partitionBy(col("__pid"))
-      .orderBy(col(scoreCol).desc, col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), Seq("__pid"))
-      .withColumn("cum_tokens",
-        (col("__offset") + sum(col(tokensCol)).over(wCum)).cast("long"))
+    Sketches.rangedCumSums(df, Nil, Seq(col(scoreCol).desc, col(idCol)),
+      cums = Seq(tokensCol -> "cum_tokens"))
       .filter(col("cum_tokens") <= budgetTokens)
-      .drop("__pid", "__offset")
   }
 
   /**
@@ -1794,17 +1760,14 @@ object TextAnalysis {
    * from `budgets` are dropped entirely (no budget = no tokens — list a
    * group explicitly to keep any of it). `budgets` is a literal map
    * (strata are human-curated-sized, as in [[targetMixSample]]); keys
-   * match `groupCol` cast to string.
+   * match `groupCol` cast to string. Null token counts count as 0, as in
+   * [[selectTokenBudget]].
    *
-   * Scale: the same no-one-reducer recipe as [[selectTokenBudget]] — one
-   * range exchange on `(group, score DESC, id)` (behind an eager barrier,
-   * so both branches share frozen boundaries), per-(group, partition)
-   * token sums whose running offsets are windows over partition-count
-   * rows, then per-(group, partition) cumulative windows. A group hotter
-   * than one partition spreads across several (contiguous) partitions —
-   * no group ever collapses onto one reducer, which a plain
-   * `Window.partitionBy(group)` cumulative sum would force on a
-   * one-language-dominated corpus.
+   * Scale: the same [[Sketches.rangedCumSums]] scan keyed by `groupCol`
+   * over `(score DESC, id)`. A group hotter than one shard spreads across
+   * several (contiguous) shards — no group ever collapses onto one
+   * reducer, which a plain `Window.partitionBy(group)` cumulative sum
+   * would force on a one-language-dominated corpus.
    */
   def selectTokenBudgetPerGroup(
       df: org.apache.spark.sql.DataFrame,
@@ -1812,36 +1775,15 @@ object TextAnalysis {
       scoreCol: String,
       tokensCol: String,
       idCol: String,
-      budgets: Map[String, Long],
-      numPartitions: Int = 0): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.broadcast
+      budgets: Map[String, Long]): org.apache.spark.sql.DataFrame = {
     require(budgets.nonEmpty, "budgets must name at least one group")
     require(budgets.values.forall(_ >= 0), "budgets must be non-negative")
-    val keys = Seq(col(groupCol), col(scoreCol).desc, col(idCol))
-    val ranged = Barrier.checkpoint(
-      (if (numPartitions > 0) df.repartitionByRange(numPartitions, keys: _*)
-      else df.repartitionByRange(keys: _*))
-        .withColumn("__pid", spark_partition_id()))
-    val offsets = ranged.groupBy(col(groupCol), col("__pid"))
-      .agg(sum(col(tokensCol)).cast("long").as("__part_tokens"))
-      .withColumn("__offset",
-        coalesce(sum(col("__part_tokens")).over(
-          Window.partitionBy(col(groupCol)).orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col(groupCol), col("__pid"), col("__offset"))
-    val wCum = Window.partitionBy(col(groupCol), col("__pid"))
-      .orderBy(col(scoreCol).desc, col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // a group missing from the map gets a null budget; `cum <= null` is
     // null and the filter drops the row — exactly the "absent = 0" rule
     val budget = element_at(typedLit(budgets), col(groupCol).cast("string"))
-    ranged.join(broadcast(offsets), Seq(groupCol, "__pid"))
-      .withColumn("cum_tokens",
-        (col("__offset") + sum(col(tokensCol)).over(wCum)).cast("long"))
+    Sketches.rangedCumSums(df, Seq(groupCol), Seq(col(scoreCol).desc, col(idCol)),
+      cums = Seq(tokensCol -> "cum_tokens"))
       .filter(col("cum_tokens") <= budget)
-      .drop("__pid", "__offset")
   }
 
   /**

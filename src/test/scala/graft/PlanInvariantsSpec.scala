@@ -82,14 +82,16 @@ class PlanInvariantsSpec extends SparkTestBase {
   }
 
   test("round-12 additions: no corpus-on-one-reducer windows, scan-speed gates") {
-    // the global-order primitives: hash exchanges only for the offset agg
-    // + pid window; the corpus rides range exchanges (AQE stage-reused)
+    // the global-order primitives run rangedCumSums' scan: the corpus
+    // rides the checkpointed range exchange, and the only hash exchange is
+    // the pid-keyed offset agg (1 in the final plan; the pin predates the
+    // scan, when a pid-keyed window exchange carried the full data)
     check("token_budget_cut", maxShuffles = 2)
-    // per-group budgets ride the same checkpointed range exchange + a
-    // (group, pid) offset agg, a group-keyed running window over those
+    // per-group budgets: the same scan keyed by group — a (group, pid)
+    // offset agg plus a group-keyed running window over those
     // partition-count-sized offsets (the global form's SinglePartition
-    // window becomes a hash exchange here — still offset-row-sized), and
-    // the (group, pid) window exchange for the full data
+    // window becomes a hash exchange here — still offset-row-sized); 2 in
+    // the final plan, the full data crossing no hash exchange
     check("token_budget_per_group", maxShuffles = 3)
     check("training_shuffle", maxShuffles = 2)
     // per-row URL parsing + flags fused into the scan
@@ -328,8 +330,10 @@ class PlanInvariantsSpec extends SparkTestBase {
     // sessionization window + path agg reuse the user_id partitioning;
     // path-count agg + bounded TakeOrdered
     check("session_paths", maxShuffles = 2)
-    // first-touch min agg + day count; the running total's range exchange and
-    // partition-count offset frame are not hash exchanges
+    // first-touch min agg + day count behind the running total's input
+    // checkpoint; the visible plan is rangedCumSums' pid-keyed offset agg
+    // (1 in the final plan) — its range exchange and partition-count offset
+    // frame are not hash exchanges
     check("cumulative_users", maxShuffles = 2)
     // und + oriented live behind checkpoints: visible plan is the wedge join
     // + closing join + corner agg; the node-sized deg join pins as SMJ

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkTestAccess.withSqlConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +21,21 @@ class IntervalsSpec extends SparkTestBase {
       val out = Intervals.withRunningTotal(df, "total", "v", col("id"))
         .select($"id", $"total").as[(Long, Long)].collect().toMap
       withClue(s"parts=$parts") { out shouldBe naive }
+    }
+  }
+
+  test("withRunningTotal counts a null value as 0, identically at any shuffle partition count") {
+    // every third value null, the first row's among them: the running
+    // total must skip over a null, not turn null where one opens a shard
+    val rows = (1 to 40).map(i => (i.toLong, if (i % 3 == 1) None else Some(i.toLong * 2 - 7)))
+    val model = rows.scanLeft((0L, 0L)) { case ((_, acc), (id, v)) => (id, acc + v.getOrElse(0L)) }
+      .tail.toMap
+    for (p <- Seq(1, 4, 7, 13)) {
+      val out = withSqlConf(spark, "spark.sql.shuffle.partitions", p.toString) {
+        Intervals.withRunningTotal(rows.toDF("id", "v").repartition(3), "total", "v", col("id"))
+          .select($"id", $"total").as[(Long, Option[Long])].collect().toMap
+      }
+      withClue(s"shuffle partitions=$p") { out shouldBe model.map { case (k, v) => k -> Some(v) } }
     }
   }
 

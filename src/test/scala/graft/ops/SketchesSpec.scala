@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.SparkTestAccess.withCheckpointDir
 import org.apache.spark.sql.functions._
 
+import graft.testkit.SourceScan.{codeLines, sourceRoot}
 import graft.testkit.SparkTestBase
 
 class SketchesSpec extends SparkTestBase {
@@ -461,6 +462,40 @@ class SketchesSpec extends SparkTestBase {
     val bin = Seq((Array[Byte](1), 1L, 1L)).toDF("g", "v", "a")
     intercept[IllegalArgumentException] {
       Sketches.rangedCumSums(bin, Seq("g"), Seq($"v"), cums = Seq("a" -> "c"))
+    }
+  }
+
+  test("rangedCumSums sums only integral or DECIMAL columns") {
+    // the scan adds exact integers: a DOUBLE of 0.5 would sum to 0
+    val base = (1 to 10).map(i => (i.toLong, 0.5)).toDF("v", "x")
+    for (t <- Seq("double", "float")) {
+      val e = intercept[IllegalArgumentException] {
+        Sketches.rangedCumSums(base.withColumn("x", $"x".cast(t)), Nil, Seq($"v"),
+          cums = Seq("x" -> "c"))
+      }
+      e.getMessage should include("'x'")
+      e.getMessage should include(t.toUpperCase)
+    }
+    intercept[IllegalArgumentException] {
+      Sketches.rangedCumSums(base.withColumn("one", lit(1L)), Nil, Seq($"v"),
+        cums = Seq("one" -> "c"), totals = Seq("x" -> "t"))
+    }
+    for (t <- Seq("int", "bigint", "decimal(20,0)")) {
+      val out = Sketches.rangedCumSums(base.withColumn("x", lit(3).cast(t)), Nil, Seq($"v"),
+        cums = Seq("x" -> "c"))
+        .select($"v", $"c".cast("long")).as[(Long, Long)].collect().toMap
+      withClue(t) { out shouldBe (1 to 10).map(i => i.toLong -> 3L * i).toMap }
+    }
+  }
+
+  test("src/main takes shard ids only in rangedCumSums and withRunningMaxBefore") {
+    // every running sum goes through rangedCumSums' one scan: a hand-written
+    // copy of the range-shard + spark_partition_id recipe fails here
+    val sites = codeLines("""spark_partition_id""".r)
+    withClue(sites.mkString("\n")) {
+      sites.map(_._1.takeWhile(_ != ':')) shouldBe Seq(
+        sourceRoot.resolve("graft/ops/Intervals.scala").toString,
+        sourceRoot.resolve("graft/ops/Sketches.scala").toString)
     }
   }
 

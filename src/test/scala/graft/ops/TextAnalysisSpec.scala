@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkTestAccess.withSqlConf
 import org.apache.spark.sql.functions._
 
 import graft.testkit.SparkTestBase
@@ -579,18 +580,20 @@ class TextAnalysisSpec extends SparkTestBase {
     val docs = Seq(
       (1L, 80L, 40L), (2L, 50L, 50L), (3L, 40L, 10L), (4L, 70L, 20L), (5L, 90L, 30L))
       .toDF("id", "score", "n_tok")
-    def cut(df: org.apache.spark.sql.DataFrame, budget: Long, parts: Int = 0) =
-      TextAnalysis.selectTokenBudget(df, "score", "n_tok", "id", budget, parts)
+    def cut(df: org.apache.spark.sql.DataFrame, budget: Long) =
+      TextAnalysis.selectTokenBudget(df, "score", "n_tok", "id", budget)
         .select($"id", $"cum_tokens").as[(Long, Long)].collect().toMap
     cut(docs, 100L) shouldBe Map(5L -> 30L, 1L -> 70L, 4L -> 90L)
     // a document never splits: budget 120 still stops before id 2 (140)
     cut(docs, 120L) shouldBe Map(5L -> 30L, 1L -> 70L, 4L -> 90L)
     cut(docs, 150L).keySet shouldBe Set(1L, 2L, 3L, 4L, 5L)
     cut(docs, 0L) shouldBe Map.empty
-    // exact same result under any partition count (the offset arithmetic
-    // must equal the single-window definition)
+    // exact same result under any range partition count (the offset
+    // arithmetic must equal the single-window definition)
     for (p <- Seq(1, 2, 7)) {
-      cut(docs.repartition(3), 100L, parts = p) shouldBe Map(5L -> 30L, 1L -> 70L, 4L -> 90L)
+      withSqlConf(spark, "spark.sql.shuffle.partitions", p.toString) {
+        cut(docs.repartition(3), 100L) shouldBe Map(5L -> 30L, 1L -> 70L, 4L -> 90L)
+      }
     }
     // ties in score resolve by id ascending
     val tied = Seq((10L, 5L, 10L), (11L, 5L, 10L), (12L, 5L, 10L)).toDF("id", "score", "n_tok")
@@ -605,21 +608,52 @@ class TextAnalysisSpec extends SparkTestBase {
       (6L, "de", 60L, 40L), (7L, "de", 30L, 20L), (8L, "de", 20L, 50L),
       (9L, "fr", 99L, 5L))
       .toDF("id", "lang", "score", "n_tok")
-    def cut(budgets: Map[String, Long], parts: Int = 0) =
+    def cut(budgets: Map[String, Long]) =
       TextAnalysis.selectTokenBudgetPerGroup(
-        docs.repartition(3), "lang", "score", "n_tok", "id", budgets, parts)
+        docs.repartition(3), "lang", "score", "n_tok", "id", budgets)
         .select($"id", $"cum_tokens").as[(Long, Long)].collect().toMap
     val expected = Map(5L -> 30L, 1L -> 70L, 4L -> 90L, // en budget 100
       6L -> 40L, 7L -> 60L) // de budget 60; fr absent -> id 9 gone
     cut(Map("en" -> 100L, "de" -> 60L)) shouldBe expected
-    // exact same result under any partition count — per-group offsets must
-    // equal the per-group single-window definition even when a group spans
-    // several range partitions
+    // exact same result under any range partition count — per-group
+    // offsets must equal the per-group single-window definition even when a
+    // group spans several range partitions
     for (p <- Seq(1, 2, 7)) {
-      cut(Map("en" -> 100L, "de" -> 60L), parts = p) shouldBe expected
+      withSqlConf(spark, "spark.sql.shuffle.partitions", p.toString) {
+        cut(Map("en" -> 100L, "de" -> 60L)) shouldBe expected
+      }
     }
     // zero budget keeps nothing of that group but leaves the others alone
     cut(Map("en" -> 0L, "de" -> 60L)) shouldBe Map(6L -> 40L, 7L -> 60L)
+  }
+
+  test("token-budget cuts count a null token count as 0, identically at any shuffle partition count") {
+    // every second token count null; scores repeat, so ids break ties
+    val rows = (1 to 30).map { i =>
+      (i.toLong, if (i % 3 == 0) "de" else "en", (i * 7 % 11).toLong,
+        if (i % 2 == 0) None else Some(i.toLong * 3))
+    }
+    val docs = rows.toDF("id", "lang", "score", "n_tok")
+    // plain model: walk each (score DESC, id) order, nulls adding 0
+    def model(rs: Seq[(Long, String, Long, Option[Long])], budget: Long): Map[Long, Long] =
+      rs.sortBy(r => (-r._3, r._1))
+        .scanLeft((0L, 0L)) { case ((_, acc), r) => (r._1, acc + r._4.getOrElse(0L)) }
+        .tail.filter(_._2 <= budget).toMap
+    val budgets = Map("en" -> 100L, "de" -> 60L)
+    val global = model(rows, 150L)
+    val perGroup = rows.groupBy(_._2).toSeq.flatMap { case (g, rs) => model(rs, budgets(g)) }.toMap
+    global.size should (be > 0 and be < rows.size)
+    for (p <- Seq(1, 4, 7, 13)) {
+      withSqlConf(spark, "spark.sql.shuffle.partitions", p.toString) {
+        withClue(s"shuffle partitions=$p") {
+          TextAnalysis.selectTokenBudget(docs.repartition(3), "score", "n_tok", "id", 150L)
+            .select($"id", $"cum_tokens").as[(Long, Long)].collect().toMap shouldBe global
+          TextAnalysis.selectTokenBudgetPerGroup(
+            docs.repartition(3), "lang", "score", "n_tok", "id", budgets)
+            .select($"id", $"cum_tokens").as[(Long, Long)].collect().toMap shouldBe perGroup
+        }
+      }
+    }
   }
 
   test("typicalityTerciles equals the one-window rank/tercile definition") {
