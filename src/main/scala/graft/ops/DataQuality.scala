@@ -252,13 +252,8 @@ object DataQuality {
   def log2Histogram(
       df: DataFrame,
       groupCols: Seq[String],
-      valueCol: String): DataFrame = {
-    val v = col(valueCol).cast("long")
-    df.where(v.isNotNull)
-      .withColumn("bin",
-        when(v <= 0, lit(-1L)).otherwise(length(bin(v)).cast("long") - 1L))
-      .groupBy((groupCols.map(col) :+ col("bin")): _*)
-      .agg(count(lit(1)).as("n"))
+      valueCol: String): DataFrame =
+    log2Cells(df, groupCols, valueCol)
       .withColumn("bin_lo",
         when(col("bin") < 0, lit(null).cast("long"))
           .otherwise(expr("shiftleft(1L, CAST(bin AS INT))")))
@@ -270,6 +265,16 @@ object DataQuality {
             "+ shiftleft(1L, CAST(bin AS INT))")))
       .select((groupCols.map(col) ++ Seq(col("bin"), col("bin_lo"),
         col("bin_hi"), col("n"))): _*)
+
+  /** The mergeable `(group, bin, n)` counts of [[log2Histogram]]. */
+  private[graft] def log2Cells(
+      df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame = {
+    val v = col(valueCol).cast("long")
+    df.where(v.isNotNull)
+      .withColumn("bin",
+        when(v <= 0, lit(-1L)).otherwise(length(bin(v)).cast("long") - 1L))
+      .groupBy((groupCols.map(col) :+ col("bin")): _*)
+      .agg(count(lit(1)).as("n"))
   }
 
   /**

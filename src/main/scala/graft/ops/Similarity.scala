@@ -706,15 +706,19 @@ object Similarity {
       df: DataFrame,
       groupCols: Seq[String],
       vecCol: String,
-      dim: Int): DataFrame = {
-    val packed = df.where(col(vecCol).isNotNull)
+      dim: Int): DataFrame =
+    gramCells(df, groupCols, vecCol, dim).select((groupCols.map(col) :+
+      element_at(col("gram"), 1).as("n") :+
+      slice(col("gram"), 2, dim).as("sums_micro") :+
+      slice(col("gram"), 2 + dim, dim * dim).as("gram_micro")): _*)
+
+  /** The packed `gram = [n | Σx_i | Σx_i·x_j]` aggregate of [[gramSums]]
+    * (mergeable with `gram_merge`); null vectors drop. */
+  private[graft] def gramCells(
+      df: DataFrame, groupCols: Seq[String], vecCol: String, dim: Int): DataFrame =
+    df.where(col(vecCol).isNotNull)
       .groupBy(groupCols.map(col): _*)
-      .agg(graft.functions.functions.gram_matrix(col(vecCol), dim).as("__packed"))
-    packed.select((groupCols.map(col) :+
-      element_at(col("__packed"), 1).as("n") :+
-      slice(col("__packed"), 2, dim).as("sums_micro") :+
-      slice(col("__packed"), 2 + dim, dim * dim).as("gram_micro")): _*)
-  }
+      .agg(graft.functions.functions.gram_matrix(col(vecCol), dim).as("gram"))
 
   /**
    * Finish [[gramSums]] rows into exploded covariance entries: one row

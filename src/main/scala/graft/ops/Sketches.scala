@@ -478,8 +478,10 @@ object Sketches {
    * `order` must be unique within each group (collapse to per-(group,
    * value) rows first, as every caller here does) so the running sums
    * are a pure function of the data, not the shard layout. A null value
-   * adds 0 to the running sums. Sum columns must be DECIMAL or integral
-   * (checked: the scan would truncate a DOUBLE to its integer part);
+   * adds 0 to the running sums and to the totals (a group of only nulls
+   * totals 0), and a null group key is one group like any other key.
+   * Sum columns must be DECIMAL or integral (checked: the scan would
+   * truncate a DOUBLE to its integer part);
    * DECIMAL sources come back DECIMAL(38,0) (the scan accumulates in
    * BigDecimal — exact, no overflow), integral sources come back LONG
    * (so callers must pre-cast to DECIMAL(38,0) themselves when a long
@@ -538,12 +540,19 @@ object Sketches {
     val ranged = Barrier.checkpoint(input.repartitionByRange((gCols ++ order): _*)
       .sortWithinPartitions((gCols ++ order): _*)
       .withColumn("__pid", spark_partition_id()))
-    val partials = ranged.groupBy((gCols :+ col("__pid")): _*)
+    // the offsets meet the scanned rows on (group, shard) with the group
+    // columns packed into ONE struct key: struct equality matches null
+    // fields, so a null key is one group here as in the scan, and the join
+    // stays an equi-join on the offsets' unique key (its size estimate is
+    // then the scanned rows', not their product with the offsets). An
+    // ungrouped scan has no key, so its offset windows stay one partition.
+    val gKey = if (groupCols.isEmpty) Nil else Seq(struct(gCols: _*).as("__gk"))
+    val keys = gKey.map(_ => "__gk") :+ "__pid"
+    val partials = ranged.groupBy((gKey :+ col("__pid")): _*)
       .agg(sum(col(srcs.head)).as(s"__p_${srcs.head}"),
         srcs.tail.map(s => sum(col(s)).as(s"__p_$s")): _*)
-    val wPrev = Window.partitionBy(gCols: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(gCols: _*)
+    val wAll = Window.partitionBy(keys.init.map(col): _*)
+    val wPrev = wAll.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)
     val d380 = DecimalType(38, 0)
     // per-source result type: DECIMAL in -> DECIMAL(38,0) out, integral in
     // -> LONG out (what the former window-sum formulation produced)
@@ -551,10 +560,11 @@ object Sketches {
       case _: DecimalType => d380
       case _              => org.apache.spark.sql.types.LongType
     }
-    val offsets = partials.select((gCols :+ col("__pid")) ++
+    val offsets = partials.select(keys.map(col) ++
       cums.map { case (s, n) =>
         coalesce(sum(col(s"__p_$s")).over(wPrev), lit(0)).cast(d380).as(s"__off_$n") } ++
-      totals.map { case (s, n) => sum(col(s"__p_$s")).over(wAll).cast(outType(s)).as(n) }: _*)
+      totals.map { case (s, n) =>
+        coalesce(sum(col(s"__p_$s")).over(wAll), lit(0)).cast(outType(s)).as(n) }: _*)
     // per-shard linear scan: rows arrive (group, order)-sorted, so group
     // changes are contiguous — reset the accumulators on each new key.
     // Runs over the raw InternalRow stream (round 20; guide §4): the
@@ -629,12 +639,15 @@ object Sketches {
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(extra))
         }
       }
-    val joined = withLocal.join(broadcast(offsets), groupCols :+ "__pid")
-    cums.foldLeft(joined) { case (d, (s, n)) =>
-        d.withColumn(n, (col(s"__off_$n") + col(s"__loc_$n")).cast(outType(s)))
-      }
-      .drop(("__pid" +: (cums.map { case (_, n) => s"__off_$n" } ++
-        cums.map { case (_, n) => s"__loc_$n" })): _*)
+    val joined = withLocal.select(col("*") +: gKey: _*).join(broadcast(offsets), keys)
+    val summed = cums.foldLeft(joined) { case (d, (s, n)) =>
+      d.withColumn(n, (col(s"__off_$n") + col(s"__loc_$n")).cast(outType(s)))
+    }
+    // group columns lead the output: callers' `select("*")` reads this order
+    val scaffold = (groupCols ++ keys ++
+      cums.flatMap { case (_, n) => Seq(s"__off_$n", s"__loc_$n") }).toSet
+    summed.select((gCols ++ summed.columns.filterNot(scaffold)
+      .map(c => col(s"`${c.replace("`", "``")}`"))): _*)
   }
 
   /**

@@ -117,17 +117,18 @@ object Stats {
       df: DataFrame,
       groupCols: Seq[String],
       exposureCol: String,
-      outcomeCol: String): DataFrame = {
-    val e = col(exposureCol)
-    val o = col(outcomeCol)
-    def cell(p: org.apache.spark.sql.Column) =
-      sum(when(p, 1L).otherwise(0L)).cast("DECIMAL(38,0)")
-    chi2FromCells(
-      df.where(e.isNotNull && o.isNotNull)
-        .groupBy(groupCols.map(col): _*)
-        .agg(cell(e && o).as("a"), cell(e && !o).as("b"),
-          cell(!e && o).as("c"), cell(!e && !o).as("d")),
-      groupCols)
+      outcomeCol: String): DataFrame =
+    chi2FromCells(chi2Cells(df, groupCols, col(exposureCol), col(outcomeCol)), groupCols)
+
+  /** The DECIMAL(38,0) `(a, b, c, d)` cells of [[chiSquare2x2]] over two
+    * boolean expressions; rows where either is null drop. */
+  private[graft] def chi2Cells(
+      df: DataFrame, groupCols: Seq[String], e: Column, o: Column): DataFrame = {
+    def cell(p: Column) = sum(when(p, 1L).otherwise(0L)).cast("DECIMAL(38,0)")
+    df.where(e.isNotNull && o.isNotNull)
+      .groupBy(groupCols.map(col): _*)
+      .agg(cell(e && o).as("a"), cell(e && !o).as("b"),
+        cell(!e && o).as("c"), cell(!e && !o).as("d"))
   }
 
   /**
@@ -353,19 +354,6 @@ object Stats {
   }
 
   /**
-   * Exact calibration table for a [0, 1e6]-ppm score against a boolean
-   * outcome — "when the quality classifier says 700k, is the doc good
-   * ~70% of the time?". Equal-width bins over the FIXED ppm domain
-   * (`bin = least(score * bins DIV 1e6, bins - 1)`; fixed edges, not
-   * quantiles, so slices/days re-aggregate bin-for-bin and replay
-   * digit-for-digit). Per (group, bin): `n`, `mean_score_ppm`
-   * (truncated), `pos_rate_ppm` — the reliability-diagram rows. Scores
-   * outside [0, 1e6] are a caller bug: clamped into the edge bins so
-   * mass is conserved (same law as the streaming histogram cells).
-   *
-   * ONE (group, bin) agg, map-side combined; output is bins-sized.
-   */
-  /**
    * The shared fixed-edge bin law `least(score * bins DIV 1e6, bins-1)`
    * clamped at 0, in pure Column API: DECIMAL(38,0) multiply before the
    * divide (an IntegerType score column would overflow a 32-bit
@@ -380,26 +368,29 @@ object Stats {
       floor(col(scorePpmCol).cast("DECIMAL(38,0)") * bins / lit(1000000)),
       lit(0L)), lit(bins - 1L)).cast("long")
 
+  /**
+   * Exact calibration table for a [0, 1e6]-ppm score against a boolean
+   * outcome — "when the quality classifier says 700k, is the doc good
+   * ~70% of the time?". Equal-width bins over the FIXED ppm domain
+   * (`bin = least(score * bins DIV 1e6, bins - 1)`; fixed edges, not
+   * quantiles, so slices/days re-aggregate bin-for-bin and replay
+   * digit-for-digit). Per (group, bin): `n`, `mean_score_ppm`
+   * (truncated), `pos_rate_ppm` — the reliability-diagram rows. Scores
+   * outside [0, 1e6] are a caller bug: clamped into the edge bins so
+   * mass is conserved (same law as the streaming histogram cells).
+   *
+   * [[calibrationFromCells]] over [[calibrationCells]]: the finishing
+   * (group, bin) agg rides the cells' partitioning, so ONE exchange;
+   * output is bins-sized.
+   */
   def calibrationBins(
       df: DataFrame,
       groupCols: Seq[String],
       scorePpmCol: String,
       outcomeCol: String,
-      bins: Int = 10): DataFrame = {
-    require(bins > 0, "calibrationBins needs at least one bin")
-    df.where(col(scorePpmCol).isNotNull && col(outcomeCol).isNotNull)
-      .withColumn("bin", calBin(scorePpmCol, bins))
-      .groupBy((groupCols.map(col) :+ col("bin")): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col(scorePpmCol).cast("DECIMAL(38,0)")).as("__sum_score"),
-        sum(when(col(outcomeCol), 1L).otherwise(0L)).cast("DECIMAL(38,0)").as("__pos"))
-      .withColumn("mean_score_ppm",
-        expr("CAST(__sum_score DIV n AS BIGINT)"))
-      .withColumn("pos_rate_ppm",
-        expr("CAST(__pos * 1000000 DIV n AS BIGINT)"))
-      .select((groupCols.map(col) ++ Seq(col("bin"), col("n"),
-        col("mean_score_ppm"), col("pos_rate_ppm"))): _*)
-  }
+      bins: Int = 10): DataFrame =
+    calibrationFromCells(
+      calibrationCells(df, groupCols, scorePpmCol, outcomeCol, bins), groupCols)
 
   /**
    * The NUMERATOR cells behind [[calibrationBins]] — per (group, bin):
@@ -408,8 +399,8 @@ object Stats {
    * [[calibrationFromCells]]; re-aggregating the truncated rates of
    * [[calibrationBins]] directly would compose truncations). This is
    * what a daily calibration-monitor job should persist, and what the
-   * S22 streaming rollup emits per window. Same fixed-edge bin law and
-   * null hygiene as [[calibrationBins]]. ONE map-side-combined agg.
+   * S22 streaming rollup emits per window. Rows with a null score or
+   * outcome drop. ONE map-side-combined agg.
    */
   def calibrationCells(
       df: DataFrame,
@@ -632,18 +623,26 @@ object Stats {
       df: DataFrame,
       groupCols: Seq[String],
       scorePpmCol: String,
+      outcomeCol: String): DataFrame =
+    brierCells(df, groupCols, scorePpmCol, outcomeCol)
+      .withColumn("brier_micro",
+        expr("CAST(CASE WHEN n = 0 THEN NULL " +
+          "ELSE se DIV (CAST(n AS DECIMAL(38,0)) * 1000000) END AS BIGINT)"))
+      .select((groupCols.map(col) ++ Seq(col("n"), col("brier_micro"))): _*)
+
+  /** The mergeable `(n, se)` numerators of [[brierScore]]:
+    * `se = Σ(score_ppm − y·1e6)²` in DECIMAL(38,0). */
+  private[graft] def brierCells(
+      df: DataFrame,
+      groupCols: Seq[String],
+      scorePpmCol: String,
       outcomeCol: String): DataFrame = {
     val d38 = "DECIMAL(38,0)"
     val err = (col(scorePpmCol).cast(d38) -
       when(col(outcomeCol), lit(1000000L)).otherwise(lit(0L)).cast(d38))
     df.where(col(scorePpmCol).isNotNull && col(outcomeCol).isNotNull)
       .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).cast(d38).as("__n"), sum(err * err).as("__se"))
-      .withColumn("n", col("__n").cast("long"))
-      .withColumn("brier_micro",
-        expr("CAST(CASE WHEN __n = 0 THEN NULL " +
-          "ELSE __se DIV (__n * 1000000) END AS BIGINT)"))
-      .select((groupCols.map(col) ++ Seq(col("n"), col("brier_micro"))): _*)
+      .agg(count(lit(1)).as("n"), sum(err * err).as("se"))
   }
 
   /**
@@ -961,15 +960,21 @@ object Stats {
       df: DataFrame,
       groupCols: Seq[String],
       categoryCol: String,
+      valueCol: String): DataFrame =
+    etaSquaredFromCells(etaCells(df, groupCols, categoryCol, valueCol), groupCols)
+
+  /** The DECIMAL(38,0) `(n, s, ss)` cells of [[etaSquared]] per (group,
+    * category); null values and categories drop. */
+  private[graft] def etaCells(
+      df: DataFrame,
+      groupCols: Seq[String],
+      categoryCol: String,
       valueCol: String): DataFrame = {
     val d38 = "DECIMAL(38,0)"
     val v = col(valueCol).cast(d38)
-    etaSquaredFromCells(
-      df.where(col(valueCol).isNotNull && col(categoryCol).isNotNull)
-        .groupBy((groupCols.map(col) :+ col(categoryCol)): _*)
-        .agg(count(lit(1)).cast(d38).as("n"), sum(v).as("s"),
-          sum(v * v).as("ss")),
-      groupCols)
+    df.where(col(valueCol).isNotNull && col(categoryCol).isNotNull)
+      .groupBy((groupCols.map(col) :+ col(categoryCol)): _*)
+      .agg(count(lit(1)).cast(d38).as("n"), sum(v).as("s"), sum(v * v).as("ss"))
   }
 
   /** Finish [[etaSquared]] from per-(group, category) `(n, s, ss)` sum
@@ -1620,20 +1625,13 @@ object Stats {
       loPct: Int = 5,
       hiPct: Int = 95,
       salt: String = "boot"): DataFrame = {
-    require(b >= 8 && b <= 256, s"replicates must be in [8,256], got $b")
     require(loPct >= 1 && hiPct <= 100 && loPct < hiPct,
       s"need 1 <= loPct < hiPct <= 100, got $loPct/$hiPct")
     val rows = df.select(col(groupCol), col(idCol), col(valueCol))
       .where(col(valueCol).isNotNull)
-    val reps = rows
-      .withColumn("__wa", poissonWeightArray(col(idCol), b, salt))
-      .select(col(groupCol), col(valueCol),
-        posexplode(col("__wa")).as(Seq("rep", "__w")))
-      .groupBy(col(groupCol), col("rep"))
-      .agg(sum(col("__w")).cast("DECIMAL(38,0)").as("__n"),
-        sum(col("__w") * col(valueCol)).cast("DECIMAL(38,0)").as("__s"))
+    val reps = bootstrapCells(rows, Seq(groupCol), idCol, valueCol, b, salt)
       .withColumn("__mean",
-        expr("CAST(CASE WHEN __n > 0 THEN __s * 1000000 DIV __n END AS BIGINT)"))
+        expr("CAST(CASE WHEN nw > 0 THEN s * 1000000 DIV nw END AS BIGINT)"))
       .where(col("__mean").isNotNull)
     val ci = graft.ops.Sketches.exactPercentiles(
         reps, groupCol, "__mean", Seq(loPct, hiPct))
@@ -1645,6 +1643,26 @@ object Stats {
         expr(s"CAST(sum(CAST($valueCol AS DECIMAL(38,0))) * 1000000 " +
           "DIV count(1) AS BIGINT)").as("mean_micro"))
     point.join(ci, Seq(groupCol))
+  }
+
+  /** The per-(group, replicate) DECIMAL(38,0) weighted sums `(nw, s)` of
+    * [[poissonBootstrapCI]], weights from [[poissonWeightArray]]; null
+    * values drop. */
+  private[graft] def bootstrapCells(
+      df: DataFrame,
+      groupCols: Seq[String],
+      idCol: String,
+      valueCol: String,
+      b: Int,
+      salt: String): DataFrame = {
+    require(b >= 8 && b <= 256, s"replicates must be in [8,256], got $b")
+    val g = groupCols.map(col)
+    df.where(col(valueCol).isNotNull)
+      .withColumn("__wa", poissonWeightArray(col(idCol), b, salt))
+      .select((g :+ col(valueCol) :+ posexplode(col("__wa")).as(Seq("rep", "__w"))): _*)
+      .groupBy((g :+ col("rep")): _*)
+      .agg(sum(col("__w")).cast("DECIMAL(38,0)").as("nw"),
+        sum(col("__w") * col(valueCol)).cast("DECIMAL(38,0)").as("s"))
   }
 
   /**

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -56,19 +56,29 @@ object EventStreams {
   def readEvents(spark: SparkSession, path: String, format: String = "parquet"): DataFrame =
     spark.readStream.schema(eventSchema).format(format).load(path)
 
-  /** Shared scaffold: watermark + tumbling window per event type, then `aggs`. */
-  private def windowedAgg(
+  /**
+   * The one window law of every rollup below: watermark `ts`, add the
+   * tumbling `window` column, hand that frame and `"window" +: keys` to a
+   * cells function — a batch cells operator, so a window's cells ARE the
+   * batch cells of its rows, or [[aggCells]] — and emit `window.start` as
+   * `window_start`. Cells from disjoint windows add up like cells from
+   * disjoint batch slices.
+   */
+  private def windowed(
       events: DataFrame,
       windowLength: String,
       watermark: String,
-      aggs: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val agged = events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"))
-      .agg(aggs.head, aggs.tail: _*)
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
+      keys: Seq[String])(cells: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val out = cells(
+      events.withWatermark("ts", watermark).withColumn("window", window(col("ts"), windowLength)),
+      "window" +: keys)
+    out.select(col("window.start").as("window_start") +:
+      out.columns.filterNot(_ == "window").map(col): _*)
   }
+
+  /** The cells function of a rollup with no batch twin: one aggregate list. */
+  private def aggCells(aggs: Column*)(df: DataFrame, groupCols: Seq[String]): DataFrame =
+    df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
 
   /**
    * Tumbling-window rollup per event type. With Append output the row for a
@@ -79,8 +89,8 @@ object EventStreams {
       events: DataFrame,
       windowLength: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame =
-    windowedAgg(events, windowLength, watermark,
-      Seq(count(lit(1)).as("n"), sum(col("value")).as("total_value")))
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      aggCells(count(lit(1)).as("n"), sum(col("value")).as("total_value")))
 
   /**
    * Windowed unique-user rollup with a HyperLogLog++ sketch
@@ -96,8 +106,8 @@ object EventStreams {
       windowLength: String = "1 hour",
       watermark: String = "10 minutes",
       rsd: Double = 0.05): DataFrame =
-    windowedAgg(events, windowLength, watermark,
-      Seq(count(lit(1)).as("n"), approx_count_distinct(col("user_id"), rsd).as("approx_users")))
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      aggCells(count(lit(1)).as("n"), approx_count_distinct(col("user_id"), rsd).as("approx_users")))
 
   /**
    * Windowed value-quantile rollup with a mergeable quantile sketch
@@ -115,66 +125,46 @@ object EventStreams {
       watermark: String = "10 minutes",
       quantiles: Seq[Double] = Seq(0.5, 0.9, 0.99),
       accuracy: Int = 1000): DataFrame =
-    windowedAgg(events, windowLength, watermark,
-      Seq(count(lit(1)).as("n"),
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      aggCells(count(lit(1)).as("n"),
         percentile_approx(col("value"),
           array(quantiles.map(lit): _*), lit(accuracy)).as("value_quantiles")))
 
   /**
-   * S19 — windowed OLS trend rollup (the streaming twin of
-   * [[graft.ops.Stats.olsSums]]): per (window, event_type) the six
-   * DECIMAL(38,0) sufficient statistics `(n, Σx, Σy, Σxy, Σx², Σy²)` of
-   * `value` against epoch-second time, with x kept GLOBAL (seconds since
-   * epoch, not window-relative) so emitted window rows merge across any
-   * horizon ([[graft.ops.Stats.mergeOlsSums]]) and finish into the exact
-   * fit over the union ([[graft.ops.Stats.olsFromSums]]) — "is this
-   * metric drifting, per hour and per month" from ONE pass of bounded
-   * per-window state (seven numbers), the same daily→all-time shape as
-   * the sketch rollups. Fractional `value`s truncate under the decimal
-   * cast exactly as the batch operator's cast does, so batch and stream
-   * sums are bit-identical by construction. Rows with null `ts` or
-   * `value` are dropped BEFORE aggregation to match the batch
-   * operator's `where(x.isNotNull && y.isNotNull)` — otherwise `n`
-   * would count rows the sums skip and the merged fit would diverge.
+   * S19 — windowed OLS trend rollup: per (window, event_type) the
+   * [[graft.ops.Stats.olsSums]] of `value` against epoch-second time,
+   * with x kept GLOBAL (seconds since epoch, not window-relative) so
+   * emitted window rows merge across any horizon
+   * ([[graft.ops.Stats.mergeOlsSums]]) and finish into the exact fit over
+   * the union ([[graft.ops.Stats.olsFromSums]]) — "is this metric
+   * drifting, per hour and per month" from seven numbers of state per
+   * window.
    */
   def olsTrendRollup(
       events: DataFrame,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val x = unix_timestamp(col("ts")).cast(d38)
-    val y = col("value").cast(d38)
-    windowedAgg(events.where(col("ts").isNotNull && col("value").isNotNull),
-      windowLength, watermark,
-      Seq(count(lit(1)).cast(d38).as("n"),
-        sum(x).as("sx"), sum(y).as("sy"),
-        sum(x * y).as("sxy"), sum(x * x).as("sxx"), sum(y * y).as("syy")))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq("event_type")) { (d, g) =>
+      graft.ops.Stats.olsSums(d.withColumn("__x", unix_timestamp(col("ts"))), g, "__x", "value")
+    }
 
   /**
-   * S20 — windowed A/B cells rollup (the stream twin of
-   * [[graft.ops.Stats.chiSquare2x2]]): per (window, event_type) the four
-   * 2x2 contingency cells of `exposureExpr` x `outcomeExpr` (SQL boolean
-   * expressions evaluated per row — fused into the scan, no state beyond
-   * the four counters per window). Cells ADD across windows, so emitted
-   * rows re-aggregate to any horizon and finish into the exact staged
-   * chi-squared/lift via [[graft.ops.Stats.chi2FromCells]] — live
-   * experiment monitoring per hour AND per campaign from one pass.
+   * S20 — windowed A/B cells rollup: per (window, event_type) the
+   * DECIMAL(38,0) 2x2 cells of [[graft.ops.Stats.chiSquare2x2]] over
+   * `exposureExpr` x `outcomeExpr` (SQL boolean expressions evaluated
+   * per row). Cells ADD across windows, so emitted rows re-aggregate to
+   * any horizon and finish into the exact staged chi-squared/lift via
+   * [[graft.ops.Stats.chi2FromCells]] — live experiment monitoring per
+   * hour AND per campaign from one pass.
    */
   def abCellsRollup(
       events: DataFrame,
       exposureExpr: String,
       outcomeExpr: String,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    def cell(p: org.apache.spark.sql.Column) =
-      sum(when(p, 1L).otherwise(0L))
-    val e = expr(exposureExpr)
-    val o = expr(outcomeExpr)
-    windowedAgg(events.where(e.isNotNull && o.isNotNull), windowLength, watermark,
-      Seq(cell(e && o).as("a"), cell(e && !o).as("b"),
-        cell(!e && o).as("c"), cell(!e && !o).as("d")))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      graft.ops.Stats.chi2Cells(_, _, expr(exposureExpr), expr(outcomeExpr)))
 
   /**
    * Windowed HEAVY-HITTERS rollup with the mergeable Misra-Gries summary
@@ -195,8 +185,8 @@ object EventStreams {
       windowLength: String = "1 hour",
       watermark: String = "10 minutes",
       capacity: Int = 256): DataFrame =
-    windowedAgg(events, windowLength, watermark,
-      Seq(count(lit(1)).as("n"),
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      aggCells(count(lit(1)).as("n"),
         graft.functions.functions
           .misra_gries(col(keyCol).cast("string"), capacity).as("hh_summary")))
 
@@ -219,8 +209,8 @@ object EventStreams {
       watermark: String = "10 minutes",
       width: Int = 1024,
       depth: Int = 4): DataFrame =
-    windowedAgg(events, windowLength, watermark,
-      Seq(count(lit(1)).as("n"),
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      aggCells(count(lit(1)).as("n"),
         graft.functions.functions
           .count_min(col(keyCol).cast("string"), width, depth).as("cms")))
 
@@ -249,63 +239,46 @@ object EventStreams {
       watermark: String = "10 minutes"): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     require(bins >= 1, s"bins must be >= 1, got $bins")
-    val v = col(valueCol).cast("long")
     val bin = least(greatest(
       expr(s"(CAST($valueCol AS BIGINT) - ${lo}L) DIV ${width}L"), lit(0L)),
       lit((bins - 1).toLong))
-    val agged = events
-      .where(v.isNotNull)
-      .withColumn("bin", bin)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
+    windowed(events, windowLength, watermark, Seq("event_type")) { (d, g) =>
+      aggCells(count(lit(1)).as("n"))(
+        d.where(col(valueCol).cast("long").isNotNull).withColumn("bin", bin), g :+ "bin")
+    }
   }
 
   /**
-   * S26 — windowed POWER-OF-TWO histogram cells, the streaming twin of
-   * [[graft.ops.DataQuality.log2Histogram]] (L149) for LONG-TAILED value
-   * streams: per (window, event_type, bin) the exact count with
-   * `bin = bit-length(v) − 1` (non-positive values in bin −1, nulls
-   * dropped) — the bins are a pure function of the VALUE, never of
-   * observed min/max, so unlike S21's fixed-edge cells nothing has to be
-   * tuned up front and a spend column that grows 100× next month still
-   * lands in comparable bins. Cells ADD across windows/partitions/days
-   * (bit-identical to a batch log2Histogram over the same rows) and
-   * finish against any reference through [[graft.ops.Drift.histogramDrift]]
-   * or [[graft.ops.Drift.tvFromKx2Cells]]; at most 65 counters per
+   * S26 — windowed POWER-OF-TWO histogram cells: per (window, event_type,
+   * bin) the counts of [[graft.ops.DataQuality.log2Histogram]]
+   * (`bin = bit-length(v) − 1`, non-positive values in bin −1) for
+   * LONG-TAILED value streams — the bins are a pure function of the
+   * VALUE, never of observed min/max, so unlike S21's fixed-edge cells
+   * nothing has to be tuned up front and a spend column that grows 100×
+   * next month still lands in comparable bins. Cells ADD across
+   * windows/partitions/days and finish against any reference through
+   * [[graft.ops.Drift.histogramDrift]] or
+   * [[graft.ops.Drift.tvFromKx2Cells]]; at most 65 counters per
    * (window, type).
    */
   def log2CellsRollup(
       events: DataFrame,
       valueCol: String = "value",
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val v = col(valueCol).cast("long")
-    val agged = events
-      .where(col("ts").isNotNull && v.isNotNull)
-      .withColumn("bin",
-        when(v <= 0, lit(-1L)).otherwise(length(bin(v)).cast("long") - 1L))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      graft.ops.DataQuality.log2Cells(_, _, valueCol))
 
   /**
    * S22 — windowed CALIBRATION cells, the streaming feed of the
    * classifier-calibration gate ([[graft.ops.Stats.calibrationFromCells]]
    * → [[graft.ops.Stats.eceFromBins]]): per (window, event_type, bin) the
-   * exact NUMERATORS `(n, sum_score, pos)` over the fixed [0, 1e6]-ppm
-   * bin edges — numerators, not rates, because numerators merge
-   * digit-for-digit across windows and days while truncated rates would
-   * compose truncations. Same bin-clamp and null hygiene as the batch
-   * [[graft.ops.Stats.calibrationCells]] (rows with null ts, score or
-   * outcome are skipped on BOTH sides, so stream cells re-aggregate to
-   * the batch bins bit-identically). At most `bins` counters per
-   * (window, type) — a 100 TB/day stream reduces to KBs of state.
+   * [[graft.ops.Stats.calibrationCells]] numerators `(n, sum_score, pos)`
+   * over the fixed [0, 1e6]-ppm bin edges — numerators, not rates,
+   * because numerators merge digit-for-digit across windows and days
+   * while truncated rates would compose truncations. At most `bins`
+   * counters per (window, type) — a 100 TB/day stream reduces to KBs of
+   * state.
    */
   def calibrationCellsRollup(
       events: DataFrame,
@@ -313,98 +286,60 @@ object EventStreams {
       outcomeCol: String,
       bins: Int = 10,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    require(bins > 0, "calibrationCellsRollup needs at least one bin")
-    val bin = graft.ops.Stats.calBin(scorePpmCol, bins)
-    val agged = events
-      .where(col("ts").isNotNull && col(scorePpmCol).isNotNull &&
-        col(outcomeCol).isNotNull)
-      .withColumn("bin", bin)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n"),
-        sum(col(scorePpmCol).cast("DECIMAL(38,0)")).as("sum_score"),
-        sum(when(col(outcomeCol), 1L).otherwise(0L))
-          .cast("DECIMAL(38,0)").as("pos"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      graft.ops.Stats.calibrationCells(_, _, scorePpmCol, outcomeCol, bins))
 
   /**
-   * S27 — windowed BRIER numerators, the streaming twin of
-   * [[graft.ops.Stats.brierScore]] (L164): per (window, event_type) the
-   * exact pair `(n, se)` with `se = Σ(score_ppm − y·1e6)²` in
-   * DECIMAL(38,0) — numerators, not the finished score, because
-   * numerators ADD digit-for-digit across windows/days while truncated
-   * scores would compose truncations (the S22 discipline); any horizon
-   * finishes with the batch division `se DIV (n·1e6)`. Same null
-   * hygiene as batch (null ts/score/outcome rows skipped), TWO longs of
-   * state per (window, type) — proper-scoring-rule monitoring of a live
-   * classifier at any stream volume.
+   * S27 — windowed BRIER numerators: per (window, event_type) the
+   * `(n, se)` cells of [[graft.ops.Stats.brierScore]], with
+   * `se = Σ(score_ppm − y·1e6)²` in DECIMAL(38,0) — numerators, not the
+   * finished score, because numerators ADD digit-for-digit across
+   * windows/days (the S22 discipline); any horizon finishes with the
+   * batch division `se DIV (n·1e6)`. Two numbers of state per
+   * (window, type).
    */
   def brierCellsRollup(
       events: DataFrame,
       scorePpmCol: String,
       outcomeCol: String,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val d38 = "DECIMAL(38,0)"
-    val err = (col(scorePpmCol).cast(d38) -
-      when(col(outcomeCol), lit(1000000L)).otherwise(lit(0L)).cast(d38))
-    val agged = events
-      .where(col("ts").isNotNull && col(scorePpmCol).isNotNull &&
-        col(outcomeCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(err * err).as("se"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      graft.ops.Stats.brierCells(_, _, scorePpmCol, outcomeCol))
 
   /**
    * S23 — windowed k×2 CELLS, the streaming feed of the CATEGORICAL
    * drift gate ([[graft.ops.Drift.chi2FromKx2Cells]], the finisher
-   * behind `category_drift`): per (window, category) the exact
-   * two-sample counts `(a, b)` with `inA` labeling each event's sample
-   * (deploy ring, cohort, traffic split; rows with null `inA` or null
-   * `ts` are skipped, null categories count as a category — the batch
-   * [[graft.ops.Drift.kx2Cells]] law). Counts ADD per category, so
-   * emitted windows re-aggregate to any horizon and finish to the exact
-   * staged chi-squared — the same windowed-merge treatment the numeric
-   * suite gets from S21's histogram cells, for the event-type/language/
-   * source MIX instead of a value distribution. State per window is one
-   * `(a, b)` pair per live category.
+   * behind `category_drift`): per (window, category) the
+   * [[graft.ops.Drift.kx2Cells]] two-sample counts `(a, b)`, with `inA`
+   * labeling each event's sample (deploy ring, cohort, traffic split).
+   * Counts ADD per category, so emitted windows re-aggregate to any
+   * horizon and finish to the exact staged chi-squared — the windowed
+   * treatment S21 gives a value distribution, for the event-type/
+   * language/source MIX. State per window is one `(a, b)` pair per live
+   * category.
    */
   def kx2CellsRollup(
       events: DataFrame,
       categoryCol: String = "event_type",
-      inA: org.apache.spark.sql.Column = col("user_id") % 2 === 0,
+      inA: Column = col("user_id") % 2 === 0,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val agged = events
-      .where(col("ts").isNotNull && inA.isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(categoryCol))
-      .agg(
-        sum(when(inA, 1L).otherwise(0L)).as("a"),
-        sum(when(!inA, 1L).otherwise(0L)).as("b"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Nil)(
+      graft.ops.Drift.kx2Cells(_, _, categoryCol, inA))
 
   /**
-   * S24 — windowed GRAM-MATRIX rollup over an embedding stream, the
-   * streaming twin of [[graft.ops.Similarity.gramSums]]: per
+   * S24 — windowed GRAM-MATRIX rollup over an embedding stream: per
    * (window, label) the packed `[n | Σx_i | Σx_i·x_j]` micro-unit
-   * summary ([[graft.functions.GramMatrix]] — per-row truncate then
-   * exact long accumulate, so cells are a pure function of the vector
-   * multiset). Summaries merge EXACTLY (`gram_merge` element-wise add)
-   * across windows, partitions and days, so hourly emissions re-roll to
-   * the all-time covariance/PCA statistics bit-identically to a batch
-   * gram over the union — live embedding-drift and whitening-stats
-   * maintenance from `1 + d + d²` longs of state per (window, label),
-   * however many vectors flow through. Null vectors are skipped;
-   * wrong-dimension vectors fail loudly (a silent skip would bias the
+   * aggregate behind [[graft.ops.Similarity.gramSums]]
+   * ([[graft.functions.GramMatrix]] — per-row truncate then exact long
+   * accumulate, so cells are a pure function of the vector multiset).
+   * Summaries merge EXACTLY (`gram_merge` element-wise add) across
+   * windows, partitions and days, so hourly emissions re-roll to the
+   * all-time covariance/PCA statistics bit-identically to a batch gram
+   * over the union, from `1 + d + d²` longs of state per (window, label).
+   * Wrong-dimension vectors fail loudly (a silent skip would bias the
    * statistics).
    */
   def gramCellsRollup(
@@ -413,29 +348,20 @@ object EventStreams {
       labelCol: String = "label",
       dim: Int = 64,
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val agged = vecs
-      .where(col("ts").isNotNull && col(vecCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(labelCol))
-      .agg(graft.functions.functions.gram_matrix(col(vecCol), dim).as("gram"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(vecs, windowLength, watermark, Seq(labelCol))(
+      graft.ops.Similarity.gramCells(_, _, vecCol, dim))
 
   /**
-   * S25 — windowed KMV SET-sketch rollup, the streaming twin of
-   * [[graft.ops.Sketches.kmvSetSketch]]: per (window, event_type) the
-   * `k` smallest distinct `md5(key)` hashes
-   * ([[graft.functions.BottomKDistinct]] — dedup inside the O(k)
-   * buffer, the only way a per-window DISTINCT sample is expressible in
-   * a streaming aggregation). Emitted window sketches merge EXACTLY
-   * ([[graft.ops.Sketches.reRollupKmvSetSketch]]: bottom-k-distinct of
-   * a union lives inside the union of bottom-k-distincts) to any
-   * horizon, then answer audience INTERSECTION/Jaccard between types or
-   * days via [[graft.ops.Sketches.kmvSetOps]] — the set-overlap
-   * question HLL's distinct counter (S2) cannot, from k strings of
-   * state per (window, type). Null keys are skipped (the batch law).
+   * S25 — windowed KMV SET-sketch rollup: per (window, event_type) the
+   * [[graft.ops.Sketches.kmvSetSketch]] of `keyCol` — the `k` smallest
+   * distinct `md5(key)` hashes ([[graft.functions.BottomKDistinct]],
+   * dedup inside the O(k) buffer). Emitted window sketches merge EXACTLY
+   * ([[graft.ops.Sketches.reRollupKmvSetSketch]]) to any horizon, then
+   * answer audience INTERSECTION/Jaccard between types or days via
+   * [[graft.ops.Sketches.kmvSetOps]] — the set-overlap question HLL's
+   * distinct counter (S2) cannot, from k strings of state per
+   * (window, type).
    */
   def kmvSetCellsRollup(
       events: DataFrame,
@@ -443,9 +369,8 @@ object EventStreams {
       windowLength: String = "1 hour",
       watermark: String = "10 minutes",
       k: Int = 128): DataFrame =
-    windowedAgg(events.where(col(keyCol).isNotNull), windowLength, watermark,
-      Seq(graft.functions.functions
-        .bottom_k_distinct(md5(col(keyCol).cast("string")), k).as("kmv")))
+    windowed(events, windowLength, watermark, Seq("event_type"))(
+      graft.ops.Sketches.kmvSetSketch(_, _, keyCol, k))
 
   /**
    * S28 — windowed CONFUSION-cells rollup, the streaming twin of the
@@ -457,35 +382,30 @@ object EventStreams {
    * bit-identically to a batch count over the union — live per-class
    * precision/recall/F1 monitoring from one long of state per live
    * (window, true, pred) cell, however many predictions flow through.
-   * Null labels on either side drop (the batch law: an unlabeled or
-   * unscored row carries no confusion information).
+   * Null labels on either side drop (an unlabeled or unscored row
+   * carries no confusion information).
    */
   def confusionCellsRollup(
       scored: DataFrame,
       trueCol: String = "label",
       predCol: String = "pred",
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val agged = scored
-      .where(col("ts").isNotNull && col(trueCol).isNotNull && col(predCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(trueCol), col(predCol))
-      .agg(count(lit(1)).as("n"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(scored, windowLength, watermark, Seq(trueCol, predCol)) { (d, g) =>
+      aggCells(count(lit(1)).as("n"))(
+        d.where(col(trueCol).isNotNull && col(predCol).isNotNull), g)
+    }
 
   /**
-   * S29 — windowed VARIANCE-DECOMPOSITION cells, the streaming twin of
-   * [[graft.ops.Stats.etaSquared]]'s feed: per (window, group, category)
-   * the exact `(n, s, ss)` sum triple in DECIMAL(38,0) — sufficient
-   * statistics, not the finished ratio, so cells ADD element-wise across
-   * windows/partitions/days (the S22/S27 numerator discipline) and any
-   * horizon finishes through [[graft.ops.Stats.etaSquaredFromCells]]
-   * bit-identically to a batch η² over the union: live seasonality-
-   * strength / feature-association monitoring from THREE longs of state
-   * per (window, group, category). Null values/categories drop (the
-   * batch law). `valueCol` must be integral (cents, counts — the
+   * S29 — windowed VARIANCE-DECOMPOSITION cells: per (window, group,
+   * category) the DECIMAL(38,0) `(n, s, ss)` sum triple behind
+   * [[graft.ops.Stats.etaSquared]] — sufficient statistics, not the
+   * finished ratio, so cells ADD element-wise across windows/partitions/
+   * days (the S22/S27 numerator discipline) and any horizon finishes
+   * through [[graft.ops.Stats.etaSquaredFromCells]] bit-identically to a
+   * batch η² over the union: live seasonality-strength / feature-
+   * association monitoring from THREE numbers of state per (window,
+   * group, category). `valueCol` must be integral (cents, counts — the
    * exactness contract).
    */
   def etaCellsRollup(
@@ -494,26 +414,15 @@ object EventStreams {
       categoryCol: String = "category",
       valueCol: String = "value_units",
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val d38 = "DECIMAL(38,0)"
-    val v = col(valueCol).cast(d38)
-    val agged = events
-      .where(col("ts").isNotNull && col(valueCol).isNotNull &&
-        col(categoryCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(groupCol), col(categoryCol))
-      .agg(count(lit(1)).cast(d38).as("n"), sum(v).as("s"), sum(v * v).as("ss"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq(groupCol))(
+      graft.ops.Stats.etaCells(_, _, categoryCol, valueCol))
 
   /**
-   * S30 — windowed PREFERENCE cells, the streaming twin of
-   * [[graft.ops.Retrieval.preferenceCells]]: per (window, canonical
-   * pair) the exact `(wins_lo, wins_hi, ties)` judgment counts from a
-   * live preference/judgment stream (`itemA, itemB, winner`; winner
-   * null = tie, a winner matching neither item counts as a tie, self-
-   * pairs and null items drop — the batch law verbatim). Cells ADD per
+   * S30 — windowed PREFERENCE cells: per (window, canonical pair) the
+   * [[graft.ops.Retrieval.preferenceCells]] judgment counts
+   * `(lo, hi, wins_lo, wins_hi, ties)` of a live preference/judgment
+   * stream (`itemA, itemB, winner`; winner null = tie). Cells ADD per
    * pair across windows/days, so any horizon finishes through
    * [[graft.ops.Retrieval.copelandFromCells]] bit-identically to a
    * batch leaderboard over the union — a LIVE RLHF preference
@@ -525,32 +434,20 @@ object EventStreams {
       itemBCol: String = "item_b",
       winnerCol: String = "winner",
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    val (a, b, w) = (col(itemACol), col(itemBCol), col(winnerCol))
-    val agged = judgments
-      .where(col("ts").isNotNull && a.isNotNull && b.isNotNull && a =!= b)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength),
-        least(a, b).as("lo"), greatest(a, b).as("hi"))
-      .agg(
-        sum(when(w === least(a, b), 1L).otherwise(0L)).as("wins_lo"),
-        sum(when(w === greatest(a, b), 1L).otherwise(0L)).as("wins_hi"),
-        sum(when(w.isNull || (w =!= a && w =!= b), 1L).otherwise(0L)).as("ties"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(judgments, windowLength, watermark, Nil)(
+      graft.ops.Retrieval.preferenceCells(_, _, itemACol, itemBCol, winnerCol))
 
   /**
-   * S31 — windowed POISSON-BOOTSTRAP cells, the streaming twin of
-   * [[graft.ops.Stats.poissonBootstrapCI]]'s feed: per (window, group,
-   * replicate) the exact `(nw, s)` weighted sums in DECIMAL(38,0), the
-   * replicate weights drawn by [[graft.ops.Stats.poissonWeightArray]]
-   * (16-bit md5 slices through the fixed λ=1 inverse-CDF table) — a pure
-   * function of the ids, so cells ADD element-wise across windows/days
-   * and any horizon finishes to replicate means (then the nearest-rank
-   * CI band) bit-identically to a batch bootstrap over the union: LIVE
+   * S31 — windowed POISSON-BOOTSTRAP cells: per (window, group,
+   * replicate) the DECIMAL(38,0) `(nw, s)` weighted sums behind
+   * [[graft.ops.Stats.poissonBootstrapCI]], the replicate weights drawn
+   * by [[graft.ops.Stats.poissonWeightArray]] — a pure function of the
+   * ids, so cells ADD element-wise across windows/days and any horizon
+   * finishes to replicate means (then the nearest-rank CI band)
+   * bit-identically to a batch bootstrap over the union: LIVE
    * confidence intervals on a streaming metric from `2·b` decimals of
-   * state per (window, group). Null values drop (the batch law).
+   * state per (window, group).
    */
   def bootstrapCellsRollup(
       events: DataFrame,
@@ -560,21 +457,9 @@ object EventStreams {
       b: Int = 32,
       salt: String = "boot",
       windowLength: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame = {
-    require(b >= 8 && b <= 256, s"replicates must be in [8,256], got $b")
-    val d38 = "DECIMAL(38,0)"
-    val agged = events
-      .where(col("ts").isNotNull && col(valueCol).isNotNull)
-      .withColumn("__wa", graft.ops.Stats.poissonWeightArray(col(idCol), b, salt))
-      .select(col("ts"), col(groupCol), col(valueCol),
-        posexplode(col("__wa")).as(Seq("rep", "__w")))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(groupCol), col("rep"))
-      .agg(sum(col("__w")).cast(d38).as("nw"),
-        sum(col("__w") * col(valueCol)).cast(d38).as("s"))
-    agged.select(col("window.start").as("window_start") +:
-      agged.columns.filterNot(_ == "window").map(col): _*)
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(events, windowLength, watermark, Seq(groupCol))(
+      graft.ops.Stats.bootstrapCells(_, _, idCol, valueCol, b, salt))
 
   /**
    * Streaming exact dedup on `idCol`: duplicates arriving within the

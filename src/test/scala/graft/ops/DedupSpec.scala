@@ -296,6 +296,19 @@ class DedupSpec extends SparkTestBase {
     composed.orderBy("id").collect() shouldBe native.orderBy("id").collect()
   }
 
+  test("simhash64 native kernel is bit-identical to its composed specification") {
+    val texts = Seq[(Long, Option[String])](
+      (1L, None),
+      (2L, Some("")),
+      (3L, Some("word")),
+      (4L, Some("spam spam spam spam eggs spam")),
+      (5L, Some("深度学习模型 需要 高质量的数据 🙂🚀 emoji ✨ mixed text")),
+      (6L, Some(Seq.fill(40)(base).mkString(" "))))
+    val df = texts.toDF("id", "text")
+    df.select($"id", Dedup.simhash64Composed($"text")).orderBy("id").collect() shouldBe
+      df.select($"id", Dedup.simhash64($"text", scriptAware = false)).orderBy("id").collect()
+  }
+
   test("unicode_normalize folds equivalent text to one byte form") {
     import graft.functions.functions.unicode_normalize
     val df = Seq(

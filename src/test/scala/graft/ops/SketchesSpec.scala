@@ -499,6 +499,22 @@ class SketchesSpec extends SparkTestBase {
     }
   }
 
+  test("rangedCumSums keeps null group keys and totals an all-null group to 0") {
+    // a null key is one group in the scan, the partials, the offsets and
+    // the offsets join, so its rows keep their running sums
+    val df = Seq((Option("a"), 1L, Option(1L)), (None, 2L, None), (None, 3L, None),
+      (Option("a"), 4L, Option(2L))).toDF("g", "v", "x").repartition(3)
+    val out = Sketches.rangedCumSums(df, Seq("g"), Seq($"v"),
+      cums = Seq("x" -> "c"), totals = Seq("x" -> "t"))
+    out.columns.toSeq shouldBe Seq("g", "v", "x", "t", "c")
+    out.select($"g", $"v", $"c", $"t").as[(Option[String], Long, Long, Long)]
+      .collect().sortBy(_._2) shouldBe Array(
+        (Some("a"), 1L, 1L, 3L), (None, 2L, 0L, 0L), (None, 3L, 0L, 0L), (Some("a"), 4L, 3L, 3L))
+    TextAnalysis.withGroupRank(df, "rk", Seq("g"), $"v")
+      .select($"v", $"rk").as[(Long, Long)].collect().toMap shouldBe
+      Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L)
+  }
+
   test("rangedCumSums with empty group columns shards a single global order") {
     val df = (0 until 1000).map(i => (i.toLong, 1L)).toDF("v", "one").repartition(7)
     val out = Sketches.rangedCumSums(df, Seq.empty, Seq($"v"),

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.testkit.SourceScan.{codeLines, sourceRoot}
 import graft.testkit.SparkTestBase
 
 /** Embedding-bearing stream row for the S15 semantic-dedup test. */
@@ -1288,5 +1289,63 @@ class EventStreamsSpec extends SparkTestBase {
     // nearest-rank 5/95 band over the 16 merged replicate means
     means(math.max(1, (means.length * 5 + 99) / 100) - 1) shouldBe batch._1
     means((means.length * 95 + 99) / 100 - 1) shouldBe batch._2
+  }
+
+  test("every rollup windows through the one helper: no hand-written groupBy(window(") {
+    val file = sourceRoot.resolve("graft/streaming/EventStreams.scala").toString
+    def sites(code: String) = codeLines(java.util.regex.Pattern.quote(code).r)
+      .filter(_._1.startsWith(file + ":"))
+    withClue(sites("window(").mkString("\n")) {
+      sites("groupBy(window(") shouldBe empty
+      sites("""window(col("ts")""").size shouldBe 1
+    }
+  }
+
+  test("each stream twin's schema is window_start + its batch cells operator's schema") {
+    import org.apache.spark.sql.functions.{expr, unix_timestamp}
+    import org.apache.spark.sql.types.TimestampType
+    import graft.ops.{DataQuality, Drift, Retrieval, Similarity, Sketches, Stats}
+    implicit val sc = spark.sqlContext
+    // unstarted streams: the schemas are read off the plans, no query runs
+    val ev = asContract(MemoryStream[Event].toDF())
+      .withColumn("score_ppm", $"value".cast("long"))
+      .withColumn("good", $"user_id" % 2 === 0)
+      .withColumn("category", ($"user_id" % 2).cast("string"))
+      .withColumn("value_units", $"value".cast("long"))
+    val vecs = MemoryStream[VecDoc].toDF().withColumn("label", ($"docId" % 2).cast("int"))
+    val judged = MemoryStream[Judgment].toDF().toDF("ts", "item_a", "item_b", "winner")
+    val byType = Seq("event_type")
+    val inA = $"user_id" % 2 === 0
+    val twins = Seq(
+      "olsTrendRollup" -> (olsTrendRollup(ev),
+        Stats.olsSums(ev.withColumn("__x", unix_timestamp($"ts")), byType, "__x", "value")),
+      "abCellsRollup" -> (abCellsRollup(ev, "user_id % 2 = 0", "value > 10"),
+        Stats.chi2Cells(ev, byType, expr("user_id % 2 = 0"), expr("value > 10"))),
+      "calibrationCellsRollup" -> (calibrationCellsRollup(ev, "score_ppm", "good"),
+        Stats.calibrationCells(ev, byType, "score_ppm", "good")),
+      "brierCellsRollup" -> (brierCellsRollup(ev, "score_ppm", "good"),
+        Stats.brierCells(ev, byType, "score_ppm", "good")),
+      "etaCellsRollup" -> (etaCellsRollup(ev),
+        Stats.etaCells(ev, byType, "category", "value_units")),
+      "bootstrapCellsRollup" -> (bootstrapCellsRollup(ev),
+        Stats.bootstrapCells(ev, byType, "event_id", "value_units", 32, "boot")),
+      "kx2CellsRollup" -> (kx2CellsRollup(ev, "event_type", inA),
+        Drift.kx2Cells(ev, Nil, "event_type", inA)),
+      "preferenceCellsRollup" -> (preferenceCellsRollup(judged),
+        Retrieval.preferenceCells(judged, Nil, "item_a", "item_b", "winner")),
+      "log2CellsRollup" -> (log2CellsRollup(ev),
+        DataQuality.log2Cells(ev, byType, "value")),
+      "gramCellsRollup" -> (gramCellsRollup(vecs, dim = 4),
+        Similarity.gramCells(vecs, Seq("label"), "embedding", 4)),
+      "kmvSetCellsRollup" -> (kmvSetCellsRollup(ev),
+        Sketches.kmvSetSketch(ev, byType, "user_id")))
+    twins.foreach { case (name, (twin, cells)) =>
+      withClue(s"$name: ${twin.schema.simpleString} vs ${cells.schema.simpleString}") {
+        twin.isStreaming shouldBe true
+        (twin.schema.head.name, twin.schema.head.dataType) shouldBe (("window_start", TimestampType))
+        twin.schema.tail.map(f => (f.name, f.dataType)) shouldBe
+          cells.schema.map(f => (f.name, f.dataType))
+      }
+    }
   }
 }
