@@ -24,6 +24,28 @@ import graft.util.Barrier
  */
 object Graphs {
 
+  /** `(a, b)` edge rows with both endpoints present and no self-loop. */
+  private def properEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      a: String, b: String): DataFrame =
+    edges.select(col(srcCol).as(a), col(dstCol).as(b))
+      .where(col(a).isNotNull && col(b).isNotNull && col(a) =!= col(b))
+
+  /** The directed edge view `(src, dst)`, each edge once. */
+  private def directedEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    properEdges(edges, srcCol, dstCol, "src", "dst").distinct()
+
+  /** The undirected edge view as canonical `(lo, hi)` pairs, `lo < hi`, each once. */
+  private def canonicalEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    properEdges(edges, srcCol, dstCol, "a", "b")
+      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
+      .distinct()
+
+  /** The undirected edge view in both directions `(u, v)`, each once. */
+  private def bothWaysEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val fwd = properEdges(edges, srcCol, dstCol, "u", "v")
+    fwd.union(fwd.select(col("v"), col("u"))).distinct()
+  }
+
   /**
    * PageRank with a FIXED number of iterations in exact integer
    * fixed-point — the host-quality prior of web curation (Page et al.
@@ -70,10 +92,7 @@ object Graphs {
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100, s"dampingPct must be in [0,100], got $dampingPct")
-    val e = Barrier.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-        .distinct())
+    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
     val nodes = Barrier.checkpoint(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     // driver-side count of the node frame: one value off a host-sized table
@@ -130,10 +149,7 @@ object Graphs {
       iterations: Int = 5,
       scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = Barrier.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-        .distinct())
+    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
     val nodes = Barrier.checkpoint(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
 
@@ -211,9 +227,7 @@ object Graphs {
       dstCol: String = "dst",
       iterations: Int = 4): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val bidir = Barrier.checkpoint(fwd.union(fwd.select(col("v"), col("u"))).distinct())
+    val bidir = Barrier.checkpoint(bothWaysEdges(edges, srcCol, dstCol))
     var labels = Barrier.checkpoint(
       bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
     for (_ <- 1 to iterations) {
@@ -273,9 +287,7 @@ object Graphs {
       maxIterations: Int = 50): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
 
-    val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val undirected = fwd.union(fwd.select(col("v"), col("u"))).distinct()
+    val undirected = bothWaysEdges(edges, srcCol, dstCol)
     // the id payload the driver would hold: real string/binary lengths,
     // the fixed width of any other id type
     val idBytes = undirected.schema("u").dataType match {
@@ -424,10 +436,7 @@ object Graphs {
     // undirected distinct edge set as canonical (lo, hi) pairs; materialized
     // because deg + orientation both read it (same once-built-edges rule as
     // pageRank/hits — without the barrier each consumer re-runs the dedup)
-    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct())
+    val und = Barrier.checkpoint(canonicalEdges(edges, srcCol, dstCol))
     val deg = und.select(col("lo").as("id")).union(und.select(col("hi").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     // orient by (degree, id): out-degree bounded by O(sqrt(m)); materialized
@@ -491,10 +500,7 @@ object Graphs {
       rounds: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct())
+    val und = Barrier.checkpoint(canonicalEdges(edges, srcCol, dstCol))
     def degrees(e: DataFrame): DataFrame =
       e.select(col("lo").as("id")).union(e.select(col("hi").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
@@ -539,9 +545,7 @@ object Graphs {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Barrier.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct())
+    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
     var dist = Barrier.checkpoint(sources.distinct.toDF("id").withColumn("dist", lit(0L)))
     for (_ <- 1 to maxDepth) {
       val step = e.join(dist.withColumnRenamed("id", "src"), "src")
@@ -562,9 +566,7 @@ object Graphs {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
+    val e = directedEdges(edges, srcCol, dstCol)
     val out = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("out_deg"))
     val in = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("in_deg"))
     val recip = e.join(e.select(col("dst").as("src"), col("src").as("dst")),
@@ -613,10 +615,7 @@ object Graphs {
       dstCol: String = "dst",
       maxCenterDegree: Int = 1000): DataFrame = {
     require(maxCenterDegree >= 2, s"maxCenterDegree must be >= 2, got $maxCenterDegree")
-    val und = Barrier.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct())
+    val und = Barrier.checkpoint(canonicalEdges(edges, srcCol, dstCol))
     val adj = und.select(col("lo").as("ctr"), col("hi").as("nbr"))
       .union(und.select(col("hi").as("ctr"), col("lo").as("nbr")))
     val deg = adj.groupBy(col("ctr").as("id")).agg(count(lit(1)).as("degree"))

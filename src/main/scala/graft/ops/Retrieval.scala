@@ -44,9 +44,8 @@ object Retrieval {
    * term there), so both consumers share the one corpus-explode exchange
    * subtree (AQE reuses it) instead of scanning the corpus twice — the
    * change that took the battery query 4.5 s -> 1.3 s; the 1-row corpus
-   * stats frame broadcasts; the final top-k is the k-capped
-   * bounded-partial aggregation (`collect_bottom_k`) per query — never a
-   * corpus-wide window.
+   * stats frame broadcasts; the final top-k is [[TopK.ranked]] per query
+   * (k-capped map-side partials) — never a corpus-wide window.
    *
    * Output: `(query_id, doc_id, score_fp, rank)`, `score_fp` the x1e6
    * fixed-point BM25-style score, rank 1-based by `(score desc, doc)`.
@@ -131,14 +130,14 @@ object Retrieval {
             AS BIGINT)"""))
     val scored = termScore.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__s")).as("score_fp"))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.functions.collect_bottom_k(
-        struct((-col("score_fp")).as("__neg"), col("doc_id").as("doc_id"),
-          col("score_fp").as("score_fp")), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), col("__e.doc_id").as("doc_id"),
-        col("__e.score_fp").as("score_fp"), (col("__pos") + 1).cast("long").as("rank"))
+    byScore(scored, "score_fp", Seq("doc_id", "score_fp"), k)
   }
+
+  /** The top-`k` docs per query by `(scoreCol DESC, doc_id)` ([[TopK.ranked]]),
+    * as `(query_id, carry..., rank)` with a BIGINT rank. */
+  private def byScore(scored: DataFrame, scoreCol: String, carry: Seq[String], k: Int): DataFrame =
+    TopK.ranked(scored, Seq("query_id"), Seq(col(scoreCol).desc, col("doc_id")), carry, k)
+      .withColumn("rank", col("rank").cast("long"))
 
   /**
    * Percolation — reverse search: match every document against a
@@ -206,8 +205,8 @@ object Retrieval {
   /**
    * Inverted index: `(term, df, postings)` per corpus term — `df` the
    * EXACT document frequency, `postings` the `maxPostings` SMALLEST doc
-   * ids containing the term, ascending. The posting cap rides the same
-   * bounded `collect_bottom_k` aggregate as every top-k here (map-side
+   * ids containing the term, ascending. The posting cap rides the bounded
+   * `collect_bottom_k` aggregate behind [[TopK.ranked]] (map-side
    * k-capped partials — a hot stopword's postings never materialize
    * beyond `maxPostings` per partition, so the term row stays bounded
    * however large the corpus; `df` is a plain count and stays exact).
@@ -234,21 +233,14 @@ object Retrieval {
 
   /**
    * Turn per-(query, doc) scores into a dense 1-based ranking — top `k`
-   * by `(score DESC, doc_id)` per query — via the k-capped
-   * `collect_bottom_k` partial aggregate, never a corpus-wide window:
+   * by `(score DESC, doc_id)` per query — via [[TopK.ranked]]'s k-capped
+   * partial aggregate, never a corpus-wide window:
    * each partial buffer holds at most `k` candidates per query, so a
    * retriever scoring millions of docs per query shuffles k rows of it.
    * Output: `(query_id, doc_id, rank)`.
    */
-  def toRanking(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.functions.collect_bottom_k(
-        struct((-col(scoreCol)).as("__neg"), col("doc_id").as("doc_id")), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), col("__e.doc_id").as("doc_id"),
-        (col("__pos") + 1).cast("long").as("rank"))
-  }
+  def toRanking(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
+    byScore(scored, scoreCol, Seq("doc_id"), k)
 
   /**
    * Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009): the
@@ -262,7 +254,7 @@ object Retrieval {
    * Inputs are `(query_id, doc_id, rank)` frames ([[toRanking]] /
    * [[bm25TopK]] output shape). Each input is assumed deduplicated per
    * (query, doc) — rankings are. One union + one (query, doc) sum + the
-   * k-capped top-k partial per query; the fused lists are
+   * k-capped [[TopK.ranked]] partial per query; the fused lists are
    * human-consumption-sized, so this costs one small shuffle at any
    * corpus scale.
    *
@@ -280,14 +272,7 @@ object Retrieval {
       .withColumn("__c", expr(s"1000000000000 DIV ($k0 + rank)"))
     val fused = union.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__c")).as("rrf_fp"), count(lit(1)).as("n_rankers"))
-    fused.groupBy(col("query_id"))
-      .agg(graft.functions.functions.collect_bottom_k(
-        struct((-col("rrf_fp")).as("__neg"), col("doc_id").as("doc_id"),
-          col("rrf_fp").as("rrf_fp"), col("n_rankers").as("n_rankers")), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), col("__e.doc_id").as("doc_id"),
-        col("__e.rrf_fp").as("rrf_fp"), col("__e.n_rankers").as("n_rankers"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    byScore(fused, "rrf_fp", Seq("doc_id", "rrf_fp", "n_rankers"), k)
   }
 
   /**

@@ -20,6 +20,9 @@ import graft.util.Barrier
  *    full scan per query into a bucketed lookup: the corpus is hash-
  *    partitioned by bucket once and reused.
  *
+ * Every shortlist, rerank, probe and seed list here is a [[TopK.ranked]]
+ * top-k (bounded partials, no window): a NULL cosine ranks last, NaN first.
+ *
  * The hyperplanes are deterministic integer-weight vectors derived from
  * `(bit, dim)`, so results are reproducible across engines and runs without
  * shipping a random state.
@@ -87,33 +90,11 @@ object Similarity {
     graft.functions.vectors.int8_roundtrip(vec)
 
   /**
-   * Exact per-query top-k over a scored expansion WITHOUT ranking it
-   * through a window: aggregate each query's rows with a k-capped
-   * priority-queue buffer (`collect_bottom_k` — Spark's `CollectTopK`,
-   * an ObjectHashAggregate whose partials merge map-side), then explode
-   * the k survivors with their 1-based rank. `entry` is a struct whose
-   * fields are the ASCENDING sort key (field-wise struct comparison —
-   * negate a score for descending; include the id as tiebreaker).
-   *
-   * Why: `row_number().over(partitionBy(query_id))` shuffles EVERY scored
-   * row (queries x corpus for the brute-force tier) to collocate per
-   * query before sorting; the bounded aggregate ships at most
-   * queries x partitions x k entries through the exchange — the
-   * scored expansion itself never leaves its map-side partition. Results
-   * are identical row for row: same comparator, same tiebreak, same rank.
-   */
-  private def rankedBottomK(scored: DataFrame, entry: Column, k: Int): DataFrame =
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.functions.collect_bottom_k(entry, k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), col("__e.*"), (col("__pos") + 1).cast("int").as("rank"))
-
-  /**
    * Exact top-`k` cosine neighbors for each query vector. `queries` must be
    * small enough to broadcast (it is explicitly broadcast). Excludes
    * self-matches on id equality. The scan stays map-side: per-partition
-   * bounded top-k partials, never a queries x corpus window shuffle
-   * ([[rankedBottomK]]).
+   * bounded top-k partials ([[TopK.ranked]]), never a queries x corpus
+   * window shuffle.
    */
   def bruteForceTopK(
       queries: DataFrame,
@@ -126,11 +107,13 @@ object Similarity {
     val scored = q
       .join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-    rankedBottomK(scored,
-      struct((-col("cosine")).as("__neg"), col("neighbor_id").as("neighbor_id"),
-        col("cosine").as("cosine")), k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    byCosine(scored, k)
   }
+
+  /** The top-`k` rows per query by `(cosine DESC, neighbor_id)` — every ANN tier's final rank. */
+  private def byCosine(scored: DataFrame, k: Int,
+      carry: Seq[String] = Seq("neighbor_id", "cosine")): DataFrame =
+    TopK.ranked(scored, Seq("query_id"), Seq(col("cosine").desc, col("neighbor_id")), carry, k)
 
   /**
    * No-embedding-model similarity: hashing-trick TF vectors
@@ -199,8 +182,8 @@ object Similarity {
 
   /**
    * ANN top-`k`: candidates share the query's LSH bucket, exact cosine
-   * reranks. Recall/latency trades on `nbits` (more bits -> smaller buckets,
-   * lower recall per probe).
+   * reranks ([[TopK.ranked]]). Recall/latency trades on `nbits` (more bits
+   * -> smaller buckets, lower recall per probe).
    */
   def annTopK(
       queries: DataFrame,
@@ -218,11 +201,7 @@ object Similarity {
       .join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    byCosine(scored, k)
   }
 
   /**
@@ -278,10 +257,9 @@ object Similarity {
   /**
    * ANN through the projection: candidates rank by cosine in `projDims`-dim
    * projected space (cheap scan), the best `candidates` per query rerank by
-   * exact cosine on the full vector (fetched by equi-join for the shortlist
-   * only). Same two-phase shape as [[hammingTopK]] with a finer-grained
-   * proxy: projected cosine degrades smoothly, Hamming quantizes to
-   * `nbits` levels.
+   * exact cosine on the full vector ([[rerank]]). Same two-phase shape as
+   * [[hammingTopK]] with a finer-grained proxy: projected cosine degrades
+   * smoothly, Hamming quantizes to `nbits` levels.
    */
   def projectedTopK(
       queries: DataFrame,
@@ -297,27 +275,27 @@ object Similarity {
       randomProject(col(vecCol), projDims).as("__np"))
     val scoredP = q.join(projected, col("query_id") =!= col("neighbor_id"))
       .withColumn("pcos", round(cosine(col("__qp"), col("__np")), 4))
-    // shortlist via bounded map-side partials; re-attach the full query
-    // vector by broadcast (the shortlist is queries x candidates rows)
-    val cand = rankedBottomK(scoredP,
-      struct((-col("pcos")).as("__neg"), col("neighbor_id").as("neighbor_id")), candidates)
+    val cand = TopK.ranked(scoredP, Seq("query_id"),
+      Seq(col("pcos").desc, col("neighbor_id")), Seq("neighbor_id"), candidates)
+    rerank(cand, q, corpus, idCol, vecCol, k, Seq("neighbor_id", "cosine"))
+  }
+
+  /** Exact-cosine top-`k` of a `(query_id, neighbor_id, ...)` shortlist: the
+    * query vectors re-attach by broadcast (the shortlist is queries x
+    * candidates rows), the corpus vectors by an equi-join on it. */
+  private def rerank(shortlist: DataFrame, q: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int, carry: Seq[String]): DataFrame =
+    byCosine(shortlist
       .join(broadcast(q.select(col("query_id"), col("query_vec"))), Seq("query_id"))
-      .select(col("query_id"), col("query_vec"), col("neighbor_id"))
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cand
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("neighbor_vec")),
         Seq("neighbor_id"))
-      .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
+      .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4)), k, carry)
 
   /**
    * Quantized ANN: rank candidates by Hamming distance between `nbits`-bit
    * sign sketches (cosine's quantized proxy — for unit-ish vectors the
    * angle is proportional to the expected sign-disagreement rate), then
-   * exact-cosine rerank the best `candidates` per query.
+   * exact-cosine rerank the best `candidates` per query ([[rerank]]).
    *
    * This is the memory-bound scale path: the corpus scan touches an 8-byte
    * sketch per row instead of the full float vector (64x smaller at 128
@@ -340,21 +318,9 @@ object Similarity {
       signSketch(col(vecCol), nbits).as("__ns"))
     val scoredH = q.join(sketches, col("query_id") =!= col("neighbor_id"))
       .withColumn("hamming", bit_count(col("__qs").bitwiseXOR(col("__ns"))).cast("long"))
-    // shortlist via bounded map-side partials (hamming is already the
-    // ascending key, so it rides in the entry); query vectors re-attach
-    // by broadcast for the exact rerank
-    val cand = rankedBottomK(scoredH,
-      struct(col("hamming").as("hamming"), col("neighbor_id").as("neighbor_id")), candidates)
-      .join(broadcast(q.select(col("query_id"), col("query_vec"))), Seq("query_id"))
-      .select(col("query_id"), col("query_vec"), col("neighbor_id"), col("hamming"))
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("neighbor_vec")),
-        Seq("neighbor_id"))
-      .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"), col("cosine"), col("rank"))
+    val cand = TopK.ranked(scoredH, Seq("query_id"),
+      Seq(col("hamming"), col("neighbor_id")), Seq("hamming", "neighbor_id"), candidates)
+    rerank(cand, q, corpus, idCol, vecCol, k, Seq("neighbor_id", "hamming", "cosine"))
   }
 
   /**
@@ -381,11 +347,7 @@ object Similarity {
       .join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .select(col("query_id"), col("neighbor_id"), col("cosine")).distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    byCosine(scored.select(col("query_id"), col("neighbor_id"), col("cosine")).distinct(), k)
   }
 
   /**
@@ -421,7 +383,7 @@ object Similarity {
    * Deterministic IVF centroids without k-means training: the `k`
    * smallest-id corpus vectors seed the cells directly (the "train on a
    * sample" shortcut production IVF indexes use, with the sample pinned for
-   * reproducibility). Assignment is nearest-centroid by cosine with an id
+   * reproducibility), numbered 0..k-1 by one global [[TopK.ranked]] list. Assignment is nearest-centroid by cosine with an id
    * tiebreak — every step engine-portable, so a SQL oracle can replay it
    * bit-for-bit, unlike [[ivfAssign]]'s MLlib k-means. Cell quality is lower
    * than trained centroids; use this for verification paths and k-means for
@@ -432,14 +394,9 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int = 16): (DataFrame, DataFrame) = {
-    // distributed take-ordered first, so the single-partition row_number
-    // window only ever sees k rows (a full-corpus single-partition sort
-    // would not scale); the lit(0) partition key says so explicitly instead
-    // of tripping Spark's empty-partition-spec warning
-    val seeds = corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol)).limit(k)
-    val centroids = broadcast(seeds
-      .withColumn("__rk", row_number().over(Window.partitionBy(lit(0)).orderBy(col(idCol))))
-      .select((col("__rk") - 1).as("centroid_id"), col(vecCol).as("centroid")))
+    // one global k-capped list: per-partition partials, never a corpus sort
+    val centroids = broadcast(TopK.ranked(corpus, Nil, Seq(col(idCol)), Seq(vecCol), k)
+      .select((col("rank") - 1).as("centroid_id"), col(vecCol).as("centroid")))
     (assignToCentroids(corpus, idCol, vecCol, centroids), centroids)
   }
 
@@ -487,7 +444,8 @@ object Similarity {
    * nearest centroids (k x |queries| tiny cross score, centroids broadcast),
    * then exact cosine reranks within the probed cells only. Centroid
    * distances rank on 4-dp-rounded cosine with a centroid-id tiebreak so
-   * probe selection is deterministic and engine-portable.
+   * probe selection is deterministic and engine-portable; probes and
+   * rerank both rank through [[TopK.ranked]].
    */
   def ivfTopK(
       queries: DataFrame,
@@ -498,23 +456,17 @@ object Similarity {
       k: Int = 10,
       nprobe: Int = 2): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("c_dist").desc, col("centroid_id"))
-    val probes = q
-      .join(broadcast(centroids), lit(true))
-      .withColumn("c_dist", round(cosine(col("query_vec"), col("centroid")), 4))
-      .withColumn("probe_rank", row_number().over(probeW))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("query_vec"), col("centroid_id"))
+    val probes = TopK.ranked(
+      q.join(broadcast(centroids), lit(true))
+        .withColumn("c_dist", round(cosine(col("query_vec"), col("centroid")), 4)),
+      Seq("query_id"), Seq(col("c_dist").desc, col("centroid_id")),
+      Seq("centroid_id", "query_vec"), nprobe)
     val cells = assigned.select(col(idCol).as("neighbor_id"), col(vecCol).as("neighbor_vec"),
       col("centroid_id"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(probes)
+    byCosine(broadcast(probes)
       .join(cells, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+      .withColumn("cosine", round(cosine(col("query_vec"), col("neighbor_vec")), 4)), k)
   }
 
   /**

@@ -827,27 +827,25 @@ object TextAnalysis {
    *
    * Scale: term-frequency agg on (doc, term), document-frequency agg on
    * term, equi-join on term (vocabulary-sized — shuffle, not broadcast, at
-   * corpus scale), corpus size as a broadcast scalar, one top-k window on
-   * the doc id. No collect, no cross join beyond the 1-row scalar.
+   * corpus scale), corpus size as a broadcast scalar, one bounded top-k per
+   * doc id ([[TopK.ranked]] by `(score desc, term)`, no window). No
+   * collect, no cross join beyond the 1-row scalar.
    */
   def tfidfTopTerms(
       df: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String,
       k: Int = 3): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.broadcast
     val terms = df.select(col(idCol), explode(tokens(col(textCol))).as("term"))
     val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = terms.groupBy(col("term")).agg(countDistinct(col(idCol)).as("df"))
     val nDocs = df.agg(countDistinct(col(idCol)).as("__n_docs"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("term"))
-    tf.join(dfreq, Seq("term"))
+    val scored = tf.join(dfreq, Seq("term"))
       .join(broadcast(nDocs))
       .withColumn("score", round(col("tf") * col("__n_docs") / col("df"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(idCol), col("term"), col("tf"), col("df"), col("score"), col("rank"))
+    TopK.ranked(scored, Seq(idCol), Seq(col("score").desc, col("term")),
+      Seq("term", "tf", "df", "score"), k)
   }
 
   /**

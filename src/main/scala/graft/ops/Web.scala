@@ -342,7 +342,7 @@ object Web {
    * domain labeler next to [[domainQualityProfile]]'s quality stats.
    * Input is [[extractLinks]] output (or any `(host, anchor)` frame);
    * terms explode off the scan, ONE `(host, term)` count aggregation,
-   * then the k-capped `collect_bottom_k` partial per host — no window,
+   * then the k-capped [[TopK.ranked]] partial per host — no window,
    * no per-host sort of the full term list. Rank is 1-based by
    * `(count desc, term)`.
    */
@@ -351,17 +351,11 @@ object Web {
       hostCol: String,
       anchorCol: String,
       k: Int = 3): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    links.select(col(hostCol).as("host"),
+    val counts = links.select(col(hostCol).as("host"),
         explode(TextAnalysis.tokens(col(anchorCol))).as("term"))
       .groupBy(col("host"), col("term")).agg(count(lit(1)).as("n"))
-      .groupBy(col("host"))
-      .agg(graft.functions.functions.collect_bottom_k(
-        struct((-col("n")).as("__neg"), col("term").as("term"), col("n").as("n")), k)
-        .as("__top"))
-      .select(col("host"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("host"), col("__e.term").as("term"), col("__e.n").as("n"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    TopK.ranked(counts, Seq("host"), Seq(col("n").desc, col("term")), Seq("term", "n"), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /**

@@ -18,6 +18,15 @@ object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `(name, descending, nullsFirst)` of a plain column, bare (ascending) or
+    * under any `.asc`/`.desc` variant; None for any other expression. */
+  def sortKey(c: Column): Option[(String, Boolean, Boolean)] = c.node match {
+    case internal.SortOrder(internal.UnresolvedAttribute(Seq(n), _, _, _), dir, nulls, _) =>
+      Some((n, dir == internal.SortOrder.Descending, nulls == internal.SortOrder.NullsFirst))
+    case internal.UnresolvedAttribute(Seq(n), _, _, _) => Some((n, false, true))
+    case _ => None
+  }
+
   /** Analyzed logical plan of a DataFrame — for embedding one as a scalar subquery. */
   def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed

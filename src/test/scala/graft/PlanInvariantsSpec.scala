@@ -168,8 +168,8 @@ class PlanInvariantsSpec extends SparkTestBase {
     // the rebuild join broadcasts at this sf, shuffle equi-join at scale
     check("span_dedup", maxShuffles = 4, maxSmj = 1)
     // the BNLJ is the deliberate broadcast query-set x sketch scan; the
-    // shortlist is a bounded ObjectHashAggregate whose query_id
-    // partitioning the rerank join + window then REUSE (1 exchange total)
+    // shortlist and the rerank are bounded ObjectHashAggregates on query_id
+    // (the rerank's vector fetches broadcast at this sf)
     check("ann_hamming_topk", maxShuffles = 2, maxSmj = 1, maxBnlj = 1)
     // the BNLJ is the deliberate broadcast query-set x projection scan;
     // rerank fetch is an equi-join on the shortlist only
@@ -201,14 +201,19 @@ class PlanInvariantsSpec extends SparkTestBase {
       counts("exchange") should be <= 1
       counts("cartesian") shouldBe 0
     }
-    // two-phase variants: shortlist by the same bounded agg; at most the
-    // candidates-sized exact rerank may use a window
+    // every ANN tier (shortlists, reranks, IVF probes and seeds) and the
+    // tf-idf profile rank through TopK.ranked: no top-k window anywhere.
+    // The one window left is assignToCentroids' whole-row top-1 by __cos.
+    (Queries.all.map(_._1).filter(_.startsWith("ann_")) :+ "tfidf_top_terms").foreach { q =>
+      val (p, _) = shape(q)
+      withClue(s"$q plan:\n$p\n") {
+        "Window \\[.*".r.findAllIn(p).filterNot(_.contains("__cos")).toSeq shouldBe empty
+      }
+    }
     Seq("ann_hamming_topk", "ann_projected_topk").foreach { q =>
       val (p, c) = shape(q)
       withClue(s"$q plan:\n$p\n") {
         p should include("ObjectHashAggregate")
-        // one Window operator (WindowGroupLimit is its pushed-down limit)
-        "Window \\[".r.findAllIn(p).size should be <= 1
         c("cartesian") shouldBe 0
       }
     }
@@ -482,11 +487,12 @@ class PlanInvariantsSpec extends SparkTestBase {
     // sets; estimator math is per-row array/integer code after that
     check("audience_overlap", maxShuffles = 4)
     // the two runs themselves: brute force = its pinned 1-exchange bounded
-    // agg + deliberate broadcast queries x corpus BNLJ; IVF = broadcast
-    // query x centroid probe cross (BNLJ) + cell equi-join + rerank
-    // window. The recall eval on top is |Q|*k-row frames only: the pair
-    // join broadcasts (its non-equi null-safe form is the 3rd BNLJ), the
-    // per-query agg is the one extra exchange
+    // agg + deliberate broadcast queries x corpus BNLJ; IVF = bounded seed
+    // list, broadcast query x centroid probe cross (BNLJ) + bounded probe
+    // agg, cell equi-join + bounded rerank agg. The recall eval on top is
+    // |Q|*k-row frames only: the pair join broadcasts (its non-equi
+    // null-safe form is the 3rd BNLJ), the per-query agg is the one extra
+    // exchange
     check("ann_recall", maxShuffles = 6, maxBnlj = 3)
     // the exactPercentiles recipe (pinned <=5 standalone; range exchange
     // checkpoint-hidden, offsets agg + running-sum window + target join)

@@ -112,6 +112,17 @@ class SimilaritySpec extends SparkTestBase {
     }
   }
 
+  test("brute-force top-k ranks a NaN cosine first and a null cosine last, as the window does") {
+    // id 3's null vector scores a NULL cosine, id 4's NaN component a NaN
+    // one: DESC puts NaN above every number and NULL after all of them
+    val corpus = Seq[(Long, Option[Array[Float]])](
+      (1L, Some(Array(1f, 0f))), (2L, Some(Array(1f, 0.1f))), (3L, None),
+      (4L, Some(Array(Float.NaN, 1f))), (5L, Some(Array(0f, 1f)))).toDF("id", "vec")
+    val top = Similarity.bruteForceTopK(corpus.where($"id" === 1L), corpus, "id", "vec", k = 4)
+    top.orderBy("rank").select("neighbor_id", "rank").as[(Long, Int)].collect() shouldBe
+      Array((4L, 1), (2L, 2), (5L, 3), (3L, 4))
+  }
+
   test("native vector kernels are bit-identical to the composed formulation") {
     val pairs = corpus.as("a").join(corpus.as("b"), $"a.vec_id" + 25 === $"b.vec_id")
       .select($"a.embedding".as("x"), $"b.embedding".as("y"))

@@ -6,8 +6,12 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 For each query dumped by graft.Verify, runs the oracle SQL in DuckDB over
 the same parquet tables, sorts columns by name and rows by all columns, and
 compares values (exact for ints/strings, tiny epsilon report for floats).
+
+DuckDB runs bounded by this machine's own numbers: three quarters of its RAM
+and half the free space of the filesystem it spills to. An oracle that needs
+more fails with ORACLE_ERROR instead of filling the disk.
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil
 import duckdb
 import pandas as pd
 
@@ -23,8 +27,21 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
                                 str(type(v)).endswith("ndarray'>") else v)
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
+def bound(con):
+    # DuckDB 1.0.0 defaults max_temp_directory_size to '0 bytes', which means
+    # "most of the free disk"
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    spill_dir = os.path.abspath(
+        con.execute("SELECT current_setting('temp_directory')").fetchone()[0])
+    while not os.path.exists(spill_dir):
+        spill_dir = os.path.dirname(spill_dir)
+    free = shutil.disk_usage(spill_dir).free
+    con.execute(f"SET memory_limit = '{ram * 3 // 4 >> 20}MiB'")
+    con.execute(f"SET max_temp_directory_size = '{free // 2 >> 20}MiB'")
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    bound(con)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
