@@ -226,26 +226,30 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
    */
   val OracleLabelPropRounds: Int = 6
 
-  /**
-   * Oracle twin of [[Dedup.duplicateClusters]]: [[OracleLabelPropRounds]]
-   * fixed rounds of min-label propagation — covers any component of
-   * diameter <= that bound, far beyond real dup-cluster shapes.
-   * Shared CTE chain ending in `l6(id, cluster_id)` — reused by the split oracle.
-   */
-  private[graft] val dupClusterCtes: String = {
+  /** The oracles' label-propagation chain over a preceding `pairs(id_a,
+    * id_b)` CTE, ending in `l6(id, cluster_id)`. All `MATERIALIZED`: each
+    * round reads the one before twice, and DuckDB would otherwise inline
+    * the chain at every reference. */
+  private def labelPropCtes: String = {
     val rounds = (1 to OracleLabelPropRounds).map { k =>
-      s"""l$k AS (SELECT id, min(cluster_id) AS cluster_id FROM (
+      s"""l$k AS MATERIALIZED (SELECT id, min(cluster_id) AS cluster_id FROM (
             SELECT id, cluster_id FROM l${k - 1}
             UNION ALL
             SELECT e.src AS id, l.cluster_id FROM edges e JOIN l${k - 1} l ON e.dst = l.id
           ) GROUP BY id)"""
     }.mkString(",\n       ")
-    s"""pairs AS ($nearDupPairsSql),
-       edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+    s"""edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
                  UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-       l0 AS (SELECT DISTINCT src AS id, src AS cluster_id FROM edges),
+       l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS cluster_id FROM edges),
        $rounds"""
   }
+
+  /** Oracle twin of [[Dedup.duplicateClusters]] — the [[labelPropCtes]]
+    * over the near-dup pairs, covering any component of diameter <=
+    * [[OracleLabelPropRounds]]; reused by the split oracle. */
+  private[graft] val dupClusterCtes: String =
+    s"""pairs AS MATERIALIZED ($nearDupPairsSql),
+       $labelPropCtes"""
 
   val dupClustersSql: String =
     s"""WITH $dupClusterCtes
@@ -1427,8 +1431,10 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
     import graft.etl.examples.IncrementalRelease
     val docs = t(dir, "documents").select(col("doc_id"), syntheticUrl.as("url"),
       col("lang"), col("source"), col("text"))
-    val bench = t(dir, "documents").filter(col("doc_id") % 17 === 0)
-      .select(col("doc_id").as("bench_id"), col("text"))
+    // the benchmark suite is the same every day: materialize it ONCE so
+    // each day shingles stored rows instead of re-scanning the corpus
+    val bench = Barrier.checkpoint(t(dir, "documents").filter(col("doc_id") % 17 === 0)
+      .select(col("doc_id").as("bench_id"), col("text")))
     val bounds = docs.agg(max(col("doc_id")).as("__maxid"))
     val withB = docs.crossJoin(broadcast(bounds))
     val days = Seq(
@@ -1443,17 +1449,9 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
       empty(IncrementalRelease.FpStoreSchema),
       empty(IncrementalRelease.VerifiedBandStoreSchema),
       Seq.empty[DataFrame], Seq.empty[DataFrame])
-    // the benchmark gram set is identical for every day: shingle the bench
-    // suite ONCE and hand the materialized frame to each day's
-    // decontamination instead of re-deriving it per day (round 20;
-    // guide §1.2 — the grams are a pure function of `bench`, so the
-    // manifest is unchanged and the batch oracle still pins it)
-    val benchGrams = Barrier.checkpoint(graft.ops.Decontaminate
-      .benchGramRows(bench, "bench_id", "text", n = 5))
     val (_, _, _, curatedParts, statsParts) =
       days.foldLeft(init) { case ((urls, fps, bands, cur, st), day) =>
-        val dc = IncrementalRelease.curateDay(day, bench, urls, fps, bands,
-          verifyNear = true, benchGrams = Some(benchGrams))
+        val dc = IncrementalRelease.curateDay(day, bench, urls, fps, bands, verifyNear = true)
         (urls.unionByName(dc.urls), fps.unionByName(dc.fps),
           bands.unionByName(dc.bands), cur :+ dc.curated, st :+ dc.stats)
       }
@@ -1469,13 +1467,6 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
       .mkString(", ")
     val unpivot = (0 until 4)
       .map(b => s"SELECT doc_id, $b AS band, band$b AS bh FROM banded").mkString(" UNION ALL ")
-    val ccRounds = (1 to OracleLabelPropRounds).map { k =>
-      s"""l$k AS MATERIALIZED (SELECT id, min(cluster_id) AS cluster_id FROM (
-            SELECT id, cluster_id FROM l${k - 1}
-            UNION ALL
-            SELECT e.src AS id, l.cluster_id FROM edges e JOIN l${k - 1} l ON e.dst = l.id
-          ) GROUP BY id)"""
-    }.mkString(",\n       ")
     val reason = RejectReasonsSqlCase
     val bucketDoc = sqlHashBucket("doc_id")
     val bucketKey = sqlHashBucket("chunk_key")
@@ -1511,10 +1502,7 @@ private[graft] trait QueriesDedup extends QueryHelpers { this: QueryBattery =>
                         / greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1), 4) AS jaccard
            FROM cand JOIN sh2 a ON cand.id_a = a.doc_id JOIN sh2 b ON cand.id_b = b.doc_id)
          WHERE jaccard >= 0.8),
-       edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-       l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS cluster_id FROM edges),
-       $ccRounds,
+       $labelPropCtes,
        losers AS (SELECT id FROM l$OracleLabelPropRounds WHERE id <> cluster_id),
        s3 AS MATERIALIZED (SELECT * FROM s2 WHERE doc_id NOT IN (SELECT id FROM losers)),
        s4 AS MATERIALIZED (SELECT doc_id, lang, source, text, n_tokens FROM (

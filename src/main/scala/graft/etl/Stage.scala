@@ -90,6 +90,14 @@ object Stage {
     override def withValue[U](value: U): Context[U] = new SimpleContext(spark, date, value)
   }
 
+  /** A pipeline whose stages materialize through one [[graft.util.Held]]
+    * owner, which frees all it holds when the pipeline ends, on success
+    * and on failure. A runner builds the stages once per date. */
+  def holding[I, O](build: graft.util.Held => Stage[I, O]): Stage[I, O] = {
+    val held = new graft.util.Held
+    build(held).ensuring(() => held.releaseAll())
+  }
+
   /** Create a stage from a function over the context. */
   def apply[I, O](stageName: String)(f: Context[I] => O): Stage[I, O] = new Stage[I, O] {
     override def name = stageName

@@ -74,16 +74,13 @@ class DriftMonitorJob(
         StructField("delta_ppm", LongType))))
   }
 
-  override def stages: Stage[SparkSession, _] = {
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val pipeline = for {
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    for {
       docs <- "read_docs".source(ctx => source(ctx.date))
       counts <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("snapshot_terms") { ctx =>
         // persisted: both sinks consume the counts, and their lineage is
         // the day's full tokenize + agg
-        val c = Drift.termCounts(ctx.value.toDF(), textCol).persist()
-        cached += c
-        c
+        held.persist(Drift.termCounts(ctx.value.toDF(), textCol))
       }
       _ <- "write_snapshot".sink[org.apache.spark.sql.Row] { ctx =>
         snapshots.save(ctx.value.toDF(), ctx.date, Warehouse.WriteTruncate)
@@ -102,6 +99,5 @@ class DriftMonitorJob(
         snapshotRetentionDays.foreach(n => snapshots.thinToWeekly(ctx.spark, ctx.date, n))
       }
     } yield counts
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

@@ -99,15 +99,12 @@ class ExperimentMonitorJob(
         when(!col("srm_alarm"), col("adj_lift_micro")).as("adj_lift_micro"))
   }
 
-  override def stages: Stage[SparkSession, _] = {
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val pipeline = for {
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    for {
       log <- "read_log".source { ctx =>
         // persisted: BOTH snapshot aggs scan the same day's log — one read
         // of the raw data per date ever
-        val d = source(ctx.date).persist()
-        cached += d
-        d
+        held.persist(source(ctx.date))
       }
       _ <- "write_cells".sink[Row] { ctx =>
         cells.save(
@@ -135,6 +132,5 @@ class ExperimentMonitorJob(
           ctx.date, Warehouse.WriteTruncate)
       }
     } yield log
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

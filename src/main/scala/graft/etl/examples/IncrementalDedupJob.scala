@@ -49,19 +49,17 @@ class IncrementalDedupJob(
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("fp", org.apache.spark.sql.types.StringType))))
 
-  override def stages: Stage[SparkSession, _] = {
-    // caches acquired mid-pipeline, released by the `ensuring` below on
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    // caches acquired mid-pipeline are released when the date ends, on
     // success AND failure: a backfill loop runs many dates in one session,
     // and blocks leaked on a failed date would accumulate for its lifetime
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = { cached += df.persist(); df }
-    val pipeline = for {
+    for {
       raw <- "read_docs".source(ctx => source(ctx.date))
       withFp <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("fingerprint") { ctx =>
         // persisted: antiJoinWithBloom's result is a two-leg union whose left
         // side is this frame, so without a cache the day's read + fingerprint
         // hash would run once per leg
-        persisted(ctx.value.toDF()
+        held.persist(ctx.value.toDF()
           .withColumn("fp", TextAnalysis.fingerprint(col(textCol))))
       }
       deduped <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("dedup") { ctx =>
@@ -72,7 +70,7 @@ class IncrementalDedupJob(
         // within-day dedup: deterministic keeper on the smallest id; persisted
         // because both sinks consume it and its lineage is the whole day's
         // fingerprint + anti-join pipeline
-        persisted(graft.ops.Dedup.exact(newDocs, textCol, idCol))
+        held.persist(graft.ops.Dedup.exact(newDocs, textCol, idCol))
       }
       _ <- "write_fingerprints".sink[org.apache.spark.sql.Row] { ctx =>
         fingerprints.save(ctx.value.toDF().select(col("fp")).distinct(), ctx.date, Warehouse.WriteTruncate)
@@ -81,6 +79,5 @@ class IncrementalDedupJob(
         clean.save(ctx.value.toDF().drop("fp"), ctx.date, Warehouse.WriteTruncate)
       }
     } yield deduped
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

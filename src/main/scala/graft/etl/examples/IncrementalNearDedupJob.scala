@@ -61,17 +61,15 @@ class IncrementalNearDedupJob(
         org.apache.spark.sql.types.StructField("band", org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("bh", org.apache.spark.sql.types.StringType))))
 
-  override def stages: Stage[SparkSession, _] = {
-    // caches acquired mid-pipeline, released by the `ensuring` below on
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    // caches acquired mid-pipeline are released when the date ends, on
     // success AND failure: a backfill loop runs many dates in one session,
     // and blocks leaked on a failed date would accumulate for its lifetime
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = { cached += df.persist(); df }
     // the day's band frame, built once in drop_seen and reused by
     // append_bands (stages of one date run sequentially; reassigned per
     // date in a backfill loop)
     var dayBands: DataFrame = null
-    val pipeline = for {
+    for {
       raw <- "read_docs".source(ctx => source(ctx.date))
       // the day is shingled EXACTLY once (round 18): this band frame feeds
       // the cross-date semi-join, the within-day candidate self-join
@@ -84,14 +82,14 @@ class IncrementalNearDedupJob(
       // names must re-key on `dedup_day`
       deduped <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("dedup_day") { ctx =>
         val docs = ctx.value.toDF()
-        dayBands = persisted(bandRows(docs))
+        dayBands = held.persist(bandRows(docs))
         val hits = dayBands
           .join(storedBands(ctx.spark, ctx.date), Seq("band", "bh"), "left_semi")
           .select(col(idCol)).distinct()
         val kept = docs.join(hits, Seq(idCol), "left_anti")
         // persist: both sinks consume this, and its lineage is the whole
         // shingle/minhash/verify pipeline — without it each sink recomputes
-        persisted(Dedup.removeNearDuplicatesFromBands(kept,
+        held.persist(Dedup.removeNearDuplicatesFromBands(kept,
           dayBands.join(hits, Seq(idCol), "left_anti"), idCol, textCol, threshold,
           scriptAware = scriptAware))
       }
@@ -105,6 +103,5 @@ class IncrementalNearDedupJob(
         clean.save(ctx.value.toDF(), ctx.date, Warehouse.WriteTruncate)
       }
     } yield deduped
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

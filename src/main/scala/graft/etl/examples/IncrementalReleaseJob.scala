@@ -105,10 +105,8 @@ object IncrementalRelease {
    * via `seenUrls`/`seenFps`/`seenBands`, within-day via the same
    * keep-smallest-id laws as [[Release.build]]), then the quality gate and
    * decontamination. `docs` needs `doc_id, url, lang, source, text`;
-   * `bench` needs `bench_id, text`. `benchGrams`, when given, replaces
-   * the bench shingling and must be `Decontaminate.benchGramRows(bench,
-   * "bench_id", "text", n = 5)`: its shape is checked, its gram order is
-   * not.
+   * `bench` needs `bench_id, text`; a caller curating many days against
+   * one eval suite materializes it once, so each day shingles stored rows.
    *
    * Scale: the day's text is token-counted and shingled ONCE each; the
    * cross-day checks are equi-joins against key-sized stores (anti-join on
@@ -128,16 +126,7 @@ object IncrementalRelease {
       numHashes: Int = 12,
       rowsPerBand: Int = 3,
       minHits: Int = 3,
-      verifyNear: Boolean = false,
-      benchGrams: Option[DataFrame] = None): DayCuration = {
-    // a mis-shaped gram frame would not fail: a non-string `__gram` joins
-    // through an implicit cast and silently matches no document
-    benchGrams.foreach { g =>
-      require(g.columns.contains("bench_id") &&
-        g.schema.find(_.name == "__gram").exists(_.dataType == StringType),
-        "benchGrams must be a Decontaminate.benchGramRows frame " +
-          s"(bench_id, __gram STRING), got ${g.schema.simpleString}")
-    }
+      verifyNear: Boolean = false): DayCuration = {
     val (s0, r0) = Release.observedStage(docs.select(col("doc_id"), col("url"), col("lang"),
       col("source"), col("text"),
       TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_tokens")))
@@ -193,15 +182,8 @@ object IncrementalRelease {
     // s4 twice — re-running the per-row regex gate per read measured
     // slower than the barrier
     val (s4, r4) = Release.observedStage(s3.filter(passes === 1L))
-    // the benchmark gram set is day-INDEPENDENT: a caller curating many
-    // days against one eval suite precomputes+materializes it once
-    // (benchGrams) instead of re-scanning and re-shingling the benchmark
-    // per day (round 20; guide §1.2)
-    val (s5, r5) = Release.observedStage(Decontaminate.removeContaminatedOnGrams(
-      s4, "doc_id", "text",
-      benchGrams.getOrElse(
-        Decontaminate.benchGramRows(bench, "bench_id", "text", n = 5)),
-      n = 5, minHits = minHits, broadcastBench = true))
+    val (s5, r5) = Release.observedStage(Decontaminate.removeContaminated(
+      s4, "doc_id", "text", bench, "bench_id", "text", minHits = minHits))
 
     val bandRows =
       if (!verifyNear) dayBands.select(col("band"), col("bh")).distinct()

@@ -93,9 +93,8 @@ class IncrementalSemanticDedupJob(
         org.apache.spark.sql.types.StructField("__keeper_vec",
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
 
-  override def stages: Stage[SparkSession, _] = {
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val pipeline = for {
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    for {
       raw <- "read_docs".source(ctx => source(ctx.date))
       assigned <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("assign_cells") { ctx =>
         val docs = ctx.value.toDF()
@@ -113,10 +112,7 @@ class IncrementalSemanticDedupJob(
       deduped <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("within_day") { ctx =>
         // persist: both sinks consume this, and its lineage holds the
         // centroid assignment + keeper join — without it each sink recomputes
-        val d = Similarity.semanticDedupAssigned(ctx.value.toDF(), idCol, vecCol, threshold)
-          .persist()
-        cached += d
-        d
+        held.persist(Similarity.semanticDedupAssigned(ctx.value.toDF(), idCol, vecCol, threshold))
       }
       _ <- "append_keepers".sink[org.apache.spark.sql.Row] { ctx =>
         keeperStore.save(
@@ -127,6 +123,5 @@ class IncrementalSemanticDedupJob(
         clean.save(ctx.value.toDF(), ctx.date, Warehouse.WriteTruncate)
       }
     } yield deduped
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

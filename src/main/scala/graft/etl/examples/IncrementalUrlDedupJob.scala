@@ -58,15 +58,13 @@ class IncrementalUrlDedupJob(
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("canon_url", org.apache.spark.sql.types.StringType))))
 
-  override def stages: Stage[SparkSession, _] = {
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = { cached += df.persist(); df }
-    val pipeline = for {
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    for {
       raw <- "read_docs".source(ctx => source(ctx.date))
       withCanon <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("canonicalize") { ctx =>
         // persisted: the null-URL branch and the dedup branch both read it,
         // and antiJoinWithBloom's union would otherwise re-run the read
-        persisted(ctx.value.toDF()
+        held.persist(ctx.value.toDF()
           .withColumn("canon_url", Web.normalizeUrl(col(urlCol))))
       }
       deduped <- Stage.transform[org.apache.spark.sql.Row, org.apache.spark.sql.Row]("url_dedup") { ctx =>
@@ -76,7 +74,7 @@ class IncrementalUrlDedupJob(
         // within-day keeper on the smallest id; dedupByUrl unions its own
         // null branch, but newPages has none — nulls rejoin below
         val kept = Web.dedupByUrl(newPages, urlCol, idCol)
-        persisted(kept.unionByName(day.filter(col("canon_url").isNull)))
+        held.persist(kept.unionByName(day.filter(col("canon_url").isNull)))
       }
       _ <- "write_urls".sink[org.apache.spark.sql.Row] { ctx =>
         urls.save(ctx.value.toDF().filter(col("canon_url").isNotNull)
@@ -86,6 +84,5 @@ class IncrementalUrlDedupJob(
         clean.save(ctx.value.toDF().drop("canon_url"), ctx.date, Warehouse.WriteTruncate)
       }
     } yield deduped
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

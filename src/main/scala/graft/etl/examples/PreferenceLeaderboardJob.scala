@@ -65,13 +65,10 @@ class PreferenceLeaderboardJob(
       col("copeland2").desc, col("beats").desc, col("item"))
   }
 
-  override def stages: Stage[SparkSession, _] = {
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val pipeline = for {
+  override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+    for {
       log <- "read_log".source { ctx =>
-        val d = source(ctx.date).persist()
-        cached += d
-        d
+        held.persist(source(ctx.date))
       }
       _ <- "write_cells".sink[Row] { ctx =>
         cells.save(
@@ -86,6 +83,5 @@ class PreferenceLeaderboardJob(
           ctx.date, Warehouse.WriteTruncate)
       }
     } yield log
-    pipeline.ensuring { () => cached.foreach(_.unpersist()); cached.clear() }
   }
 }

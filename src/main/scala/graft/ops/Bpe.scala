@@ -2,9 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.util.Barrier
@@ -147,9 +145,9 @@ object Bpe {
    * fine on `local[*]`, but losing one executor mid-training kills the
    * job), RELIABLE when the session sets `spark.checkpoint.dir` (one
    * distributed write per round, of the VOCABULARY, not the corpus, that
-   * survives executor loss). In reliable mode each round's checkpoint
-   * files are deleted as soon as the next round materializes, so a run
-   * leaves nothing behind under the checkpoint dir.
+   * survives executor loss). Each round's storage is freed as soon as the
+   * next round materializes, and the last round's when training ends, so
+   * a run leaves nothing behind under the checkpoint dir.
    */
   def learn(
       df: DataFrame,
@@ -160,26 +158,8 @@ object Bpe {
     require(numMerges > 0, "numMerges must be positive")
     require(minCount >= 1, "minCount must be at least 1")
     require(maxPerRound >= 1, "maxPerRound must be at least 1")
-    val sc = df.sparkSession.sparkContext
-    var roundCheckpoint = Option.empty[Path]
-    def deleteRoundCheckpoint(): Unit = {
-      roundCheckpoint.foreach(p => p.getFileSystem(sc.hadoopConfiguration).delete(p, true))
-      roundCheckpoint = None
-    }
-    def materialize(d: DataFrame): DataFrame = {
-      val out = Barrier.checkpoint(d)
-      // a reliable checkpoint's files: the checkpointed RDD behind the
-      // returned frame's leaf (a local checkpoint has none)
-      val justWritten = out.queryExecution.logical match {
-        case r: LogicalRDD => r.rdd.getCheckpointFile.map(new Path(_))
-        case _             => None
-      }
-      deleteRoundCheckpoint() // previous round no longer reachable
-      roundCheckpoint = justWritten
-      out
-    }
-    try {
-      var words = materialize(df
+    Barrier.holding { held =>
+      var words = held.barrier(df
         .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
         .select(charSymbols(col("w")).as("symbols"), col("wc"))
@@ -204,7 +184,7 @@ object Bpe {
             learned += Merge(rank, a, b, cnt, round)
             rank += 1
           }
-          words = materialize(words.select(
+          words = held.next(words, words.select(
             batch.foldLeft(col("symbols")) { case (sym, (a, b, _)) => mergePair(sym, a, b) }
               .as("symbols"),
             col("wc"))
@@ -213,7 +193,7 @@ object Bpe {
         }
       }
       learned.result()
-    } finally deleteRoundCheckpoint()
+    }
   }
 
   /**

@@ -49,12 +49,8 @@ object Decontaminate {
   /**
    * The benchmark side of [[contaminationHits]] as a standalone frame: one
    * `(bench_id, __gram)` row per (bench doc, DISTINCT word `n`-gram) —
-   * exactly the probe side the gram join consumes. Build it ONCE and
-   * materialize it (localCheckpoint / checkpoint) when the same benchmark
-   * screens many corpus slices: the incremental release curates every DAY
-   * against the same eval suite, and rebuilding this frame per day pays a
-   * full benchmark scan + shingle pass + broadcast build each time
-   * (round 20; guide §1.2 — don't compute things twice).
+   * exactly the probe side the gram join consumes. Build it once and
+   * materialize it when the same benchmark screens many corpus slices.
    */
   def benchGramRows(
       bench: DataFrame,

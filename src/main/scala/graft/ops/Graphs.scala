@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.util.Barrier
+import graft.util.{Barrier, Held}
 
 /**
  * Link-graph operators for web-corpus curation. Crawl pipelines rank hosts
@@ -92,28 +92,28 @@ object Graphs {
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100, s"dampingPct must be in [0,100], got $dampingPct")
-    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
-    val nodes = Barrier.checkpoint(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
-    // driver-side count of the node frame: one value off a host-sized table
-    // (the same bounded-collect class as Bpe's vocab guard)
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one edge")
-    val base = scale / n
-    val teleport = (100L - dampingPct) * base / 100L
-    val outDeg = Barrier.checkpoint(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
+    Barrier.holding { held =>
+      val e = held.barrier(directedEdges(edges, srcCol, dstCol))
+      val nodes = held.barrier(
+        e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
+      // driver-side count of the node frame: one value off a host-sized table
+      // (the same bounded-collect class as Bpe's vocab guard)
+      val n = nodes.count()
+      require(n > 0, "pageRank needs at least one edge")
+      val base = scale / n
+      val teleport = (100L - dampingPct) * base / 100L
+      val outDeg = held.barrier(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
 
-    var ranks = nodes.withColumn("rank", lit(base))
-    for (_ <- 1 to iterations) {
-      val shares = ranks.join(outDeg, "id")
-        .select(col("id").as("src"), expr("rank DIV deg").as("share"))
-      val contrib = e.join(shares, "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("share")).as("inbound"))
-      ranks = Barrier.checkpoint(nodes.join(contrib, Seq("id"), "left").select(
-        col("id"),
-        (lit(teleport) + expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100")).as("rank")))
+      held.rounds(nodes.withColumn("rank", lit(base)), iterations) { ranks =>
+        val shares = ranks.join(outDeg, "id")
+          .select(col("id").as("src"), expr("rank DIV deg").as("share"))
+        val contrib = e.join(shares, "src")
+          .groupBy(col("dst").as("id")).agg(sum(col("share")).as("inbound"))
+        nodes.join(contrib, Seq("id"), "left").select(
+          col("id"),
+          (lit(teleport) + expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100")).as("rank"))
+      }
     }
-    ranks
   }
 
   /**
@@ -149,55 +149,60 @@ object Graphs {
       iterations: Int = 5,
       scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
-    val nodes = Barrier.checkpoint(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
+    Barrier.holding { held =>
+      val e = held.barrier(directedEdges(edges, srcCol, dstCol))
+      val nodes = held.barrier(
+        e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
 
-    // normalize a (id, v) frame so its max value is exactly `scale`.
-    // The caller materializes `scored` FIRST: the 1-row max aggregate and
-    // the rescale projection are then two cheap node-sized reads of the
-    // checkpointed frame. Normalizing the RAW lineage instead re-ran the
-    // edge join + aggregation twice per half-iteration (once under the max
-    // job, once under the checkpoint) — measured at ~2x the whole query.
-    def normalized(scored: DataFrame): DataFrame = {
-      val m = scored.agg(max(col("v")).as("__max"))
-      scored.join(broadcast(m))
-        .select(col("id"),
-          expr(s"CAST(CAST(v AS DECIMAL(38,0)) * $scale DIV greatest(__max, 1) AS BIGINT)")
-            .as("v"))
-    }
+      // normalize a (id, v) frame so its max value is exactly `scale`.
+      // The caller materializes `scored` FIRST: the 1-row max aggregate and
+      // the rescale projection are then two cheap node-sized reads of the
+      // checkpointed frame. Normalizing the RAW lineage instead re-ran the
+      // edge join + aggregation twice per half-iteration (once under the max
+      // job, once under the checkpoint) — measured at ~2x the whole query.
+      def normalized(scored: DataFrame): DataFrame = {
+        val m = scored.agg(max(col("v")).as("__max"))
+        scored.join(broadcast(m))
+          .select(col("id"),
+            expr(s"CAST(CAST(v AS DECIMAL(38,0)) * $scale DIV greatest(__max, 1) AS BIGINT)")
+              .as("v"))
+      }
 
-    // the loop carries only EDGE-ACTIVE scores: a node with no in-edges has
-    // authority 0 and feeds no hub sum (and vice versa), so zero rows are
-    // dead weight inside the iteration — they re-attach once at the end.
-    // Scores start at `scale` for every edge source (the all-ones init
-    // restricted to rows the first join would keep anyway).
-    var hubs = Barrier.checkpoint(e.select(col("src").as("id")).distinct()
-      .withColumn("v", lit(scale)))
-    var auths: DataFrame = null
-    // materialize the RAW sums (the join-bearing half) and leave the
-    // normalize as a lazy node-sized projection over the checkpointed
-    // frame: one heavy job per half-iteration, and both of the normalize's
-    // consumers (the next join, the final union) replay only the cheap
-    // broadcast-rescale, never the edge join
-    for (_ <- 1 to iterations) {
-      val authRaw = Barrier.checkpoint(
-        e.join(hubs.withColumnRenamed("id", "src"), "src")
-          .groupBy(col("dst").as("id")).agg(sum(col("v")).as("v")))
-      auths = normalized(authRaw)
-      val hubRaw = Barrier.checkpoint(
-        e.join(auths.withColumnRenamed("id", "dst"), "dst")
-          .groupBy(col("src").as("id")).agg(sum(col("v")).as("v")))
-      hubs = normalized(hubRaw)
+      // the loop carries only EDGE-ACTIVE scores: a node with no in-edges has
+      // authority 0 and feeds no hub sum (and vice versa), so zero rows are
+      // dead weight inside the iteration — they re-attach once at the end.
+      // Scores start at `scale` for every edge source (the all-ones init
+      // restricted to rows the first join would keep anyway).
+      var hubRaw = held.barrier(e.select(col("src").as("id")).distinct()
+        .withColumn("v", lit(scale)))
+      var hubs = hubRaw
+      var authRaw: DataFrame = null
+      var auths: DataFrame = null
+      // materialize the RAW sums (the join-bearing half) and leave the
+      // normalize as a lazy node-sized projection over the checkpointed
+      // frame: one heavy job per half-iteration, and both of the normalize's
+      // consumers (the next join, the final union) replay only the cheap
+      // broadcast-rescale, never the edge join. Each half frees its kind's
+      // raw sums from the round before.
+      for (_ <- 1 to iterations) {
+        authRaw = held.next(authRaw,
+          e.join(hubs.withColumnRenamed("id", "src"), "src")
+            .groupBy(col("dst").as("id")).agg(sum(col("v")).as("v")))
+        auths = normalized(authRaw)
+        hubRaw = held.next(hubRaw,
+          e.join(auths.withColumnRenamed("id", "dst"), "dst")
+            .groupBy(col("src").as("id")).agg(sum(col("v")).as("v")))
+        hubs = normalized(hubRaw)
+      }
+      // re-attach the zero rows with ONE union + id-keyed aggregation instead
+      // of two node-sized outer joins: each id contributes at most one hub row
+      // and one authority row, so the sums ARE the scores (0 where absent)
+      nodes.select(col("id"), lit(0L).as("hub"), lit(0L).as("authority"))
+        .union(hubs.select(col("id"), col("v").as("hub"), lit(0L).as("authority")))
+        .union(auths.select(col("id"), lit(0L).as("hub"), col("v").as("authority")))
+        .groupBy("id")
+        .agg(sum(col("hub")).as("hub"), sum(col("authority")).as("authority"))
     }
-    // re-attach the zero rows with ONE union + id-keyed aggregation instead
-    // of two node-sized outer joins: each id contributes at most one hub row
-    // and one authority row, so the sums ARE the scores (0 where absent)
-    nodes.select(col("id"), lit(0L).as("hub"), lit(0L).as("authority"))
-      .union(hubs.select(col("id"), col("v").as("hub"), lit(0L).as("authority")))
-      .union(auths.select(col("id"), lit(0L).as("hub"), col("v").as("authority")))
-      .groupBy("id")
-      .agg(sum(col("hub")).as("hub"), sum(col("authority")).as("authority"))
   }
 
   /**
@@ -227,18 +232,18 @@ object Graphs {
       dstCol: String = "dst",
       iterations: Int = 4): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val bidir = Barrier.checkpoint(bothWaysEdges(edges, srcCol, dstCol))
-    var labels = Barrier.checkpoint(
-      bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
-    for (_ <- 1 to iterations) {
-      val counts = bidir.join(labels.withColumnRenamed("id", "v"), "v")
-        .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      labels = Barrier.checkpoint(counts
-        .groupBy(col("u").as("id"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("__m"))
-        .select(col("id"), col("__m.l").as("lbl")))
+    Barrier.holding { held =>
+      val bidir = held.barrier(bothWaysEdges(edges, srcCol, dstCol))
+      val seed = held.barrier(
+        bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
+      held.rounds(seed, iterations) { labels =>
+        bidir.join(labels.withColumnRenamed("id", "v"), "v")
+          .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("u").as("id"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("__m"))
+          .select(col("id"), col("__m.l").as("lbl"))
+      }.select(col("id"), col("lbl").as("community"))
     }
-    labels.select(col("id"), col("lbl").as("community"))
   }
 
   /**
@@ -294,20 +299,27 @@ object Graphs {
       case _: StringType | BinaryType => sum(octet_length(col("u")) + octet_length(col("v")))
       case t => count(lit(1)) * (2L * t.defaultSize)
     }
-    val (bidir, observed) = Barrier.checkpointObserved(
-      undirected, count(lit(1)), coalesce(idBytes, lit(0L)))
-    val broadcasts = bidir.sparkSession.asInstanceOf[classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold > 0
-    if (broadcasts && observed.getLong(0) <= DriverMaxEdgeRows &&
-        observed.getLong(1) <= DriverMaxIdBytes)
-      return localComponents(bidir)
+    Barrier.holding { held =>
+      val (bidir, observed) = held.barrierObserved(
+        undirected, count(lit(1)), coalesce(idBytes, lit(0L)))
+      val broadcasts = bidir.sparkSession.asInstanceOf[classic.SparkSession]
+        .sessionState.conf.autoBroadcastJoinThreshold > 0
+      if (broadcasts && observed.getLong(0) <= DriverMaxEdgeRows &&
+          observed.getLong(1) <= DriverMaxIdBytes) localComponents(bidir)
+      else componentsLoop(held, bidir, maxIterations)
+    }
+  }
+
+  /** [[connectedComponents]]' distributed loop over its held edge frame. */
+  private def componentsLoop(held: Held, bidir: DataFrame, maxIterations: Int): DataFrame = {
     // The round 16–20 measurements quoted below predate the driver path:
     // they timed the loop on graphs (battery host graph, sf1 CC
     // consumers) of which the small ones no longer reach it. No benchmark
     // or battery query times the loop today (ROADMAP item 6); GraphsSpec
     // checks it by forcing it with broadcasts off.
-    var labels = Barrier.checkpoint(
+    var labels = held.barrier(
       bidir.select(col("u").as("id")).distinct().withColumn("lbl", col("id")))
+    var round = labels // the held frame behind `labels`
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIterations) {
@@ -342,13 +354,13 @@ object Graphs {
       val jumped = stepped
         .join(stepped.select(col("id").as("lbl"), col("lbl").as("__ll")), Seq("lbl"), "left")
         .select(col("id"), coalesce(col("__ll"), col("lbl")).as("lbl"), col("__old"))
-      val next = Barrier.checkpoint(jumped)
+      round = held.next(round, jumped)
       // limit(1): the probe needs existence, not the change count — and it
       // reads the JUST-materialized frame (lbl vs the carried __old), so
       // the whole round costs exactly one join-bearing job plus this
       // node-sized filter scan
-      changed = next.where(col("lbl") =!= col("__old")).limit(1).count()
-      labels = next.drop("__old")
+      changed = round.where(col("lbl") =!= col("__old")).limit(1).count()
+      labels = round.drop("__old")
       it += 1
     }
     labels.select(col("id"), col("lbl").as("component"))
@@ -500,22 +512,19 @@ object Graphs {
       rounds: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = Barrier.checkpoint(canonicalEdges(edges, srcCol, dstCol))
     def degrees(e: DataFrame): DataFrame =
       e.select(col("lo").as("id")).union(e.select(col("hi").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
-    var alive = Barrier.checkpoint(degrees(und).where(col("degree") >= k).select("id"))
-    for (_ <- 2 to rounds) {
-      val sub = und
+    Barrier.holding { held =>
+      val und = held.barrier(canonicalEdges(edges, srcCol, dstCol))
+      def within(alive: DataFrame): DataFrame = und
         .join(alive.withColumnRenamed("id", "lo"), Seq("lo"), "left_semi")
         .join(alive.withColumnRenamed("id", "hi"), Seq("hi"), "left_semi")
-      alive = Barrier.checkpoint(degrees(sub).where(col("degree") >= k).select("id"))
+      val seed = held.barrier(degrees(und).where(col("degree") >= k).select("id"))
+      val alive = held.rounds(seed, rounds - 1)(a =>
+        degrees(within(a)).where(col("degree") >= k).select("id"))
+      degrees(within(alive)).join(alive, Seq("id"), "left_semi")
     }
-    val finalSub = und
-      .join(alive.withColumnRenamed("id", "lo"), Seq("lo"), "left_semi")
-      .join(alive.withColumnRenamed("id", "hi"), Seq("hi"), "left_semi")
-    degrees(finalSub)
-      .join(alive, Seq("id"), "left_semi")
   }
 
   /**
@@ -545,14 +554,15 @@ object Graphs {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Barrier.checkpoint(directedEdges(edges, srcCol, dstCol))
-    var dist = Barrier.checkpoint(sources.distinct.toDF("id").withColumn("dist", lit(0L)))
-    for (_ <- 1 to maxDepth) {
-      val step = e.join(dist.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-      dist = Barrier.checkpoint(dist.union(step).groupBy("id").agg(min(col("dist")).as("dist")))
+    Barrier.holding { held =>
+      val e = held.barrier(directedEdges(edges, srcCol, dstCol))
+      val seed = held.barrier(sources.distinct.toDF("id").withColumn("dist", lit(0L)))
+      held.rounds(seed, maxDepth) { dist =>
+        val step = e.join(dist.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
+        dist.union(step).groupBy("id").agg(min(col("dist")).as("dist"))
+      }
     }
-    dist
   }
 
   /**

@@ -531,15 +531,14 @@ object Sketches {
     // the exchange executes it AGAIN — for every caller here the child is
     // a collapse aggregate, so its reduce ran twice per call. Checkpointing
     // the collapsed frame first makes the sample and the exchange two cheap
-    // scans of stored blocks. Both frames stay pinned for the call's
-    // lifetime (a doubled footprint of the collapsed rows — accepted and
-    // consistent with the repo's barrier pattern; Dataset.unpersist does
-    // not reach checkpoint blocks, and the input copy is what a
-    // recompute-free bounds sample reads).
-    val input = Barrier.checkpoint(df)
-    val ranged = Barrier.checkpoint(input.repartitionByRange((gCols ++ order): _*)
-      .sortWithinPartitions((gCols ++ order): _*)
-      .withColumn("__pid", spark_partition_id()))
+    // scans of stored blocks. The input copy is freed once the ranged copy
+    // is stored; the ranged copy alone backs the result.
+    val ranged = Barrier.holding { held =>
+      val input = held.barrier(df)
+      held.next(input, input.repartitionByRange((gCols ++ order): _*)
+        .sortWithinPartitions((gCols ++ order): _*)
+        .withColumn("__pid", spark_partition_id()))
+    }
     // the offsets meet the scanned rows on (group, shard) with the group
     // columns packed into ONE struct key: struct equality matches null
     // fields, so a null key is one group here as in the scan, and the join

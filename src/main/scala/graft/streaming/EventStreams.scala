@@ -849,15 +849,15 @@ object EventStreams {
       scriptAware: Boolean = false)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val v = curationVerdicts(batch, textCol, typicalityModel, minTypicalityPpm,
-        typicalityN, backoffUniModel, backoffAlphaPct,
-        qualityWeights, minQualityScore, scriptAware).persist()
-      try {
+      graft.util.Barrier.holding { held =>
+        val v = held.persist(curationVerdicts(batch, textCol, typicalityModel,
+          minTypicalityPpm, typicalityN, backoffUniModel, backoffAlphaPct,
+          qualityWeights, minQualityScore, scriptAware))
         accepted.save(v.filter(col("passes")).drop("passes", "reject_reason"),
           date(), graft.io.Warehouse.WriteAppend)
         rejected.save(v.filter(!col("passes")).drop("passes"),
           date(), graft.io.Warehouse.WriteAppend)
-      } finally { v.unpersist(); () }
+      }
     }
 
   /**

@@ -4,7 +4,8 @@ import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft._
 import graft.config.GraftConfig
@@ -303,5 +304,44 @@ class SparkRunnerSpec extends SparkJobSuiteBase {
     opts.delay.toSeconds shouldBe 10
     opts.max shouldBe 5
     RetryOptions.fromConfig(GraftConfig()).max shouldBe 3 // defaults
+  }
+
+  test("a Stage.holding job frees what it held by the end of every date, retried stages included") {
+    val sc = spark.sparkContext
+    var attempts = 0
+    var heldDuring = Vector.empty[Set[Int]]
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val job = new SparkJob {
+      override def shouldRunForDate(spark: SparkSession, date: DateInterval) = true
+      override def stages: Stage[SparkSession, _] = Stage.holding { held =>
+        for {
+          nums <- "nums".source(c => held.persist(c.spark.range(100).toDF()))
+          evens <- Stage.transform[Row, Row]("evens") { c =>
+            held.barrier(c.value.toDF().where(col("id") % 2 === 0))
+          }
+          _ <- Stage.transform[Row, Row]("maybe_fail") { c =>
+            attempts += 1
+            if (attempts == 1) sys.error("flaky (attempt 1)")
+            c.value
+          }
+          _ <- "count".sink[Row] { c =>
+            nums.count() shouldBe 100L
+            c.value.count() shouldBe 50L
+            heldDuring :+= sc.getPersistentRDDs.keySet.toSet -- before
+            ()
+          }
+        } yield evens
+      }
+    }
+    new SparkRunner[SparkJob] {
+      override def jobName = "holding_job"
+      override def schedule: Schedule = Schedule.iterate(Day(2026, 8, 12)).where(_ >= Day(2026, 8, 10))
+      override protected def createMessaging(config: GraftConfig) = new InMemoryMessagingSystem
+      override def configFile: Option[String] = None
+      override def createJob(config: GraftConfig): SparkJob = job
+    }.runWith(spark, GraftConfig("retry.max" -> "2", "retry.delay" -> "0ms"))
+    attempts shouldBe 4 // three dates, the first one's failing stage retried once
+    heldDuring.map(_.size) shouldBe Vector(2, 2, 2) // the cache and the checkpoint
+    (sc.getPersistentRDDs.keySet.toSet -- before) shouldBe empty
   }
 }

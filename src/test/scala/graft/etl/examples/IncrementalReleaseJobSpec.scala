@@ -210,24 +210,4 @@ class IncrementalReleaseJobSpec extends SparkJobSuiteBase {
     runJob(j, day2).isSuccess shouldBe true
     collected(WarehouseTable(root, "manifest").load(spark, day2)) shouldBe before
   }
-
-  test("curateDay rejects a benchGrams frame of the wrong shape") {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    def empty(s: org.apache.spark.sql.types.StructType) =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    def curate(grams: DataFrame) = IncrementalRelease.curateDay(sourceFor(day3), bench,
-      empty(IncrementalRelease.UrlStoreSchema), empty(IncrementalRelease.FpStoreSchema),
-      empty(IncrementalRelease.BandStoreSchema), benchGrams = Some(grams))
-    val grams = graft.ops.Decontaminate.benchGramRows(bench, "bench_id", "text", n = 5)
-    // the precomputed grams give the day's exact default-path curation
-    curate(grams).curated.count() shouldBe IncrementalRelease.curateDay(sourceFor(day3),
-      bench, empty(IncrementalRelease.UrlStoreSchema), empty(IncrementalRelease.FpStoreSchema),
-      empty(IncrementalRelease.BandStoreSchema)).curated.count()
-    // hashed grams would join through an implicit cast and match no
-    // document; the raw bench frame has no gram column at all
-    val hashed = grams.withColumn("__gram", xxhash64(col("__gram")))
-    Seq(hashed, bench).foreach { bad =>
-      intercept[IllegalArgumentException](curate(bad)).getMessage should include("benchGrams")
-    }
-  }
 }

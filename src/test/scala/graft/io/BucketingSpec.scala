@@ -25,7 +25,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("rangeLayout writes files covering disjoint key ranges (footer-prunable)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = tmpDir("graft-layout")
     val df = spark.range(20000).select(
       (($"id" * 7919) % 20000).as("k"), $"id".as("payload")) // scrambled input order
     Bucketing.rangeLayout(df, Seq("k"), numFiles = 8)
@@ -72,7 +72,7 @@ class BucketingSpec extends SparkTestBase {
     def overlapping(spans: Array[(Long, Long)], v: Long): Int =
       spans.count { case (lo, hi) => lo <= v && v <= hi }
 
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val zDir = tmpDir("graft-zorder")
     Bucketing.zOrderLayout(df, "x", "y", numFiles = 16)
       .write.mode("overwrite").parquet(zDir)
     val zSpans = fileSpans(zDir)
@@ -88,7 +88,7 @@ class BucketingSpec extends SparkTestBase {
     overlapping(zSpans.map(_._2), 70L) should be <= zSpans.length * 3 / 4
 
     // control: single-column range layout cannot prune the OTHER dimension
-    val rDir = java.nio.file.Files.createTempDirectory("graft-range1d").toString
+    val rDir = tmpDir("graft-range1d")
     Bucketing.rangeLayout(df, Seq("x"), numFiles = 16)
       .write.mode("overwrite").parquet(rDir)
     val rSpans = fileSpans(rDir)

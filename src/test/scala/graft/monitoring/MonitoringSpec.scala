@@ -6,7 +6,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.config.GraftConfig
 import graft.time.Day
 
-class MonitoringSpec extends AnyFunSuite with Matchers {
+class MonitoringSpec extends AnyFunSuite with Matchers with graft.testkit.TempDirs {
 
   private val ctx = new MessagingSystem.Context {
     val jobId = "job1"
@@ -19,7 +19,7 @@ class MonitoringSpec extends AnyFunSuite with Matchers {
     MessagingSystem.create(GraftConfig("messaging.transport" -> "memory")) shouldBe
       an[InMemoryMessagingSystem]
     MessagingSystem.create(GraftConfig.empty) shouldBe a[PrintMessagingSystem]
-    val dir = java.nio.file.Files.createTempDirectory("msg").toString
+    val dir = tmpDir("msg")
     MessagingSystem.create(GraftConfig(
       "messaging.transport" -> "file", "messaging.dir" -> dir)) shouldBe
       a[FileMessagingSystem]
@@ -28,7 +28,7 @@ class MonitoringSpec extends AnyFunSuite with Matchers {
   }
 
   test("file transport lands one JSON line per event, per topic, append-safe") {
-    val dir = java.nio.file.Files.createTempDirectory("msgfile")
+    val dir = java.nio.file.Paths.get(tmpDir("msgfile"))
     val m = new FileMessagingSystem(dir.toString)
     m.publishProcessStarting(ctx)
     m.publishStageComplete(ctx, "clean")

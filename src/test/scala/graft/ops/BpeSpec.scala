@@ -154,15 +154,15 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("learn with a reliable checkpointDir produces identical merges") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe-ckpt").toString
+    val dir = tmpDir("bpe-ckpt")
     withCheckpointDir(dir) {
       Bpe.learn(corpus.toDF("text"), "text", numMerges = 4)
     }.map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 4)
   }
 
   test("reliable-checkpoint rounds are cleaned up and the checkpoint dir left unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe-ckpt2")
-    withCheckpointDir(dir.toString) {
+    val dir = tmpDir("bpe-ckpt2")
+    withCheckpointDir(dir) {
       val set = spark.sparkContext.getCheckpointDir
       Bpe.learn(corpus.toDF("text"), "text", numMerges = 6, maxPerRound = 2)
         .map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 6)
@@ -173,7 +173,15 @@ class BpeSpec extends SparkTestBase {
     // file is left anywhere under the dir
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-    walk(dir.toFile) shouldBe empty
+    walk(new java.io.File(dir)) shouldBe empty
+  }
+
+  test("learn leaves no persisted RDD behind without a checkpoint dir") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Bpe.learn(corpus.toDF("text"), "text", numMerges = 6, maxPerRound = 2)
+      .map(m => (m.left, m.right, m.count)) shouldBe Ref.learn(corpus, 6)
+    (sc.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 
   test("learn stops early when no pair clears minCount") {

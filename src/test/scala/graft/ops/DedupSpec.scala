@@ -181,10 +181,10 @@ class DedupSpec extends SparkTestBase {
 
   test("checkpointDir reaches the cluster iteration from the one-call APIs") {
     // with the session's checkpoint dir set, the one-call APIs give the
-    // local default's answers, the reliable checkpoint files actually land
-    // under the dir (real clusters need them to survive executor loss),
-    // and the calls leave the session's dir as they found it
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    // local default's answers, leave no checkpoint files under the dir once
+    // their result reads none (the clustering's driver path returns a local
+    // relation), and leave the session's dir as they found it
+    val dir = new java.io.File(tmpDir("graft-ckpt"))
     def kept() = Dedup.removeNearDuplicates(docs, "id", "text", threshold = 0.8)
       .select("id").as[Long].collect().sorted
     def groups() = Dedup.leakageSafeSplit(docs, "id", "text",
@@ -201,7 +201,7 @@ class DedupSpec extends SparkTestBase {
             if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
           walk(dir)
         }
-        checkpointFiles should not be empty
+        checkpointFiles shouldBe empty
         val split = groups()
         split shouldBe localGroups
         split(5L) shouldBe split(1L)

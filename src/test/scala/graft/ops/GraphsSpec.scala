@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.monitoring.JobMetrics
-import graft.testkit.SparkTestBase
+import graft.testkit.{HeldStorage, SparkTestBase}
 
-class GraphsSpec extends SparkTestBase {
+class GraphsSpec extends SparkTestBase with HeldStorage {
   import spark.implicits._
 
   private val Scale = 1000000000000L
@@ -431,5 +431,38 @@ class GraphsSpec extends SparkTestBase {
     out shouldBe Set(
       (2L, 4L, 1L, 2L, 1L, 500000L, 2L),
       (3L, 4L, 1L, 2L, 1L, 500000L, 2L))
+  }
+
+  // ---- what the iterative operators leave stored -----------------------
+
+  /** Self-loops, duplicate edges, ids isolated by a self-loop or a null
+    * partner, a dense cluster with a tail, and a 40-hop chain. */
+  private def adversarial = ((0 until 40).map(i => (s"c$i", s"c${i + 1}")) ++ Seq(
+    ("h0", "h0"), ("h0", "h1"), ("h0", "h1"), ("h1", "h2"), ("h2", "h0"),
+    ("h3", "h0"), ("h3", "h1"), ("h1", "h3"), ("h4", "h3"),
+    ("lone", "lone"), ("x", null), (null, "y"))).toDF("src", "dst")
+
+  // (name, the rdd-* dirs its result reads under a checkpoint dir, call)
+  private val iterative: Seq[(String, Int, () => DataFrame)] = Seq(
+    ("pageRank(5)", 1, () => Graphs.pageRank(adversarial, iterations = 5)),
+    ("pageRank(20)", 1, () => Graphs.pageRank(adversarial, iterations = 20)),
+    // the node list plus the last round's hub and authority sums
+    ("hits", 3, () => Graphs.hits(adversarial)),
+    ("labelPropagation", 1, () => Graphs.labelPropagation(adversarial)),
+    // the edge view plus the last alive set
+    ("kCore", 2, () => Graphs.kCore(adversarial, k = 2)),
+    ("bfsDistances", 1, () => Graphs.bfsDistances(adversarial, Seq("c0", "h4", "lone"))),
+    // the driver path answers with a local relation, reading no checkpoint
+    ("connectedComponents", 0, () => Graphs.connectedComponents(adversarial)))
+
+  iterative.foreach { case (name, reads, call) =>
+    test(s"$name keeps only the checkpoints its result reads, with or without a checkpoint dir") {
+      leavesOnlyWhatItReads(call) shouldBe reads
+    }
+  }
+
+  test("connectedComponents [distributed loop] keeps only the last round's labels") {
+    onLoop(leavesOnlyWhatItReads(() => Graphs.connectedComponents(adversarial))) shouldBe 1
+    bothPathsAgree(adversarial).size shouldBe 46 // c0..c40 and h0..h4
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.SparkTestAccess.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 import graft.testkit.SourceScan.{codeLines, sourceRoot}
-import graft.testkit.SparkTestBase
+import graft.testkit.{HeldStorage, SparkTestBase}
 
-class SketchesSpec extends SparkTestBase {
+class SketchesSpec extends SparkTestBase with HeldStorage {
   import spark.implicits._
 
   // 30 days x interleaved users: user u is active on day u % 30 and (u*7) % 30
@@ -423,7 +423,7 @@ class SketchesSpec extends SparkTestBase {
     // reliable: same sums, checkpoint files actually land under the dir
     // (executor loss on a real cluster then recovers from storage), and
     // the call reads the session's dir without changing it
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-ckpt").toFile
+    val dir = new java.io.File(tmpDir("graft-sketch-ckpt"))
     try {
       val df = (for (g <- 0 until 3; v <- 0 until 40)
         yield ("g" + g, v.toLong, (v * 7 % 13).toLong)).toDF("g", "v", "a").repartition(5)
@@ -448,6 +448,15 @@ class SketchesSpec extends SparkTestBase {
       }
       rm(dir)
     }
+  }
+
+  test("rangedCumSums keeps only its ranged copy, with or without a checkpoint dir") {
+    // the input copy only feeds the range exchange's sample and shuffle,
+    // so it is freed once the ranged copy is stored
+    val df = (for (g <- 0 until 3; v <- 0 until 40)
+      yield ("g" + g, v.toLong, (v * 7 % 13).toLong)).toDF("g", "v", "a").repartition(5)
+    leavesOnlyWhatItReads(() => Sketches.rangedCumSums(df, Seq("g"), Seq($"v"),
+      cums = Seq("a" -> "cuma"), totals = Seq("a" -> "ta"))) shouldBe 1
   }
 
   test("rangedCumSums rejects non-scalar group columns") {

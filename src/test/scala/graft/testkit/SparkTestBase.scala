@@ -2,6 +2,7 @@ package graft.testkit
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -29,12 +30,25 @@ object SparkTestBase {
   }
 }
 
-/** Base for all graft specs: shared local SparkSession + matchers. */
-trait SparkTestBase extends AnyFunSuite with Matchers {
-  lazy val spark: SparkSession = SparkTestBase.sharedSpark
+/** Temp directories a suite makes, deleted with everything in them after it. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp directory, deleted after the suite. */
+  def tmpDir(prefix: String): String = tmpDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs += dir
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.synchronized(tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    finally super.afterAll()
+}
+
+/** Base for all graft specs: shared local SparkSession + matchers. */
+trait SparkTestBase extends AnyFunSuite with Matchers with TempDirs {
+  lazy val spark: SparkSession = SparkTestBase.sharedSpark
 
   /** Runs `body` with a listener on the bus's shared queue that sleeps
     * `perTaskEnd` on every task end, so the listeners after it (a

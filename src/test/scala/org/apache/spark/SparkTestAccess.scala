@@ -31,4 +31,9 @@ object SparkTestAccess {
 
   /** Listeners currently registered on the context's bus. */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+
+  /** Blocks of RDD `rddId` the block managers still store. */
+  def rddBlockCount(sc: SparkContext, rddId: Int): Int =
+    sc.env.blockManager.master
+      .getMatchingBlockIds(_.asRDDId.exists(_.rddId == rddId), askStorageEndpoints = true).size
 }
